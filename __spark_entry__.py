@@ -12,7 +12,7 @@ near-dup chain, SimHash, Bloom/CMS probes and the double-double exact sum
 matches hold under arbitrary Spark configs (partitioning / batch sizes /
 AQE), not just the test session's.
 
-Every queries() entry carries a full DuckDB oracle (95/95). Entries
+Every queries() entry carries a full DuckDB oracle (157/157). Entries
 whose raw state is not SQL-expressible are gated through engine-
 independent surfaces instead: nchars_quantiles_kll /
 value_quantiles_tdigest emit exact quantiles + rank-error-bound booleans

@@ -95,7 +95,6 @@ def hash_stress_job(spark, n_keys: int, n_parts: int):
     real scan pays (measured: local[1] == local[4] wall time).
     """
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     from grenier_spark.operators.sketch_build import (SketchSpec,
@@ -107,7 +106,6 @@ def hash_stress_job(spark, n_keys: int, n_parts: int):
              SketchSpec.of("c", "cms", "k", depth=4, width=8192, seed=7),
              SketchSpec.of("b", "bloom", "k", m=1 << 20, k=5, seed=7)]
     out_schema = StructType(list(_TAIL_FIELDS))
-    arrow_schema = to_arrow_schema(out_schema)
     span = -(-n_keys // n_parts)
 
     def gen(batches):
@@ -115,7 +113,7 @@ def hash_stress_job(spark, n_keys: int, n_parts: int):
 
         from grenier_spark.core.bits import splitmix64
 
-        acc = _Accumulator(specs, [], ["k"], out_schema, arrow_schema)
+        acc = _Accumulator(specs, [], out_schema)
         for b in batches:
             for pid in b.column("id").to_pylist():
                 start, end = pid * span, min(n_keys, (pid + 1) * span)

@@ -54,7 +54,10 @@ class Bloom:
         i = np.arange(self.k, dtype=U64)[:, None]
         return ((h1[None, :] + i * h2[None, :]) % U64(self.m)).astype(np.int64)
 
-    def update_batch(self, keys: np.ndarray) -> None:
+    def update_batch(self, keys: np.ndarray,
+                     weights: "np.ndarray | None" = None) -> None:
+        """Set the bits of integer keys. ``weights`` is ignored: the bit
+        set depends only on the key set."""
         keys = np.asarray(keys).astype(U64, copy=False)
         h1 = wang64(keys ^ U64(splitmix64_scalar(self.seed + 1)))
         h2 = wang64(keys ^ U64(splitmix64_scalar(self.seed + 2))) | U64(1)

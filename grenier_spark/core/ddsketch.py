@@ -89,10 +89,14 @@ class DDSketch:
 
     # -- update ----------------------------------------------------------
 
-    def update_batch(self, values: np.ndarray) -> None:
+    def update_batch(self, values: np.ndarray,
+                     weights: "np.ndarray | None" = None) -> None:
         """Fold a batch of finite non-negative float64 values. Vectorized
         (one log pass + one unique pass per batch); raises on negative or
-        non-finite input rather than silently mis-bucketing."""
+        non-finite input rather than silently mis-bucketing. With
+        ``weights``: :meth:`update_batch_weighted`."""
+        if weights is not None:
+            return self.update_batch_weighted(values, weights)
         values = np.asarray(values, dtype=np.float64)
         if not len(values):
             return

@@ -32,7 +32,7 @@ import os
 
 import numpy as np
 
-from .bits import U64, ctz64
+from .bits import U64, ctz64, wang64
 
 def _load_data() -> dict:
     """Load the HLL++ constant tables; zip-safe for spark-submit --py-files
@@ -370,3 +370,38 @@ def card_hllpp(t: np.ndarray) -> float:
 
 
 card = card_hllpp
+
+
+class HLL:
+    """Object face of a register array, for code that treats every sketch
+    kind alike (the kind table in operators/sketch_build.py). ``t`` is the
+    grenier ``[p, reg_1..reg_m]`` array the module functions take."""
+
+    __slots__ = ("t",)
+
+    def __init__(self, t: np.ndarray):
+        self.t = t
+
+    def update_batch(self, keys: np.ndarray,
+                     weights: "np.ndarray | None" = None) -> None:
+        """Fold integer keys through the canonical token hash (wang64,
+        reference hll/test.ml:7). ``weights`` is ignored: a register max
+        depends only on the key set."""
+        add_batch(self.t, wang64(np.asarray(keys).astype(U64, copy=False)))
+
+    def merge(self, other: "HLL") -> None:
+        merge(self.t, other.t)
+
+    def to_bytes(self) -> bytes:
+        """The public dense wire format."""
+        return to_bytes(self.t)
+
+    def to_partial_bytes(self) -> bytes:
+        """Between build stages only: the smaller of the dense and the
+        sparse encoding (:func:`to_bytes_auto`)."""
+        return to_bytes_auto(self.t)
+
+    @classmethod
+    def from_bytes(cls, s: bytes) -> "HLL":
+        """Either encoding (:func:`from_bytes_any`)."""
+        return cls(from_bytes_any(s))

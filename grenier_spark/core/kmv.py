@@ -53,12 +53,13 @@ class KMV:
         self.values = (np.empty(0, dtype=U64) if values is None
                        else values)
 
-    def update_batch(self, keys: np.ndarray) -> None:
+    def update_batch(self, keys: np.ndarray,
+                     weights: "np.ndarray | None" = None) -> None:
         """Fold a batch of integer keys (hashed internally with wang64 —
         the suite's canonical token hash). Duplicate-safe: the kept set
         is the k smallest DISTINCT hashes, so the batch is deduplicated
         before truncation (a plain k-smallest pass would let heavy
-        duplicates evict genuine members)."""
+        duplicates evict genuine members); ``weights`` is ignored."""
         keys = np.asarray(keys)
         if not len(keys):
             return

@@ -55,10 +55,12 @@ class MinHashSig:
                        else values)
         self._salts = splitmix64(np.arange(1, k + 1, dtype=U64) + U64(seed))
 
-    def update_batch(self, keys: np.ndarray) -> None:
+    def update_batch(self, keys: np.ndarray,
+                     weights: "np.ndarray | None" = None) -> None:
         """Fold a batch of integer keys. Duplicate-insensitive by
         construction (min over a multiset == min over its support), so the
-        histogram fast path feeding distinct keys is byte-exact."""
+        histogram fast path feeding distinct keys is byte-exact and
+        ``weights`` is ignored."""
         keys = np.asarray(keys)
         if not len(keys):
             return

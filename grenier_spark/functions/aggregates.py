@@ -16,9 +16,9 @@ scalar estimator functions (``hll_card``, ``bloom_cardinality``,
 with :func:`grenier_spark.functions.hll_merge_col` for sketch algebra.
 
 Token hashing is the canonical chain (``wang64`` of the int64-widened
-token, reference hll/test.ml:7) via the SAME ``_update`` kernel the
-distributed build uses, so for the order-insensitive kinds (hll / cms /
-bloom) the emitted bytes are BIT-IDENTICAL to
+token, reference hll/test.ml:7) via the SAME kind-table update the
+distributed build uses, so for the exact-merge kinds (hll / cms /
+bloom / ...) the emitted bytes are BIT-IDENTICAL to
 ``operators.sketch_build.build_sketches`` over the same rows
 (tests/test_spark_pipeline.py::test_grouped_agg_udaf_byte_parity).
 
@@ -39,28 +39,28 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..core import hll
-from ..operators.sketch_build import SketchSpec, _new_state, _update
-
-_ARRAY_KINDS = ("hll", "cms", "csk", "bloom", "kmv", "mh", "mg")  # token arrays
-_VALUE_KINDS = ("kll", "tdigest", "dd", "req", "ddsum", "mom")  # doubles
-_MATRIX_KINDS = ("fd",)  # array<float*> vector rows (flattened, fixed dim)
+from ..operators.sketch_build import get_kind
 
 
-def _group_values(xs: pd.Series, array_input: bool) -> np.ndarray:
+def _group_values(xs: pd.Series, dtype) -> np.ndarray:
     """Flatten one group's column into the kernel's value vector.
 
-    Both scalar and array<int*> columns are accepted for every kind
+    Both scalar and array<int*> columns are accepted for every column kind
     (build_sketches flattens token arrays into the quantile kernels too):
-    null rows drop, arrays concatenate. Hashed kinds widen to int64 (same
+    null rows drop, arrays concatenate. Key kinds widen to int64 (same
     as the Arrow build path's upcast); value and matrix kinds feed float64.
+    Weighted-rows kinds (``dtype`` None) take a struct column, which
+    arrives as one dict per row: a row with a NULL or NaN field drops.
     """
-    dtype = np.int64 if array_input else np.float64
+    if dtype is None:
+        rows = pd.DataFrame([r for r in xs if r is not None]).dropna()
+        return np.rec.fromarrays([rows[c].to_numpy() for c in rows.columns]
+                                 ) if len(rows) else np.empty(0)
     vals = [v for v in xs if v is not None]
     if vals and isinstance(vals[0], (list, tuple, np.ndarray)):
         return np.concatenate([np.asarray(v, dtype=dtype) for v in vals])
     kept = xs.dropna()
-    if array_input and kept.dtype.kind == "f":
+    if dtype is np.int64 and kept.dtype.kind == "f":
         # a nullable BIGINT column reaches pandas as float64: above 2^53
         # the int64->double round-trip is lossy and the hashed keys would
         # silently diverge from build_sketches. Refuse instead of corrupt.
@@ -80,22 +80,18 @@ def _make_agg_udf(kind: str, params: dict):
     kernel sequence must reach the DataFrame and SQL paths together).
     Created lazily per call (module-level pandas_udf creation breaks under
     spark-submit import ordering — see BENCH/BASELINE.md)."""
-    if kind not in _ARRAY_KINDS + _VALUE_KINDS + _MATRIX_KINDS:
-        raise ValueError(f"unknown sketch kind {kind!r}")
-    spec = SketchSpec.of("s", kind, "v", **params)
-    array_input = kind in _ARRAY_KINDS
+    get_kind(kind)
 
-    @pandas_udf("binary", F.PandasUDFType.GROUPED_AGG)
+    @pandas_udf("binary")
     def _agg(xs: pd.Series) -> bytes:
-        state = _new_state(spec)
-        vals = _group_values(xs, array_input)
-        # one _update call per group: identical dictionarize/chunk kernel
-        # to the distributed partial builder => byte parity for hll/cms/
-        # bloom (order-insensitive); kll/tdigest/ddsum are deterministic
-        # for a given value order but that order is the group's row order.
-        _update(state, spec, vals)
-        return (hll.to_bytes(state) if kind == "hll"
-                else state.to_bytes())
+        k = get_kind(kind)
+        state = k.new(params)
+        # one update per group: the same histogram/chunk kernel as the
+        # distributed partial builder => byte parity for the exact-merge
+        # kinds; kll/tdigest/ddsum are deterministic for a given value
+        # order, but that order is the group's row order.
+        k.update(state, _group_values(xs, k.input.dtype))
+        return state.to_bytes()
 
     return _agg
 
@@ -103,9 +99,9 @@ def _make_agg_udf(kind: str, params: dict):
 def sketch_agg_col(kind: str, col: "Column | str", **params) -> Column:
     """A grouped-aggregate Column building one ``kind`` sketch per group.
 
-    ``params`` mirror :class:`operators.sketch_build.SketchSpec` (``p`` for
-    hll, ``depth``/``width``/``seed`` for cms, ``m``/``k``/``seed`` for
-    bloom, ``k``/``seed`` for kll, ``delta`` for tdigest).
+    ``kind`` and ``params`` are those of
+    :class:`operators.sketch_build.SketchSpec` (the kind table
+    ``operators.sketch_build.KINDS``); an unknown kind raises ValueError.
     """
     c = F.col(col) if isinstance(col, str) else col
     return _make_agg_udf(kind, params)(c)

@@ -25,12 +25,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sketch_build import SketchSpec, build_sketches, merge_partials
-
-# order-INsensitive kinds whose merges are byte-exact at any fan-in/order
-# (kll/tdigest/ddsum/mom/fd compact order-dependently, mg decrements
-# depend on the grouping — cells would not equal direct builds)
-_MERGEABLE = {"hll", "cms", "csk", "bloom", "kmv", "dd"}
+from .sketch_build import (KINDS, SketchSpec, build_sketches, get_kind,
+                           merge_partials)
 
 
 def sketch_cube(df: DataFrame, dims: "list[str]", specs: "list[SketchSpec]",
@@ -48,12 +44,15 @@ def sketch_cube(df: DataFrame, dims: "list[str]", specs: "list[SketchSpec]",
     """
     if not dims:
         raise ValueError("sketch_cube: need at least one dimension")
-    bad = [s.kind for s in specs if s.kind not in _MERGEABLE]
+    # only exact-merge kinds: the others compact or decrement
+    # order-dependently, so cells would not equal direct builds
+    bad = [s.kind for s in specs if not get_kind(s.kind).exact_merge]
     if bad:
+        exact = sorted(k for k, v in KINDS.items() if v.exact_merge)
         raise ValueError(
             f"sketch_cube: order-sensitive kinds {bad} cannot cube "
             f"(their merges are not byte-exact at arbitrary grouping); "
-            f"supported: {sorted(_MERGEABLE)}")
+            f"supported: {exact}")
     kind_of = {s.name: s.kind for s in specs}
     # output dims are uniformly string so 'ALL' labels union with leaf
     # values for dimension columns of ANY input type

@@ -33,10 +33,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, IntegerType, LongType,
                                StructField, StructType)
 
+from .sketch_build import KINDS, get_kind
+
 __all__ = ["rolling_sketch_union", "rolling_sketch_merge_ordered"]
 
-_ORDER_INSENSITIVE = {"hll", "cms", "csk", "bloom", "kmv", "mh", "dd"}
-_ORDER_SENSITIVE = {"kll", "tdigest", "req", "mom", "ddsum", "mg", "fd"}
+
+def _kinds(exact: bool) -> "list[str]":
+    return sorted(k for k, v in KINDS.items() if v.exact_merge == exact)
 
 
 def rolling_sketch_union(sketches: DataFrame, period_col: str, window: int,
@@ -52,17 +55,18 @@ def rolling_sketch_union(sketches: DataFrame, period_col: str, window: int,
     bucket): the window is by VALUE — ``period - window + 1 .. period`` —
     so gaps in the data narrow the union rather than stretching it.
 
-    ``kind`` must be an order-insensitive sketch
-    (hll/cms/csk/bloom/kmv/mh/dd): only for those is the trailing union
-    byte-identical to a scratch build over the window's raw rows.
+    ``kind`` must be an order-insensitive sketch (the kind table's
+    ``exact_merge`` flag: hll/cms/bloom/kmv/mh/dd, ...): only for those is
+    the trailing union byte-identical to a scratch build over the
+    window's raw rows.
     Order-sensitive kinds (kll, tdigest) still merge associatively but
     not byte-stably — reject them here rather than hand back a weaker
     guarantee under the same name.
     """
-    if kind not in _ORDER_INSENSITIVE:
+    if not get_kind(kind).exact_merge:
         raise ValueError(
             f"rolling_sketch_union supports order-insensitive kinds "
-            f"{sorted(_ORDER_INSENSITIVE)}, got {kind!r} — a kll/tdigest "
+            f"{_kinds(True)}, got {kind!r} — a kll/tdigest "
             f"trailing union is not byte-stable; use "
             f"rolling_sketch_merge_ordered for those")
     return _rolling_merge(sketches, period_col, window, kind, group_cols,
@@ -89,10 +93,10 @@ def rolling_sketch_merge_ordered(sketches: DataFrame, period_col: str,
     KB-sized per-period sketch row explodes onto <= ``window`` anchor
     periods, one hash aggregate merges per anchor; raw data never moves.
     """
-    if kind not in _ORDER_SENSITIVE:
+    if get_kind(kind).exact_merge:
         raise ValueError(
             f"rolling_sketch_merge_ordered is for order-sensitive kinds "
-            f"{sorted(_ORDER_SENSITIVE)}, got {kind!r} — use "
+            f"{_kinds(False)}, got {kind!r} — use "
             f"rolling_sketch_union for byte-stable unions")
     return _rolling_merge(sketches, period_col, window, kind, group_cols,
                           sketch_col, sort_by_period=True)
@@ -103,7 +107,6 @@ def _rolling_merge(sketches: DataFrame, period_col: str, window: int,
                    sort_by_period: bool) -> DataFrame:
     if window < 1:
         raise ValueError("rolling merge needs window >= 1")
-    from .sketch_build import _merge_blobs
 
     g = list(group_cols)
     base = sketches.select(
@@ -131,7 +134,7 @@ def _rolling_merge(sketches: DataFrame, period_col: str, window: int,
     def merge_group(pdf):
         if sort_by_period:
             pdf = pdf.sort_values("_src_p", kind="stable")
-        blob = _merge_blobs(kind, [bytes(b) for b in pdf["_sk"]])
+        blob = get_kind(kind).merge([bytes(b) for b in pdf["_sk"]])
         head = pdf.iloc[:1].copy()
         head["sketch"] = [blob]
         head["n_periods"] = np.int32(pdf["_src_p"].nunique())

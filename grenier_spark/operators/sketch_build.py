@@ -26,9 +26,9 @@ value column, then O(1) slices per group — no per-group rescans.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -41,7 +41,7 @@ from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from ..core import hll
-from ..core.bits import U64, wang64
+from ..core.bits import U64
 from ..core.bloom import Bloom
 from ..core.cuckoo import Cuckoo
 from ..core.countmin import CountMin
@@ -62,32 +62,25 @@ from ..core.tdigest import TDigest
 class SketchSpec:
     """One sketch to build.
 
-    kind: 'hll' | 'cms' | 'csk' | 'bloom' | 'ckf' | 'kmv' | 'mh' | 'mg'
-          | 'kll' | 'tdigest' | 'dd' | 'req' | 'ddsum' | 'mom' | 'fd'
-    column: source column — array<int*> token sequences (hll/cms/bloom/kmv
-            hash each token; mg counts the raw integer keys; kll/tdigest
-            sketch the token values), a numeric scalar column, or for 'fd'
-            an array<float*> vector column (each row one input vector;
-            fixed dim, non-null, NaN-free by contract).
-    params: kind-specific, via ``SketchSpec.of(name, kind, column, p=14)``:
-            hll {'p'}, cms {'depth','width','seed'}, bloom {'m','k','seed'},
-            csk {'depth','width','seed'}, kmv {'k'}, mh {'k','seed'},
-            mg {'k'},
-            kll {'k','seed'}, tdigest {'delta'},
-            req {'k','seed'} (REQ PODS'21 — relative TAIL rank error,
-            order-sensitive like kll), dd {'alpha'} (DDSketch —
-            bucket-histogram quantiles; order-INsensitive, so it merges
-            byte-identically like hll/cms, unlike kll/tdigest),
-            fd {'ell','dim'},
-            ckf {'n_buckets','fp_bits','seed'} (deletable membership —
-            MULTISET semantics, size n_buckets for TOTAL insertions via
-            cuckoo.params_for; build raises loudly past capacity).
+    kind: a key of :data:`KINDS`, the kind table (its rows list every kind
+          with its constructor defaults, input class and merge contract).
+    column: source column — array<int*> token sequences or a numeric
+            scalar column for most kinds, an array<float*> vector column
+            for 'fd' (each row one input vector; fixed dim, non-null,
+            NaN-free by contract), a struct of the row fields for the
+            weighted-rows kinds 'dw' and 'ps'.
+    params: kind-specific constructor arguments, via
+            ``SketchSpec.of(name, kind, column, p=14)``; omitted ones take
+            the defaults in the kind's :data:`KINDS` row.
     """
 
     name: str
     kind: str
     column: str
     params: "frozenset[tuple]" = field(default_factory=frozenset)
+
+    def __post_init__(self):
+        get_kind(self.kind)
 
     @staticmethod
     def of(name: str, kind: str, column: str, **params) -> "SketchSpec":
@@ -98,69 +91,11 @@ class SketchSpec:
         return dict(self.params)
 
 
-def _new_state(spec: SketchSpec):
-    p = spec.p
-    if spec.kind == "hll":
-        if "error" in p:  # reference surface: make ~error (hll.ml:26-32, Q1)
-            return hll.make(p["error"])
-        return hll.make_p(p.get("p", 14))
-    if spec.kind == "cms":
-        return CountMin(p.get("depth", 5), p.get("width", 8192), p.get("seed", 7))
-    if spec.kind == "csk":
-        return CountSketch(p.get("depth", 5), p.get("width", 8192),
-                           p.get("seed", 7))
-    if spec.kind == "bloom":
-        return Bloom(p.get("m", 1 << 20), p.get("k", 7), p.get("seed", 7))
-    if spec.kind == "ckf":
-        return Cuckoo(p.get("n_buckets", 1 << 16), p.get("fp_bits", 16),
-                      p.get("seed", 7))
-    if spec.kind == "kmv":
-        return KMV(p.get("k", 256))
-    if spec.kind == "mh":
-        return MinHashSig(p.get("k", 64), p.get("seed", 7))
-    if spec.kind == "mg":
-        return MisraGries(p.get("k", 256))
-    if spec.kind == "kll":
-        return KLL(p.get("k", 200), seed=p.get("seed", 42))
-    if spec.kind == "tdigest":
-        return TDigest(p.get("delta", 200))
-    if spec.kind == "dd":
-        return DDSketch(p.get("alpha", 0.01))
-    if spec.kind == "req":
-        return REQ(p.get("k", 32), seed=p.get("seed", 42))
-    if spec.kind == "ddsum":
-        return DDSum()
-    if spec.kind == "mom":
-        return Moments()
-    if spec.kind == "fd":
-        return FrequentDirections(p.get("ell", 16), p["dim"])
-    raise ValueError(f"unknown sketch kind {spec.kind!r}")
-
-
 _CHUNK = 1 << 16   # cache-block hash kernels: wang64/scatter temporaries stay
 # L2-resident (measured 3x single-core vs full-width passes)
 _VOCAB_LIMIT = 1 << 22  # dictionary-update fast path bound (16 MB bincount)
-
-
-def _dictionarize(values: np.ndarray):
-    """(distinct_keys, counts) when values are dense small non-negative ints.
-
-    Token ids from BPE-style vocabularies are ints in [0, ~50k-200k); a batch
-    of millions of tokens touches each id many times. One int32 bincount pass
-    then updating sketches ONCE PER DISTINCT id is byte-exact for HLL
-    (max over same key set), count-min (weighted add), and Bloom (same bits),
-    and cuts hash traffic by the batch/vocab ratio (~50x here) — this is what
-    keeps the build compute-light at 100TB token scale. Returns None for
-    high-cardinality/negative/float keys (fall back to direct hashing).
-    """
-    if len(values) < 8192 or not np.issubdtype(values.dtype, np.integer):
-        return None
-    vmax = int(values.max())
-    if vmax >= _VOCAB_LIMIT or int(values.min()) < 0:
-        return None
-    counts = np.bincount(values, minlength=0)
-    nz = np.flatnonzero(counts)
-    return nz.astype(np.int64).view(U64), counts[nz].astype(np.int64)
+_HIST_MIN = 8192  # fewer values: a histogram costs more than it saves
+_NATIVE_BATCH_ROWS = 1 << 16  # rows per batch the native reader feeds
 
 
 def _grouped_counts(batch: pa.RecordBatch, col: str, codes: np.ndarray,
@@ -193,7 +128,7 @@ def _grouped_counts(batch: pa.RecordBatch, col: str, codes: np.ndarray,
     # applicability checks BEFORE the token-scale repeat: a column that
     # declines every batch (md5-range ids) must not pay a wasted 8B/token
     # write first
-    if len(values) < 8192 or not np.issubdtype(values.dtype, np.integer):
+    if len(values) < _HIST_MIN or not np.issubdtype(values.dtype, np.integer):
         return None
     vmax = int(values.max())
     if int(values.min()) < 0 or (vmax + 1) * n_groups >= _VOCAB_LIMIT:
@@ -221,116 +156,6 @@ def _grouped_counts(batch: pa.RecordBatch, col: str, codes: np.ndarray,
         out.append((nz.astype(np.int64).view(U64), gcounts,
                     int(gcounts.sum())))
     return out
-
-
-def _update_from_counts(state, spec: SketchSpec, keys: np.ndarray,
-                        counts: np.ndarray) -> None:
-    """Apply a (distinct keys, multiplicities) histogram — identical state
-    transitions to feeding the raw stream (max-merge HLL, weighted CMS add,
-    idempotent Bloom bits)."""
-    if not len(keys):
-        return
-    if spec.kind == "hll":
-        hll.add_batch(state, wang64(keys))
-    elif spec.kind in ("cms", "csk"):
-        state.update_batch(keys, weights=counts)
-    elif spec.kind == "mg":
-        # dense small non-negative ints: the u64 view equals the original
-        # int64 values, so counting the view verbatim is exact
-        state.update_batch(keys.view(np.int64), weights=counts)
-    elif spec.kind == "ckf":
-        # cuckoo is a MULTISET (each occurrence occupies a slot): expand
-        # the histogram back so the fast path transitions identically to
-        # the raw stream
-        state.update_batch(np.repeat(keys, counts.astype(np.int64)))
-    else:
-        state.update_batch(keys)
-
-
-def _update(state, spec: SketchSpec, values: np.ndarray) -> None:
-    if not len(values):
-        return
-    if spec.kind == "fd":
-        # the vector column arrives element-flattened; the fixed dim from
-        # the spec recovers the (rows, dim) shape. A non-multiple length
-        # means ragged vectors or dropped null/NaN elements — corrupt
-        # input for a matrix sketch, so fail loudly instead of shearing
-        # every subsequent row by one element.
-        dim = state.dim
-        if len(values) % dim:
-            raise ValueError(
-                f"fd sketch: {len(values)} elements is not a multiple of "
-                f"dim={dim} (ragged, null or NaN vector elements?)")
-        state.update_batch(values.astype(np.float64,
-                                         copy=False).reshape(-1, dim))
-        return
-    if spec.kind == "mg":
-        if values.dtype.kind == "f":
-            raise ValueError("mg sketch over a float column: counting "
-                             "kinds need integer keys")
-        # one exact-histogram absorb per batch — equivalent state
-        # transition to the _grouped_counts fast path (same histogram)
-        state.update_batch(values.astype(np.int64, copy=False))
-        return
-    if spec.kind == "ckf":
-        if values.dtype.kind == "f":
-            raise ValueError("ckf sketch over a float column: hashed "
-                             "kinds need integer keys")
-        # no dictionarize: duplicates occupy slots by the multiset contract
-        state.update_batch(values.astype(np.int64, copy=False).view(U64))
-        return
-    if spec.kind in ("hll", "cms", "csk", "bloom", "kmv", "mh"):
-        dic = _dictionarize(values)
-        if dic is not None:
-            keys, counts = dic
-            if spec.kind == "hll":
-                hll.add_batch(state, wang64(keys))
-            elif spec.kind in ("cms", "csk"):
-                state.update_batch(keys, weights=counts)
-            else:
-                state.update_batch(keys)
-            return
-        if values.dtype.kind == "f":
-            # astype would TRUNCATE floats (1.1 and 1.9 both -> key 1),
-            # silently collapsing distinct values; hashed kinds take
-            # integer keys by contract — hash float bits explicitly if
-            # that is what you mean
-            raise ValueError(
-                f"{spec.kind} sketch over a float column: hashed kinds "
-                f"need integer keys (cast, or hash the bit pattern)")
-        keys = values.astype(np.int64, copy=False).view(U64)
-        for s in range(0, len(keys), _CHUNK):
-            chunk = keys[s:s + _CHUNK]
-            if spec.kind == "hll":
-                # canonical token hash: wang64 (mirrors reference hll/test.ml:7)
-                hll.add_batch(state, wang64(chunk))
-            else:  # cms/bloom hash internally (salted wang64 rows)
-                state.update_batch(chunk)
-    else:  # quantile sketches take raw values
-        state.update_batch(values.astype(np.float64))
-
-
-def _to_bytes(state, kind: str) -> bytes:
-    # level-1 HLL partials use the auto (sparse-when-smaller) encoding to
-    # keep shuffle volume proportional to actual register fill; every merge
-    # re-emits the dense public wire format (hll.to_bytes_auto docstring)
-    return hll.to_bytes_auto(state) if kind == "hll" else state.to_bytes()
-
-
-def _merge_blobs(kind: str, blobs: "list[bytes]") -> bytes:
-    if kind == "hll":
-        return hll.to_bytes(
-            hll.merge_many([hll.from_bytes_any(b) for b in blobs]))
-    cls = {"cms": CountMin, "csk": CountSketch, "bloom": Bloom,
-           "ckf": Cuckoo, "kmv": KMV, "mh": MinHashSig, "mg": MisraGries,
-           "kll": KLL,
-           "tdigest": TDigest, "dd": DDSketch, "req": REQ,
-           "ddsum": DDSum, "mom": Moments,
-           "fd": FrequentDirections, "ps": PrioritySample}[kind]
-    acc = cls.from_bytes(blobs[0])
-    for b in blobs[1:]:
-        acc.merge(cls.from_bytes(b))
-    return acc.to_bytes()
 
 
 _TAIL_FIELDS = [
@@ -386,6 +211,206 @@ def _grouped_column(batch: pa.RecordBatch, col: str, codes: np.ndarray,
     return sorted_vals, bounds
 
 
+def _grouped_rows(batch: pa.RecordBatch, col: str, codes: np.ndarray,
+                  n_groups: int):
+    """Group-sorted rows of a struct column (the weighted-rows input) as
+    one numpy record array + group boundaries, like
+    :func:`_grouped_column`. A row drops when any field is NULL — one
+    JOINT filter at the Arrow level, so int64 fields never pass through a
+    nullable-float conversion (|v| > 2^53 would mangle) — or when a float
+    field is NaN (the _grouped_column contract)."""
+    fields = batch.column(col).flatten()
+    ok = np.ones(batch.num_rows, dtype=bool)
+    for f in fields:
+        if f.null_count:
+            ok &= np.asarray(f.is_valid())
+    mask = pa.array(ok)
+    cols = [f.filter(mask).to_numpy(zero_copy_only=False) for f in fields]
+    keep = np.ones(int(ok.sum()), dtype=bool)
+    for c in cols:
+        if c.dtype.kind == "f":
+            keep &= ~np.isnan(c)
+    rows = np.rec.fromarrays([c[keep] for c in cols])
+    vcodes = codes[ok][keep]
+    if n_groups == 1:
+        return rows, np.array([0, len(rows)], dtype=np.int64)
+    order = np.argsort(vcodes, kind="stable")
+    bounds = np.searchsorted(vcodes[order], np.arange(n_groups + 1))
+    return rows[order], bounds
+
+
+# -- the kind table ----------------------------------------------------------
+
+def _int_keys(state, values: np.ndarray) -> np.ndarray:
+    if values.dtype.kind == "f":
+        # astype would TRUNCATE floats (1.1 and 1.9 both -> key 1),
+        # silently collapsing distinct values; key kinds take integer
+        # keys by contract — hash float bits explicitly if that is what
+        # you mean
+        raise ValueError(
+            f"{type(state).__name__} sketch over a float column: key "
+            f"kinds need integer keys (cast, or hash the bit pattern)")
+    return values.astype(np.int64, copy=False)
+
+
+def _update_hashed(state, values: np.ndarray) -> None:
+    # a batch of dense small non-negative ids (BPE-style vocabularies)
+    # touches each id many times: folding ONCE PER DISTINCT id with its
+    # multiplicity is byte-exact (max-merge HLL, weighted count-min add,
+    # idempotent Bloom/KMV/MinHash) and cuts hash traffic by the
+    # batch/vocab ratio. It is the single-group case of _grouped_counts.
+    hist = (_grouped_counts(pa.record_batch([pa.array(values)], names=["v"]),
+                            "v", None, 1) if len(values) >= _HIST_MIN
+            else None)
+    if hist is not None:
+        state.update_batch(*hist[0][:2])
+        return
+    keys = _int_keys(state, values).view(U64)
+    for s in range(0, len(keys), _CHUNK):
+        state.update_batch(keys[s:s + _CHUNK])
+
+
+def _update_counted(state, values: np.ndarray) -> None:
+    # one exact-histogram absorb per batch — the same state transition
+    # as the _grouped_counts fast path (same histogram)
+    state.update_batch(_int_keys(state, values))
+
+
+def _update_counted_hist(state, keys: np.ndarray, counts: np.ndarray):
+    # dense small non-negative ints: the u64 view equals the original
+    # int64 values, so counting the view verbatim is exact
+    state.update_batch(keys.view(np.int64), counts)
+
+
+def _update_multiset(state, values: np.ndarray) -> None:
+    # no histogram: duplicates occupy slots by the multiset contract
+    state.update_batch(_int_keys(state, values).view(U64))
+
+
+def _update_matrix(state, values: np.ndarray) -> None:
+    # the vector column arrives element-flattened; the fixed dim from the
+    # state recovers the (rows, dim) shape. A non-multiple length means
+    # ragged vectors or dropped null/NaN elements — corrupt input for a
+    # matrix sketch, so fail loudly instead of shearing every subsequent
+    # row by one element.
+    dim = state.dim
+    if len(values) % dim:
+        raise ValueError(
+            f"fd sketch: {len(values)} elements is not a multiple of "
+            f"dim={dim} (ragged, null or NaN vector elements?)")
+    state.update_batch(values.astype(np.float64, copy=False).reshape(-1, dim))
+
+
+@dataclass(frozen=True)
+class Input:
+    """An input class: how one group's values reach a state — the
+    raw-stream update, the update from a (distinct keys, counts) histogram
+    when the kind has one (its columns ride the composite-bincount fast
+    path), the per-batch grouping kernel, and the dtype a UDAF flattens a
+    group to (None: struct rows)."""
+
+    update: Callable
+    update_counts: "Callable | None" = None
+    group: Callable = _grouped_column
+    dtype: "type | None" = np.int64
+
+
+HASHED = Input(_update_hashed, lambda st, k, c: st.update_batch(k, c))
+COUNTED = Input(_update_counted, _update_counted_hist)
+MULTISET = Input(_update_multiset)
+VALUES = Input(lambda st, v: st.update_batch(v.astype(np.float64)),
+               dtype=np.float64)
+MATRIX = Input(_update_matrix, dtype=np.float64)
+ROWS = Input(lambda st, rows: st.update_batch(
+    *(rows[f] for f in rows.dtype.names)), group=_grouped_rows, dtype=None)
+
+
+@dataclass(frozen=True)
+class Kind:
+    """One sketch kind: ``new(params)`` builds an empty state (defaults in
+    the table), ``load(bytes)`` reads every encoding the kind emits,
+    ``input`` is its input class, and ``exact_merge`` says merges are
+    byte-exact at any fan-in and order — so a merged state equals a
+    single-stream build (hll max / cms + / bloom OR / kmv bottom-k union /
+    minhash min / dd bucket sums / ps top-(k+1)); the other kinds compact
+    or decrement order-dependently."""
+
+    new: Callable
+    load: Callable
+    input: Input
+    exact_merge: bool
+
+    def update(self, state, values) -> None:
+        if len(values):
+            self.input.update(state, values)
+
+    def update_counts(self, state, keys, counts) -> None:
+        if len(keys):
+            self.input.update_counts(state, keys, counts)
+
+    def merge(self, blobs: "list[bytes]") -> bytes:
+        """Fold serialized states into one, re-emitted in the public wire
+        format (every merge output, never a between-stage encoding)."""
+        acc = self.load(blobs[0])
+        for b in blobs[1:]:
+            acc.merge(self.load(b))
+        return acc.to_bytes()
+
+
+KINDS = {
+    # 'error' is the reference surface: make ~error (hll.ml:26-32, Q1)
+    "hll": Kind(lambda p: hll.HLL(hll.make(p["error"]) if "error" in p
+                                  else hll.make_p(p.get("p", 14))),
+                hll.HLL.from_bytes, HASHED, True),
+    "cms": Kind(lambda p: CountMin(p.get("depth", 5), p.get("width", 8192),
+                                   p.get("seed", 7)),
+                CountMin.from_bytes, HASHED, True),
+    "csk": Kind(lambda p: CountSketch(p.get("depth", 5),
+                                      p.get("width", 8192), p.get("seed", 7)),
+                CountSketch.from_bytes, HASHED, True),
+    "bloom": Kind(lambda p: Bloom(p.get("m", 1 << 20), p.get("k", 7),
+                                  p.get("seed", 7)),
+                  Bloom.from_bytes, HASHED, True),
+    "kmv": Kind(lambda p: KMV(p.get("k", 256)), KMV.from_bytes, HASHED, True),
+    "mh": Kind(lambda p: MinHashSig(p.get("k", 64), p.get("seed", 7)),
+               MinHashSig.from_bytes, HASHED, True),
+    "mg": Kind(lambda p: MisraGries(p.get("k", 256)),
+               MisraGries.from_bytes, COUNTED, False),
+    # deletable membership with MULTISET semantics: size n_buckets for
+    # TOTAL insertions via cuckoo.params_for; raises loudly past capacity
+    "ckf": Kind(lambda p: Cuckoo(p.get("n_buckets", 1 << 16),
+                                 p.get("fp_bits", 16), p.get("seed", 7)),
+                Cuckoo.from_bytes, MULTISET, False),
+    "kll": Kind(lambda p: KLL(p.get("k", 200), seed=p.get("seed", 42)),
+                KLL.from_bytes, VALUES, False),
+    "tdigest": Kind(lambda p: TDigest(p.get("delta", 200)),
+                    TDigest.from_bytes, VALUES, False),
+    # REQ (PODS'21): relative TAIL rank error, order-sensitive like kll
+    "req": Kind(lambda p: REQ(p.get("k", 32), seed=p.get("seed", 42)),
+                REQ.from_bytes, VALUES, False),
+    # DDSketch: a bucket histogram, so order-INsensitive unlike kll
+    "dd": Kind(lambda p: DDSketch(p.get("alpha", 0.01)),
+               DDSketch.from_bytes, VALUES, True),
+    "ddsum": Kind(lambda p: DDSum(), DDSum.from_bytes, VALUES, False),
+    "mom": Kind(lambda p: Moments(), Moments.from_bytes, VALUES, False),
+    "fd": Kind(lambda p: FrequentDirections(p.get("ell", 16), p["dim"]),
+               FrequentDirections.from_bytes, MATRIX, False),
+    # weighted rows: struct<value, integer weight> (build_dd_weighted)
+    "dw": Kind(lambda p: DDSketch(p.get("alpha", 0.01)),
+               DDSketch.from_bytes, ROWS, True),
+    # weighted rows: struct<id, weight, priority> (build_priority_sample)
+    "ps": Kind(lambda p: PrioritySample(p["k"]),
+               PrioritySample.from_bytes, ROWS, True),
+}
+
+
+def get_kind(name: str) -> Kind:
+    try:
+        return KINDS[name]
+    except KeyError:
+        raise ValueError(f"unknown sketch kind {name!r}") from None
+
+
 def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
                    group_cols: "list[str] | None" = None,
                    fanout: int = 32) -> DataFrame:
@@ -400,12 +425,10 @@ def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
     src = df.select(*group_cols, *value_cols)
 
     out_schema = StructType([src.schema[c] for c in group_cols] + _TAIL_FIELDS)
-    arrow_schema = to_arrow_schema(out_schema)
     kind_of = {s.name: s.kind for s in specs}
 
     def partial_builder(batches):
-        acc = _Accumulator(specs, group_cols, value_cols, out_schema,
-                           arrow_schema)
+        acc = _Accumulator(specs, group_cols, out_schema)
         for batch in batches:
             acc.feed(batch)
         rb = acc.flush()
@@ -417,9 +440,8 @@ def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
 
 
 def _batch_group_codes(batch: pa.RecordBatch, group_cols: "list[str]"):
-    """(codes, gkeys) for one Arrow batch — THE shared group encoding for
-    every per-partition builder (the _Accumulator specs path, the
-    weighted-dd and priority-sample builders). Single non-null group
+    """(codes, gkeys) for one Arrow batch — THE group encoding of the
+    per-partition builder (_Accumulator). Single non-null group
     column rides Arrow dictionary_encode C-side; the general path
     factorizes with use_na_sentinel=False so NULL group values form a
     REAL group, normalized NaN->None so the key is stable across batches
@@ -459,56 +481,24 @@ def _batch_group_codes(batch: pa.RecordBatch, group_cols: "list[str]"):
     return np.zeros(batch.num_rows, dtype=np.int64), [()]
 
 
-def _flush_partials(entries, group_cols, out_schema, arrow_schema, t0):
-    """One partial-rows RecordBatch from ``entries`` =
-    [(gkey, sketch_name, blob, n_rows, n_values), ...] — the shared
-    flush for every per-partition builder. Returns None when empty.
-
-    build_us is the TASK's wall time apportioned across its emitted
-    rows (remainder on the first), so SUM(build_us) over any row set
-    equals total build wall time — stamping the full elapsed on
-    every (group, spec) row would overcount by rows-per-task once
-    the metrics table is aggregated."""
-    if not entries:
-        return None
-    tc = TaskContext.get()
-    pid = tc.partitionId() if tc is not None else -1
-    elapsed_us = int((time.monotonic() - t0) * 1e6)
-    share, rem = divmod(elapsed_us, len(entries))
-    out: dict = {f.name: [] for f in out_schema.fields}
-    for gkey, name, blob, n_rows, n_values in entries:
-        for c, v in zip(group_cols, gkey):
-            out[c].append(v)
-        out["sketch_name"].append(name)
-        out["sketch"].append(blob)
-        out["n_rows"].append(n_rows)
-        out["n_values"].append(n_values)
-        out["part_id"].append(pid)
-        out["build_us"].append(share + (rem if not out["build_us"]
-                                        else 0))
-    return pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-
-
 class _Accumulator:
-    """Per-task partial-sketch state shared by the DataFrame path
-    (build_sketches) and the native-reader path (build_sketches_from_files):
+    """Per-task partial-sketch state shared by every build path (the
+    DataFrame path, the native-reader path, the weighted-rows builders):
     feed Arrow RecordBatches, flush one partial-rows batch."""
 
-    def __init__(self, specs, group_cols, value_cols, out_schema,
-                 arrow_schema):
-        self.specs = specs
+    def __init__(self, specs, group_cols, out_schema):
+        self.specs = [(s, get_kind(s.kind)) for s in specs]
         self.group_cols = group_cols
-        self.value_cols = value_cols
         self.out_schema = out_schema
-        self.arrow_schema = arrow_schema
-        self.kind_of = {s.name: s.kind for s in specs}
-        # columns consumed ONLY by count-sketches can ride the composite-
-        # bincount fast path (quantile/sum sketches need the raw stream)
-        self.countable = {
-            c: all(s.kind in ("hll", "cms", "csk", "bloom", "kmv", "mh",
-                              "mg")
-                   for s in specs if s.column == c)
-            for c in value_cols}
+        self.value_cols = sorted({s.column for s in specs})
+        inputs = {c: [k.input for s, k in self.specs if s.column == c]
+                  for c in self.value_cols}
+        # columns consumed ONLY by kinds with a histogram update can ride
+        # the composite-bincount fast path (quantile/sum sketches need the
+        # raw stream)
+        self.countable = {c: all(i.update_counts for i in ins)
+                          for c, ins in inputs.items()}
+        self.group = {c: ins[0].group for c, ins in inputs.items()}
         self.states: dict = {}   # (gkey, spec_name) -> state
         self.counts: dict = {}   # (gkey, spec_name) -> [rows, values]
         self.t0 = time.monotonic()
@@ -525,40 +515,66 @@ class _Accumulator:
             if gc is not None:
                 counted[c] = gc
             else:
-                grouped[c] = _grouped_column(batch, c, codes, len(gkeys))
+                grouped[c] = self.group[c](batch, c, codes, len(gkeys))
         row_counts = np.bincount(codes, minlength=len(gkeys))
         for g, gkey in enumerate(gkeys):
-            for spec in self.specs:
+            for spec, kind in self.specs:
                 key = (gkey, spec.name)
                 st = self.states.get(key)
                 if st is None:
-                    st = self.states.setdefault(key, _new_state(spec))
+                    st = self.states.setdefault(key, kind.new(spec.p))
                 cnt = self.counts.setdefault(key, [0, 0])
                 cnt[0] += int(row_counts[g])
                 if spec.column in counted:
                     keys, gcounts, nvals = counted[spec.column][g]
-                    _update_from_counts(st, spec, keys, gcounts)
+                    kind.update_counts(st, keys, gcounts)
                     cnt[1] += nvals
                 else:
                     vals, bounds = grouped[spec.column]
                     gvals = vals[bounds[g]:bounds[g + 1]]
-                    _update(st, spec, gvals)
+                    kind.update(st, gvals)
                     cnt[1] += len(gvals)
 
     def flush(self) -> "pa.RecordBatch | None":
-        entries = [(gkey, name, _to_bytes(st, self.kind_of[name]),
-                    self.counts[(gkey, name)][0],
-                    self.counts[(gkey, name)][1])
-                   for (gkey, name), st in self.states.items()]
-        return _flush_partials(entries, self.group_cols, self.out_schema,
-                               self.arrow_schema, self.t0)
+        """One partial-rows RecordBatch, or None when nothing was fed.
+
+        A state may offer a smaller between-stage encoding
+        (``to_partial_bytes``: sparse HLL registers keep shuffle volume
+        proportional to register fill); its kind's loader reads it and
+        every merge re-emits the public wire format.
+
+        build_us is the TASK's wall time apportioned across its emitted
+        rows (remainder on the first), so SUM(build_us) over any row set
+        equals total build wall time — stamping the full elapsed on
+        every (group, spec) row would overcount by rows-per-task once
+        the metrics table is aggregated."""
+        if not self.states:
+            return None
+        tc = TaskContext.get()
+        pid = tc.partitionId() if tc is not None else -1
+        elapsed_us = int((time.monotonic() - self.t0) * 1e6)
+        share, rem = divmod(elapsed_us, len(self.states))
+        out: dict = {f.name: [] for f in self.out_schema.fields}
+        for (gkey, name), st in self.states.items():
+            for c, v in zip(self.group_cols, gkey):
+                out[c].append(v)
+            out["sketch_name"].append(name)
+            out["sketch"].append(
+                getattr(st, "to_partial_bytes", st.to_bytes)())
+            n_rows, n_values = self.counts[(gkey, name)]
+            out["n_rows"].append(n_rows)
+            out["n_values"].append(n_values)
+            out["part_id"].append(pid)
+            out["build_us"].append(share + (rem if not out["build_us"]
+                                            else 0))
+        return pa.RecordBatch.from_pydict(
+            out, schema=to_arrow_schema(self.out_schema))
 
 
 def build_sketches_from_files(spark, files: "list[str]",
                               specs: "list[SketchSpec]",
                               group_cols: "list[str] | None" = None,
                               fanout: int = 32,
-                              batch_rows: int = 65536,
                               n_tasks: "int | None" = None,
                               use_threads: "bool | None" = None
                               ) -> DataFrame:
@@ -576,7 +592,11 @@ def build_sketches_from_files(spark, files: "list[str]",
     decoders saturate a single-socket bus; 32 thrash it) — on a real
     multi-executor cluster set n_tasks ~ total executor cores, the same
     sizing rule as any scan. Partial rows and everything downstream are
-    identical to build_sketches (byte parity asserted in tests)."""
+    identical to build_sketches (byte parity asserted in tests).
+
+    The output schema is probed from ``files[0]``; every task checks each
+    of its files against that probe (needed columns present, same Arrow
+    types) and raises a ValueError naming the file that drifted."""
     import pyarrow.parquet as pq
 
     group_cols = list(group_cols or [])
@@ -588,7 +608,6 @@ def build_sketches_from_files(spark, files: "list[str]",
     probe = spark.read.parquet(files[0]).select(*group_cols, *value_cols)
     out_schema = StructType([probe.schema[c] for c in group_cols]
                             + _TAIL_FIELDS)
-    arrow_schema = to_arrow_schema(out_schema)
     need_cols = group_cols + value_cols
 
     if n_tasks is None:
@@ -605,20 +624,32 @@ def build_sketches_from_files(spark, files: "list[str]",
         # at 64 tasks); with FEW fat readers the idle cores belong to the
         # decoder, so threads help. The crossover is the executor-core
         # budget: threads on only when readers use <= half the cores.
+        # An unknown budget (Spark Connect; dynamic allocation before any
+        # executor registers) keeps them off: the driver's own core count
+        # says nothing about the executors.
         try:
             slots = int(spark.sparkContext.defaultParallelism)
         except Exception:
-            slots = os.cpu_count() or 8
+            slots = 0
         use_threads = n_tasks * 2 <= slots
 
     def worker(batches):
-        acc = _Accumulator(specs, group_cols, value_cols, out_schema,
-                           arrow_schema)
+        probe_types = pq.read_schema(files[0])
+        want = {c: probe_types.field(c).type for c in need_cols}
+        acc = _Accumulator(specs, group_cols, out_schema)
         for b in batches:
             for path in b.column("path").to_pylist():
+                got = pq.read_schema(path)
+                for c, t in want.items():
+                    if c not in got.names or got.field(c).type != t:
+                        found = (got.field(c).type if c in got.names
+                                 else "missing")
+                        raise ValueError(
+                            f"build_sketches_from_files: {path}: column "
+                            f"{c!r} is {found}, but {files[0]} has {t}")
                 tbl = pq.read_table(path, columns=need_cols,
                                     use_threads=use_threads)
-                for rb in tbl.to_batches(max_chunksize=batch_rows):
+                for rb in tbl.to_batches(max_chunksize=_NATIVE_BATCH_ROWS):
                     acc.feed(rb)
         out = acc.flush()
         if out is not None:
@@ -671,8 +702,8 @@ def merge_partials(partials: DataFrame, kind_of: "dict[str, str]",
     names = [f.name for f in out_fields]
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        kind = kind_of[pdf["sketch_name"].iloc[0]]
-        blob = _merge_blobs(kind, [bytes(b) for b in pdf["sketch"]])
+        kind = get_kind(kind_of[pdf["sketch_name"].iloc[0]])
+        blob = kind.merge([bytes(b) for b in pdf["sketch"]])
         head = pdf.iloc[:1].copy()
         head["sketch"] = [blob]
         head["n_rows"] = np.int64(pdf["n_rows"].sum())
@@ -722,57 +753,14 @@ def build_dd_weighted(df: DataFrame, value_col: str, weight_col: str,
     (value, weight) pairs folded (the total WEIGHT is the sketch's own
     n, read via ``functions.dd_stats_col(...)['n']``).
     """
-    group_cols = list(group_cols or [])
-    src = df.select(*group_cols, value_col, weight_col)
-    out_schema = StructType([src.schema[c] for c in group_cols]
-                            + _TAIL_FIELDS)
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def builder(batches):
-        import pyarrow.compute as pc
-
-        t0 = time.monotonic()
-        states: dict = {}
-        counts: dict = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            codes, gkeys = _batch_group_codes(batch, group_cols)
-            row_counts = np.bincount(codes, minlength=len(gkeys))
-            # JOINT null filter at the Arrow level: value and weight must
-            # both be present, and int64 weights must never pass through a
-            # nullable-float pandas conversion (|w| > 2^53 would mangle)
-            varr, warr = batch.column(value_col), batch.column(weight_col)
-            ok = pc.and_(varr.is_valid(), warr.is_valid())
-            keep = np.asarray(ok)
-            vals = np.asarray(varr.to_numpy(zero_copy_only=False),
-                              dtype=np.float64)[keep]
-            w = warr.filter(ok).to_numpy(zero_copy_only=False)
-            vcodes = codes[keep]
-            # float64 NaN values filter like NULL (same contract as the
-            # unweighted quantile-kind path in _grouped_column)
-            fin = ~np.isnan(vals)
-            vals, w, vcodes = vals[fin], w[fin], vcodes[fin]
-            for g, gkey in enumerate(gkeys):
-                st = states.get(gkey)
-                if st is None:
-                    st = states.setdefault(gkey, DDSketch(alpha))
-                cnt = counts.setdefault(gkey, [0, 0])
-                cnt[0] += int(row_counts[g])
-                m = vcodes == g
-                st.update_batch_weighted(vals[m], w[m])
-                cnt[1] += int(m.sum())
-        rb = _flush_partials(
-            [(gkey, name, st.to_bytes(), counts[gkey][0], counts[gkey][1])
-             for gkey, st in states.items()],
-            group_cols, out_schema, arrow_schema, t0)
-        if rb is not None:
-            yield rb
-
     from ..functions.estimates import dd_stats_col
 
-    partials = src.mapInArrow(builder, out_schema)
-    merged = merge_partials(partials, {name: "dd"}, group_cols, fanout)
+    group_cols = list(group_cols or [])
+    src = df.select(*group_cols,
+                    F.struct(value_col, weight_col).alias("_rows"))
+    merged = build_sketches(src, [SketchSpec.of(name, "dw", "_rows",
+                                                alpha=alpha)],
+                            group_cols, fanout)
     return merged.where(dd_stats_col("sketch").getField("n") > 0)
 
 
@@ -809,51 +797,9 @@ def build_priority_sample(df: DataFrame, k: int, weight_col: str,
     group_cols = list(group_cols or [])
     _, prio = _priority_inputs(id_col, weight_col, seed)
     src = df.select(*group_cols,
-                    F.col(id_col).alias("_id"),
-                    F.col(weight_col).alias("_w"),
-                    prio.alias("_prio"))
-    out_schema = StructType([src.schema[c] for c in group_cols]
-                            + _TAIL_FIELDS)
-    arrow_schema = to_arrow_schema(out_schema)
-
-    def builder(batches):
-        import pyarrow.compute as pc
-
-        t0 = time.monotonic()
-        states: dict = {}
-        counts: dict = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            codes, gkeys = _batch_group_codes(batch, group_cols)
-            row_counts = np.bincount(codes, minlength=len(gkeys))
-            iarr, warr = batch.column("_id"), batch.column("_w")
-            parr = batch.column("_prio")
-            ok = pc.and_(pc.and_(iarr.is_valid(), warr.is_valid()),
-                         parr.is_valid())
-            keep = np.asarray(ok)
-            ids = iarr.filter(ok).to_numpy(zero_copy_only=False)
-            w = warr.filter(ok).to_numpy(zero_copy_only=False)
-            prios = np.asarray(parr.filter(ok)
-                               .to_numpy(zero_copy_only=False),
-                               dtype=np.float64)
-            vcodes = codes[keep]
-            for g, gkey in enumerate(gkeys):
-                st = states.get(gkey)
-                if st is None:
-                    st = states.setdefault(gkey, PrioritySample(k))
-                cnt = counts.setdefault(gkey, [0, 0])
-                cnt[0] += int(row_counts[g])
-                m = vcodes == g
-                st.update_batch(ids[m], w[m], prios[m])
-                cnt[1] += int(m.sum())
-        rb = _flush_partials(
-            [(gkey, name, st.to_bytes(), counts[gkey][0], counts[gkey][1])
-             for gkey, st in states.items()],
-            group_cols, out_schema, arrow_schema, t0)
-        if rb is not None:
-            yield rb
-
-    partials = src.mapInArrow(builder, out_schema)
-    merged = merge_partials(partials, {name: "ps"}, group_cols, fanout)
+                    F.struct(F.col(id_col).alias("_id"),
+                             F.col(weight_col).alias("_w"),
+                             prio.alias("_prio")).alias("_rows"))
+    merged = build_sketches(src, [SketchSpec.of(name, "ps", "_rows", k=k)],
+                            group_cols, fanout)
     return merged.where(F.size(ps_items_col("sketch")) > 0)

@@ -25,14 +25,15 @@ def ev(spark):
 
 
 SPEC = [SketchSpec.of("h", "hll", "k", p=10),
-        SketchSpec.of("v", "kmv", "k", k=64)]
+        SketchSpec.of("v", "kmv", "k", k=64),
+        SketchSpec.of("m", "mh", "k", k=32)]
 
 
 def test_every_cell_equals_direct_build(spark, ev):
     df, pdf = ev
     cells = sketch_cube(df, ["a", "b"], SPEC).toPandas()
-    # 3*2 leaves + 3 + 2 + 1 = 12 groups x 2 specs
-    assert len(cells) == 24
+    # 3*2 leaves + 3 + 2 + 1 = 12 groups x 3 specs
+    assert len(cells) == 36
     for r in cells.itertuples():
         sub = df
         if r.a != "ALL":

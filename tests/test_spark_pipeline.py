@@ -410,6 +410,34 @@ def test_native_file_builder_n_tasks_invariance(spark, docs_tiny):
         assert got == want, (n_tasks, threads)
 
 
+def test_native_file_builder_names_a_drifted_file(spark, docs_tiny,
+                                                  tmp_path):
+    """A file whose schema differs from the probed first file (a column
+    retyped, or missing) fails the build with that file named."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from grenier_spark.operators.sketch_build import build_sketches_from_files
+
+    files = sorted(os.path.join(docs_tiny, f) for f in os.listdir(docs_tiny)
+                   if f.endswith(".parquet"))
+    tbl = pq.read_table(files[0])
+    specs = [SketchSpec.of("h", "hll", "tokens", p=12)]
+    i = tbl.schema.get_field_index("tokens")
+    for name, bad in (
+            ("retyped.parquet",
+             tbl.set_column(i, "tokens",
+                            tbl["tokens"].cast(pa.list_(pa.int64())))),
+            ("no_source.parquet", tbl.drop_columns(["source"]))):
+        path = str(tmp_path / name)
+        pq.write_table(bad, path)
+        with pytest.raises(Exception, match=name):
+            build_sketches_from_files(spark, files + [path], specs,
+                                      ["source"], n_tasks=2).collect()
+
+
 def test_sql_function_registration(spark, docs_df):
     """Registered SQL functions work in spark.sql strings end-to-end."""
     from grenier_spark.functions.register import register_sql_functions
@@ -475,12 +503,9 @@ def test_grouped_counts_equals_generic_path_fuzz():
     import numpy as np
     import pyarrow as pa
 
-    from grenier_spark.core import hll
-    from grenier_spark.operators.sketch_build import (SketchSpec,
+    from grenier_spark.operators.sketch_build import (KINDS, SketchSpec,
                                                       _grouped_column,
-                                                      _grouped_counts,
-                                                      _new_state, _update,
-                                                      _update_from_counts)
+                                                      _grouped_counts)
 
     rng = np.random.default_rng(7)
     specs = [SketchSpec.of("h", "hll", "v", p=10),
@@ -488,11 +513,10 @@ def test_grouped_counts_equals_generic_path_fuzz():
              SketchSpec.of("b", "bloom", "v", m=1 << 14, k=4, seed=7),
              SketchSpec.of("s", "csk", "v", depth=3, width=256, seed=7),
              SketchSpec.of("m", "kmv", "v", k=32),
-             SketchSpec.of("g", "mg", "v", k=16)]
+             SketchSpec.of("g", "mg", "v", k=16),
+             SketchSpec.of("x", "mh", "v", k=16, seed=7)]
 
     def states_equal(a, b, kind):
-        if kind == "hll":
-            return hll.to_bytes(a) == hll.to_bytes(b)
         return a.to_bytes() == b.to_bytes()
 
     for trial in range(40):
@@ -518,13 +542,14 @@ def test_grouped_counts_equals_generic_path_fuzz():
         vals_b, bounds = _grouped_column(batch, "v", codes, n_groups)
 
         for spec in specs:
+            kind = KINDS[spec.kind]
             for g in range(n_groups):
-                ref = _new_state(spec)
-                _update(ref, spec, vals_b[bounds[g]:bounds[g + 1]])
+                ref = kind.new(spec.p)
+                kind.update(ref, vals_b[bounds[g]:bounds[g + 1]])
                 if gc is not None:
-                    got = _new_state(spec)
+                    got = kind.new(spec.p)
                     keys, cnts, nv = gc[g]
-                    _update_from_counts(got, spec, keys, cnts)
+                    kind.update_counts(got, keys, cnts)
                     assert states_equal(got, ref, spec.kind), \
                         (trial, spec.kind, g)
                     assert nv == bounds[g + 1] - bounds[g]
