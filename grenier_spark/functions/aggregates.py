@@ -17,8 +17,10 @@ with :func:`grenier_spark.functions.hll_merge_col` for sketch algebra.
 
 Token hashing is the canonical chain (``wang64`` of the int64-widened
 token, reference hll/test.ml:7) via the SAME kind-table update the
-distributed build uses, so for the exact-merge kinds (hll / cms /
-bloom / ...) the emitted bytes are BIT-IDENTICAL to
+distributed build uses, over the values the build would feed it
+(``sketch_build._pandas_values``: NULL cells and NULL/NaN array elements
+drop, int64 keys pass one exactness guard), so for the exact-merge kinds
+(hll / cms / bloom / ...) the emitted bytes are BIT-IDENTICAL to
 ``operators.sketch_build.build_sketches`` over the same rows
 (tests/test_spark_pipeline.py::test_grouped_agg_udaf_byte_parity).
 
@@ -33,46 +35,12 @@ sketch-row merge keeps token-scale data out of the shuffle entirely.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..operators.sketch_build import get_kind
-
-
-def _group_values(xs: pd.Series, dtype) -> np.ndarray:
-    """Flatten one group's column into the kernel's value vector.
-
-    Both scalar and array<int*> columns are accepted for every column kind
-    (build_sketches flattens token arrays into the quantile kernels too):
-    null rows drop, arrays concatenate. Key kinds widen to int64 (same
-    as the Arrow build path's upcast); value and matrix kinds feed float64.
-    Weighted-rows kinds (``dtype`` None) take a struct column, which
-    arrives as one dict per row: a row with a NULL or NaN field drops.
-    """
-    if dtype is None:
-        rows = pd.DataFrame([r for r in xs if r is not None]).dropna()
-        return np.rec.fromarrays([rows[c].to_numpy() for c in rows.columns]
-                                 ) if len(rows) else np.empty(0)
-    vals = [v for v in xs if v is not None]
-    if vals and isinstance(vals[0], (list, tuple, np.ndarray)):
-        return np.concatenate([np.asarray(v, dtype=dtype) for v in vals])
-    kept = xs.dropna()
-    if dtype is np.int64 and kept.dtype.kind == "f":
-        # a nullable BIGINT column reaches pandas as float64: above 2^53
-        # the int64->double round-trip is lossy and the hashed keys would
-        # silently diverge from build_sketches. Refuse instead of corrupt.
-        f = kept.to_numpy(dtype=np.float64)
-        if len(f) and (np.abs(f) >= 2.0 ** 53).any():
-            raise ValueError(
-                "sketch aggregate over a nullable int64 column with values "
-                ">= 2^53: Arrow->pandas promoted the group to float64, "
-                "which cannot represent the keys exactly. Filter the NULLs "
-                "out first (WHERE col IS NOT NULL) so the column stays "
-                "int64, or use operators.sketch_build.build_sketches.")
-    return kept.to_numpy(dtype=dtype)
+from ..operators.sketch_build import _pandas_values, get_kind
 
 
 def _make_agg_udf(kind: str, params: dict):
@@ -90,7 +58,7 @@ def _make_agg_udf(kind: str, params: dict):
         # distributed partial builder => byte parity for the exact-merge
         # kinds; kll/tdigest/ddsum are deterministic for a given value
         # order, but that order is the group's row order.
-        k.update(state, _group_values(xs, k.input.dtype))
+        k.update(state, _pandas_values(xs, k.dtype, "sketch aggregate"))
         return state.to_bytes()
 
     return _agg

@@ -38,6 +38,7 @@ symbols are never re-split).
 
 from __future__ import annotations
 
+import warnings
 from collections import Counter
 
 from pyspark.sql import DataFrame
@@ -91,16 +92,26 @@ def bpe_learn(docs: DataFrame, n_merges: int, text_col: str = "text",
     {step, left, right, pair_count}; ``segmentation`` maps every
     histogram word to its final symbol tuple. ``max_words`` bounds the
     histogram through the driver (top words by count desc, word asc;
-    default :data:`DEFAULT_MAX_WORDS` — a deliberate driver-OOM guard);
-    ``None`` explicitly opts in to keeping every word (the
-    oracle-checkable setting for bounded corpora).
+    default :data:`DEFAULT_MAX_WORDS` — a deliberate driver-OOM guard),
+    and a histogram cut at that bound issues a UserWarning; ``None``
+    explicitly opts in to keeping every word (the oracle-checkable
+    setting for bounded corpora).
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     hist = word_histogram(docs, text_col)
     if max_words is not None:
-        hist = hist.orderBy(F.desc("cnt"), F.asc("word")).limit(max_words)
+        # one row past the cap tells a truncated histogram from a full
+        # one in the same job
+        hist = hist.orderBy(F.desc("cnt"), F.asc("word")).limit(max_words + 1)
     rows = hist.collect()
+    if max_words is not None and len(rows) > max_words:
+        rows = rows[:max_words]
+        warnings.warn(
+            f"bpe_learn: the corpus has more than max_words={max_words} "
+            f"distinct words; merges are learned from the top {max_words} "
+            f"only. Pass max_words=None for exact merges.", UserWarning,
+            stacklevel=2)
     seg = {r["word"]: tuple(r["word"]) + (END,) for r in rows}
     cnt = {r["word"]: int(r["cnt"]) for r in rows}
 

@@ -239,6 +239,73 @@ def _grouped_rows(batch: pa.RecordBatch, col: str, codes: np.ndarray,
     return rows[order], bounds
 
 
+def _exact_int64(values: np.ndarray, name: str, where: str) -> np.ndarray:
+    """``values`` as int64, or a ValueError naming ``name``: the one int64
+    exactness guard. Spark's Arrow->pandas hop promotes a nullable bigint
+    column to float64; from 2^53 on, low bits are lost before user code
+    sees them, and the mangled float still round-trips cleanly, so a float
+    passes only when every |value| < 2^53 (where int->float->int is
+    injective) and it is integral. Unsigned values must be < 2^63, which a
+    bare cast would wrap negative."""
+    if values.dtype.kind == "u" and len(values) and \
+            int(values.max()) > np.iinfo(np.int64).max:
+        raise ValueError(
+            f"{where}: column {name!r} holds unsigned values >= 2^63 "
+            "that cannot be represented as int64")
+    if values.dtype.kind in "iu":
+        return values.astype(np.int64, copy=False)
+    if np.any(np.abs(values) >= float(1 << 53)):
+        raise ValueError(
+            f"{where}: column {name!r} arrived float64 (pandas NULL "
+            "promotion) with |values| >= 2^53 — low bits may already be "
+            "lost upstream and exactness cannot be verified here; filter "
+            "NULLs upstream so the column stays int64, or keep it below "
+            "2^53")
+    as_int = values.astype(np.int64)
+    if not np.array_equal(as_int.astype(values.dtype), values):
+        raise ValueError(
+            f"{where}: column {name!r} holds non-integral float values")
+    return as_int
+
+
+def _typed(values: np.ndarray, dtype, name: str, where: str) -> np.ndarray:
+    if values.dtype.kind == "O":  # None elements of object cells
+        values = np.array(values[pd.notna(values)].tolist())
+    if values.dtype.kind == "f":
+        values = values[~np.isnan(values)]
+    if dtype is np.int64:
+        return _exact_int64(values, name, where)
+    return values.astype(dtype, copy=False)
+
+
+def _pandas_values(cells: "pd.Series | pd.DataFrame", dtype,
+                   where: str) -> np.ndarray:
+    """The pandas twin of :func:`_grouped_column` / :func:`_grouped_rows`:
+    one column as it reaches Python code (a UDAF group, a stream
+    trigger), read to the value vector a kind's update takes, under the
+    batch build's contract. NULL cells drop; array cells concatenate, and
+    their NULL or NaN elements drop; int64 values pass
+    :func:`_exact_int64`. A tuple ``dtype`` (a :attr:`Kind.dtype` of the
+    weighted-rows kinds) reads struct rows — a Series of dict cells or a
+    DataFrame of the fields, one dtype per field — into a record array; a
+    row with a NULL or NaN field drops."""
+    if isinstance(dtype, tuple):
+        if isinstance(cells, pd.Series):
+            cells = pd.DataFrame([r for r in cells if r is not None])
+        rows = cells.dropna()
+        if not len(rows):
+            return np.empty(0)
+        return np.rec.fromarrays([
+            _typed(rows[c].to_numpy(), d, c, where)
+            for c, d in zip(rows.columns, dtype)])
+    kept = cells.dropna()
+    if len(kept) and isinstance(kept.iloc[0], (list, tuple, np.ndarray)):
+        values = np.concatenate([np.asarray(v) for v in kept])
+    else:
+        values = kept.to_numpy()
+    return _typed(values, dtype, cells.name, where)
+
+
 # -- the kind table ----------------------------------------------------------
 
 def _int_keys(state, values: np.ndarray) -> np.ndarray:
@@ -306,8 +373,8 @@ class Input:
     """An input class: how one group's values reach a state — the
     raw-stream update, the update from a (distinct keys, counts) histogram
     when the kind has one (its columns ride the composite-bincount fast
-    path), the per-batch grouping kernel, and the dtype a UDAF flattens a
-    group to (None: struct rows)."""
+    path), the per-batch grouping kernel, and the dtype the pandas reader
+    reads a column to (None: struct rows, typed per field by the kind)."""
 
     update: Callable
     update_counts: "Callable | None" = None
@@ -333,12 +400,19 @@ class Kind:
     byte-exact at any fan-in and order — so a merged state equals a
     single-stream build (hll max / cms + / bloom OR / kmv bottom-k union /
     minhash min / dd bucket sums / ps top-(k+1)); the other kinds compact
-    or decrement order-dependently."""
+    or decrement order-dependently. ``fields`` types the struct fields of
+    the weighted-rows kinds for the pandas reader."""
 
     new: Callable
     load: Callable
     input: Input
     exact_merge: bool
+    fields: tuple = ()
+
+    @property
+    def dtype(self):
+        """What :func:`_pandas_values` reads this kind's column to."""
+        return self.fields or self.input.dtype
 
     def update(self, state, values) -> None:
         if len(values):
@@ -397,10 +471,11 @@ KINDS = {
                FrequentDirections.from_bytes, MATRIX, False),
     # weighted rows: struct<value, integer weight> (build_dd_weighted)
     "dw": Kind(lambda p: DDSketch(p.get("alpha", 0.01)),
-               DDSketch.from_bytes, ROWS, True),
+               DDSketch.from_bytes, ROWS, True, (np.float64, np.int64)),
     # weighted rows: struct<id, weight, priority> (build_priority_sample)
     "ps": Kind(lambda p: PrioritySample(p["k"]),
-               PrioritySample.from_bytes, ROWS, True),
+               PrioritySample.from_bytes, ROWS, True,
+               (np.int64, np.int64, np.float64)),
 }
 
 

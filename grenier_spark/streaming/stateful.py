@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator: per-key sketch state maintained in
+"""Custom stateful streaming operators: per-key sketch state maintained in
 the Structured Streaming state store via ``applyInPandasWithState``.
 
 Complements streaming/incremental.py (foreachBatch + checkpoint table):
@@ -6,59 +6,139 @@ here the serialized sketch lives IN the state store, keyed by the group
 column, and every trigger emits the refreshed estimate per key — the shape
 you want for a live "distinct tokens per source" dashboard over a document
 firehose. State is the grenier wire format (KB-sized), so the state store
-stays tiny regardless of token volume; updates are the same vectorized
-kernels as the batch path.
+stays tiny regardless of token volume.
+
+Every operator is one call of :func:`_fold`, the one state-store loop. Per
+trigger and key it loads the state or makes a new one through the kind
+table (``operators.sketch_build.KINDS``), concatenates the trigger's
+chunks, stable-sorts them by ``order_col`` when the operator takes one,
+reads the values with ``operators.sketch_build._pandas_values`` and
+updates with the batch build's kernels, stores the state as
+``sketch binary`` plus the operator's counters, and emits. The value
+reader is the pandas twin of the batch build's Arrow readers: NULL cells
+and NULL/NaN array elements drop, and int64 keys pass one exactness guard
+— so a stream feeds its sketch the values the batch build would. The
+lossy counter is not a table kind; it plugs its own state row into the
+same loop.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
+from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
 
 from ..core import hll
-from ..core.bits import U64, wang64
+from ..operators.sketch_build import _pandas_values, get_kind
 
 
-def _exact_int64(series: pd.Series, where: str, name: str) -> np.ndarray:
-    """Convert a notna-filtered pandas column to int64, LOUDLY.
+@dataclass(frozen=True)
+class _Store:
+    """How a state lives in the state store: ``schema`` is the DDL of the
+    state row's head, ``new()``/``load(head)``/``dump(state)`` make, read
+    and write it, ``update(state, values)`` folds values read to
+    ``dtype``."""
 
-    Spark's Arrow->pandas hop promotes a nullable bigint column to
-    float64; values >= 2^53 then lose low bits before user code ever
-    sees them — and the mangled float still round-trips cleanly, so
-    exactness at that magnitude is UNPROVABLE from here. An int64 dtype
-    passes straight through; a float dtype is accepted only when every
-    |value| < 2^53 (where int->float->int is injective) and the
-    round-trip is exact (rejects non-integral values); otherwise raise
-    rather than silently corrupt the sketch."""
-    arr = series.to_numpy()
-    if arr.dtype.kind == "i":
-        return arr.astype(np.int64, copy=False)
-    if arr.dtype.kind == "u":
-        # unsigned values >= 2^63 would wrap negative through the int64
-        # cast — the same silent corruption this helper exists to stop
-        if len(arr) and int(arr.max()) > np.iinfo(np.int64).max:
-            raise ValueError(
-                f"{where}: column {name!r} holds unsigned values >= 2^63 "
-                "that cannot be represented as int64")
-        return arr.astype(np.int64, copy=False)
-    if np.any(np.abs(arr) >= float(1 << 53)):
+    schema: str
+    dtype: object
+    new: Callable
+    load: Callable
+    dump: Callable
+    update: Callable
+
+
+def _kind_store(kind: str, **params) -> _Store:
+    """A kind-table state, stored as its wire bytes. The closures look
+    the kind up by name on the worker (a ``Kind`` row does not pickle)."""
+    return _Store("sketch binary", get_kind(kind).dtype,
+                  lambda: get_kind(kind).new(params),
+                  lambda head: get_kind(kind).load(bytes(head[0])),
+                  lambda s: (s.to_bytes(),),
+                  lambda s, v: get_kind(kind).update(s, v))
+
+
+def _finite_nonneg(v: np.ndarray) -> np.ndarray:
+    return np.isfinite(v) & (v >= 0)
+
+
+def _fold(src, keys: "list[str]", where: str, store: _Store,
+          cols: "str | list[str]", emit: Callable, out_schema: str,
+          counters: "dict[str, Callable] | None" = None,
+          order_col: "str | None" = None, keep: "Callable | None" = None,
+          timeout: "Callable | None" = None):
+    """The one state-store loop behind every operator: ``src`` grouped by
+    ``keys`` through ``applyInPandasWithState``.
+
+    Per trigger and key: load the state or make a new one, concatenate
+    the non-empty chunks, stable-sort them by ``order_col``, read ``cols``
+    with :func:`_pandas_values`, drop the values ``keep`` masks out (the
+    stream's own drop rule: a bad record must not wedge a checkpointed
+    query by raising on every replay), update, then store the state row
+    ``(*store.dump(state), *counters)``. Each counter is a bigint that
+    grows by ``counters[name](rows, values)``. ``emit(key, state,
+    counters)`` returns the output rows, or None.
+
+    ``timeout(key)`` (epoch ms) makes it an append-mode event-time
+    operator: an update arms that timeout and emits nothing; a timed-out
+    key is emitted and evicted."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    if order_col is not None and order_col not in src.columns:
         raise ValueError(
-            f"{where}: column {name!r} arrived float64 (pandas NULL "
-            "promotion) with |values| >= 2^53 — low bits may already be "
-            "lost upstream and exactness cannot be verified here; keep "
-            "the column below 2^53 or make it non-nullable upstream")
-    as_int = arr.astype(np.int64)
-    if not np.array_equal(as_int.astype(arr.dtype), arr):
-        raise ValueError(
-            f"{where}: column {name!r} holds non-integral float values")
-    return as_int
+            f"{where}: order_col {order_col!r} not in the stream "
+            f"({src.columns}) — rows within a trigger would reach the "
+            f"sketch in Arrow-chunk order, so the result would silently "
+            f"depend on chunking")
+    counters = counters or {}
+    n_c = len(counters)
+    state_schema = ", ".join([store.schema]
+                             + [f"{c} bigint" for c in counters])
+
+    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        if state.exists:
+            row = tuple(state.get)
+            s = store.load(row[:len(row) - n_c])
+            ctr = [int(c) for c in row[len(row) - n_c:]]
+        else:
+            s, ctr = store.new(), [0] * n_c
+        if state.hasTimedOut:
+            state.remove()
+        else:
+            chunks = [pdf for pdf in pdfs if len(pdf)]
+            if chunks:
+                rows = pd.concat(chunks, ignore_index=True)
+                if order_col is not None:
+                    rows = rows.sort_values(order_col, kind="stable")
+                values = _pandas_values(rows[cols], store.dtype, where)
+                if keep is not None:
+                    values = values[keep(values)]
+                store.update(s, values)
+                ctr = [c + f(rows, values)
+                       for c, f in zip(ctr, counters.values())]
+            state.update((*store.dump(s), *ctr))
+            if timeout is not None:
+                state.setTimeoutTimestamp(timeout(key))
+                return
+        out = emit(key, s, ctr)
+        if out is not None:
+            yield out
+
+    return src.groupBy(*keys).applyInPandasWithState(
+        update, out_schema, state_schema,
+        "update" if timeout is None else "append",
+        GroupStateTimeout.NoTimeout if timeout is None
+        else GroupStateTimeout.EventTimeTimeout)
 
 
 def hll_state_stream(stream_df, group_col: str, tokens_col: str = "tokens",
                      p: int = 12):
     """(group, est_distinct, n_docs, n_tokens) per trigger per updated key.
+    NULL tokens cells count as docs with no tokens (a poison row that
+    raised would be REPLAYED from the checkpoint on every restart); NULL
+    token elements drop, as in the batch build.
 
     Usage::
 
@@ -66,39 +146,16 @@ def hll_state_stream(stream_df, group_col: str, tokens_col: str = "tokens",
         q = (out.writeStream.outputMode("update").format("memory")
                 .queryName("live").start())
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (f"{group_col} string, est_distinct double, "
-                  "n_docs bigint, n_tokens bigint")
-    state_schema = "sketch binary, n_docs bigint, n_tokens bigint"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            blob, n_docs, n_tokens = state.get
-            t = hll.from_bytes(bytes(blob))
-        else:
-            t, n_docs, n_tokens = hll.make_p(p), 0, 0
-        for pdf in pdfs:
-            # NULL tokens cells: np.asarray(None) is 0-d and concatenate
-            # raises — and a poison row would be REPLAYED from the
-            # checkpoint on every restart, wedging the stream. Skip them
-            # (same guard as lossy_state_stream below).
-            arrs = [np.asarray(v, dtype=np.int64)
-                    for v in pdf[tokens_col] if v is not None]
-            toks = (np.concatenate(arrs) if arrs
-                    else np.empty(0, dtype=np.int64))
-            if len(toks):
-                hll.add_batch(t, wang64(toks.view(U64)))
-            n_docs += len(pdf)
-            n_tokens += len(toks)
-        state.update((hll.to_bytes(t), n_docs, n_tokens))
-        yield pd.DataFrame({group_col: [key[0]],
-                            "est_distinct": [hll.card(t)],
-                            "n_docs": [n_docs], "n_tokens": [n_tokens]})
-
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold(
+        stream_df, [group_col], "hll_state_stream", _kind_store("hll", p=p),
+        tokens_col,
+        lambda key, s, c: pd.DataFrame({
+            group_col: [key[0]], "est_distinct": [hll.card(s.t)],
+            "n_docs": [c[0]], "n_tokens": [c[1]]}),
+        f"{group_col} string, est_distinct double, n_docs bigint, "
+        "n_tokens bigint",
+        counters={"n_docs": lambda rows, v: len(rows),
+                  "n_tokens": lambda rows, v: len(v)})
 
 
 def lossy_state_stream(stream_df, group_col: str, tokens_col: str = "tokens",
@@ -114,61 +171,55 @@ def lossy_state_stream(stream_df, group_col: str, tokens_col: str = "tokens",
     equals a batch counter fed the concatenated stream (asserted vs the
     numpy counter in tests, including across a query restart). Rows within
     a trigger are processed in ``order_col`` order, making the per-trigger
-    update deterministic under Arrow chunking; emission per trigger is the
-    current report: tokens with ``(f + delta)/n >= support`` as
+    update deterministic under Arrow chunking (a stream without
+    ``order_col`` raises ValueError at construction); NULL tokens cells
+    and NULL token elements drop. Emission per trigger is the current
+    report: tokens with ``(f + delta)/n >= support`` as
     (group, token, est_freq, f, n) in update mode.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..core.countish import LossyCounter
 
-    out_schema = (f"{group_col} string, token bigint, est_freq double, "
-                  "f bigint, n bigint")
-    state_schema = ("tokens array<bigint>, fs array<double>, "
-                    "deltas array<double>, n bigint")
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+    def load(head):
+        toks, fs, deltas, n = head
         lc = LossyCounter(support, error_tolerance)
-        if state.exists:
-            toks, fs, deltas, n = state.get
-            lc.n = int(n)
-            lc.f = {int(t): float(v) for t, v in zip(toks, fs)}
-            lc.delta = {int(t): float(v) for t, v in zip(toks, deltas)}
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True)
-            if order_col in rows.columns:
-                rows = rows.sort_values(order_col, kind="stable")
-            flat = [np.asarray(v, dtype=np.int64)
-                    for v in rows[tokens_col] if v is not None]
-            if flat:
-                lc.observe_batch(np.concatenate(flat))
-        items = sorted(lc.f.keys())
-        state.update(([int(t) for t in items],
-                      [float(lc.f[t]) for t in items],
-                      [float(lc.delta[t]) for t in items], lc.n))
+        lc.n = int(n)
+        lc.f = {int(t): float(v) for t, v in zip(toks, fs)}
+        lc.delta = {int(t): float(v) for t, v in zip(toks, deltas)}
+        return lc
+
+    def dump(lc):
+        items = sorted(lc.f)
+        return ([int(t) for t in items], [float(lc.f[t]) for t in items],
+                [float(lc.delta[t]) for t in items], lc.n)
+
+    def emit(key, lc, _):
         n = float(lc.n) if lc.n else 1.0
         rep = [(t, (lc.f[t] + lc.delta[t]) / n, int(lc.f[t]), lc.n)
-               for t in items if (lc.f[t] + lc.delta[t]) / n >= support]
-        yield pd.DataFrame({group_col: [key[0]] * len(rep),
-                            "token": [r[0] for r in rep],
-                            "est_freq": [r[1] for r in rep],
-                            "f": [r[2] for r in rep],
-                            "n": [r[3] for r in rep]})
+               for t in sorted(lc.f) if (lc.f[t] + lc.delta[t]) / n >= support]
+        return pd.DataFrame({group_col: [key[0]] * len(rep),
+                             "token": [r[0] for r in rep],
+                             "est_freq": [r[1] for r in rep],
+                             "f": [r[2] for r in rep],
+                             "n": [r[3] for r in rep]})
 
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    store = _Store("tokens array<bigint>, fs array<double>, "
+                   "deltas array<double>, n bigint", np.int64,
+                   lambda: LossyCounter(support, error_tolerance), load,
+                   dump, lambda lc, v: lc.observe_batch(v))
+    return _fold(stream_df, [group_col], "lossy_state_stream", store,
+                 tokens_col, emit,
+                 f"{group_col} string, token bigint, est_freq double, "
+                 "f bigint, n bigint", order_col=order_col)
 
 
 def moments_state_stream(stream_df, group_col: str,
                          value_col: str = "value",
                          order_col: str = "event_id"):
     """Streaming running moments: per-group count + error-free dd sums of
-    x..x^4 (core/doubledouble.Moments) living in the state store — the
-    76-byte streaming profile of a value column (live mean / variance /
-    skew / kurtosis per key), exactly-once via the engine's state
-    checkpointing.
+    x..x^4 (core/doubledouble.Moments) living in the state store as its
+    76-byte ``mom`` wire bytes — the streaming profile of a value column
+    (live mean / variance / skew / kurtosis per key), exactly-once via
+    the engine's state checkpointing.
 
     Each trigger extends the SAME summary, so after k triggers the state
     equals a batch Moments fed the concatenated per-trigger streams
@@ -177,41 +228,36 @@ def moments_state_stream(stream_df, group_col: str,
     chunking; NULL values drop, matching the batch build). Emission per
     trigger: (group, n, mean, variance, skew, kurtosis) in update mode.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..core.doubledouble import Moments
-
-    if order_col not in stream_df.columns:
-        raise ValueError(
-            f"moments_state_stream: order_col {order_col!r} not in the "
-            f"stream ({stream_df.columns}) — the dd reduction order would "
-            f"silently depend on Arrow chunking")
-    out_schema = (f"{group_col} string, n bigint, mean double, "
-                  "variance double, skew double, kurtosis double")
-    state_schema = "n bigint, s array<double>"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        m = Moments()
-        if state.exists:
-            n, s = state.get
-            m = Moments(int(n), np.asarray(s, dtype=np.float64))
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True)
-            if order_col in rows.columns:
-                rows = rows.sort_values(order_col, kind="stable")
-            vals = rows[value_col].dropna().to_numpy(dtype=np.float64)
-            if len(vals):
-                m.update_batch(vals)
-        state.update((int(m.n), [float(x) for x in m.s.ravel()]))
+    def emit(key, m, _):
         n, mean, var, skew, kurt = m.stats()
-        yield pd.DataFrame({group_col: [key[0]], "n": [n],
-                            "mean": [mean], "variance": [var],
-                            "skew": [skew], "kurtosis": [kurt]})
+        return pd.DataFrame({group_col: [key[0]], "n": [n],
+                             "mean": [mean], "variance": [var],
+                             "skew": [skew], "kurtosis": [kurt]})
 
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold(stream_df, [group_col], "moments_state_stream",
+                 _kind_store("mom"), value_col, emit,
+                 f"{group_col} string, n bigint, mean double, "
+                 "variance double, skew double, kurtosis double",
+                 order_col=order_col)
+
+
+def _quantile_rows(group_col: str, qs, emit_state: bool, estimates):
+    """Emission of the quantile streams: one ``(group, n, q, est)`` row
+    per requested quantile, plus the state bytes when ``emit_state``;
+    nothing for a sketch with no values yet (quantiles undefined)."""
+
+    def emit(key, s, _):
+        if not s.n:
+            return None
+        out = {group_col: key[0], "n": s.n, "q": list(qs),
+               "est": estimates(s)}
+        if emit_state:
+            out["sketch"] = [s.to_bytes()] * len(qs)
+        return pd.DataFrame(out)
+
+    schema = f"{group_col} string, n bigint, q double, est double"
+    return emit, schema + (", sketch binary" if emit_state else "")
 
 
 def ddsketch_state_stream(stream_df, group_col: str,
@@ -234,51 +280,20 @@ def ddsketch_state_stream(stream_df, group_col: str,
 
     Emission per trigger: one row per requested quantile
     ``(group, n, q, est)``. NULL values drop (matching the batch build's
-    isNotNull filter); a group whose values so far are all NULL keeps its
-    state but emits nothing (quantiles of an empty sketch are undefined).
-    State size is bounded by log_gamma(max/min) buckets (~KB at
-    alpha=0.01) regardless of stream length. ``emit_state=True``
-    additionally emits the serialized sketch bytes on every row — the
-    byte-identity claim is asserted against the batch build through this
-    surface in tests."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..core.ddsketch import DDSketch
-
-    out_schema = f"{group_col} string, n bigint, q double, est double"
-    if emit_state:
-        out_schema += ", sketch binary"
-    state_schema = "sketch binary"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (blob,) = state.get
-            s = DDSketch.from_bytes(bytes(blob))
-        else:
-            s = DDSketch(alpha)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            vals = (pd.concat(chunks, ignore_index=True)[value_col]
-                    .dropna().to_numpy(dtype=np.float64))
-            # DDSketch.update_batch raises on negative / non-finite input;
-            # in a stream that would wedge the query forever (the
-            # checkpointed batch retries and re-fails), so drop those
-            # records here instead — the batch path keeps the loud raise
-            vals = vals[np.isfinite(vals) & (vals >= 0)]
-            if len(vals):
-                s.update_batch(vals)
-        wire = s.to_bytes()
-        state.update((wire,))
-        if s.n:
-            out = {group_col: key[0], "n": s.n, "q": list(qs),
-                   "est": [s.quantile(q) for q in qs]}
-            if emit_state:
-                out["sketch"] = [wire] * len(qs)
-            yield pd.DataFrame(out)
-
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    isNotNull filter); negative and non-finite values drop too, where the
+    batch build raises (in a stream the raise would wedge the query: the
+    checkpointed batch retries and re-fails). A group whose values so far
+    all dropped keeps its state but emits nothing (quantiles of an empty
+    sketch are undefined). State size is bounded by log_gamma(max/min)
+    buckets (~KB at alpha=0.01) regardless of stream length.
+    ``emit_state=True`` additionally emits the serialized sketch bytes on
+    every row — the byte-identity claim is asserted against the batch
+    build through this surface in tests."""
+    emit, out_schema = _quantile_rows(
+        group_col, qs, emit_state, lambda s: [s.quantile(q) for q in qs])
+    return _fold(stream_df, [group_col], "ddsketch_state_stream",
+                 _kind_store("dd", alpha=alpha), value_col, emit,
+                 out_schema, keep=_finite_nonneg)
 
 
 def req_state_stream(stream_df, group_col: str, value_col: str = "value",
@@ -300,46 +315,11 @@ def req_state_stream(stream_df, group_col: str, value_col: str = "value",
     requested quantile ``(group, n, q, est)``; ``emit_state=True`` adds
     the serialized sketch bytes per row so tests can assert the
     state == order-pinned batch twin byte contract directly."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..core.req import REQ
-
-    if order_col not in stream_df.columns:
-        raise ValueError(
-            f"req_state_stream: order_col {order_col!r} not in the stream "
-            f"({stream_df.columns}) — the compaction order would silently "
-            f"depend on Arrow chunking, breaking the batch-twin contract")
-    out_schema = f"{group_col} string, n bigint, q double, est double"
-    if emit_state:
-        out_schema += ", sketch binary"
-    state_schema = "sketch binary"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (blob,) = state.get
-            s = REQ.from_bytes(bytes(blob))
-        else:
-            s = REQ(k)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = pd.concat(chunks, ignore_index=True)
-            if order_col in rows.columns:
-                rows = rows.sort_values(order_col, kind="stable")
-            vals = rows[value_col].dropna().to_numpy(dtype=np.float64)
-            if len(vals):
-                s.update_batch(vals)
-        wire = s.to_bytes()
-        state.update((wire,))
-        if s.n:
-            out = {group_col: key[0], "n": s.n, "q": list(qs),
-                   "est": s.quantiles(list(qs))}
-            if emit_state:
-                out["sketch"] = [wire] * len(qs)
-            yield pd.DataFrame(out)
-
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    emit, out_schema = _quantile_rows(
+        group_col, qs, emit_state, lambda s: s.quantiles(list(qs)))
+    return _fold(stream_df, [group_col], "req_state_stream",
+                 _kind_store("req", k=k), value_col, emit, out_schema,
+                 order_col=order_col)
 
 
 def windowed_hll_stream(stream_df, ts_col: str, group_col: str,
@@ -350,13 +330,13 @@ def windowed_hll_stream(stream_df, ts_col: str, group_col: str,
     passes a window's end, its sketch is finalized, emitted once (append
     mode) and evicted from the state store. Late rows behind the watermark
     are dropped by Spark before they reach the operator — the standard
-    late-data contract, here applied to a custom sketch aggregate.
+    late-data contract, here applied to a custom sketch aggregate. NULL
+    keys drop but count toward ``n_rows``.
 
     Returns an append-mode stream of
     (group, win_start, win_end, est_distinct, n_rows).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     # Window bounds reach the state function as NAIVE datetimes rendered in
     # the SESSION timezone (withWatermark only accepts TIMESTAMP — Spark
@@ -417,53 +397,18 @@ def windowed_hll_stream(stream_df, ts_col: str, group_col: str,
            .select(group_col, F.col("win.start").alias("win_start"),
                    F.col("win.end").alias("win_end"), key_col, ts_col))
 
-    out_schema = (f"{group_col} string, win_start timestamp, "
-                  "win_end timestamp, est_distinct double, n_rows bigint")
-    state_schema = "sketch binary, n_rows bigint"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        group, win_start, win_end = key
-        if state.hasTimedOut:
-            blob, n_rows = state.get
-            t = hll.from_bytes(bytes(blob))
-            state.remove()
-            yield pd.DataFrame({group_col: [group],
-                                "win_start": [win_start],
-                                "win_end": [win_end],
-                                "est_distinct": [hll.card(t)],
-                                "n_rows": [n_rows]})
-            return
-        if state.exists:
-            blob, n_rows = state.get
-            t = hll.from_bytes(bytes(blob))
-        else:
-            t, n_rows = hll.make_p(p), 0
-        for pdf in pdfs:
-            col = pdf[key_col]
-            if col.isna().any():
-                # one NULL promotes the batch to float64: NaN would cast
-                # to garbage INT64_MIN and full-range keys above 2^53
-                # would round — drop the NULLs and refuse lossy batches
-                # (same contract as operators/dedup.bloom_probe_udf)
-                col = col.dropna()
-                f = col.to_numpy(dtype=np.float64)
-                if len(f) and (np.abs(f) >= 2.0 ** 53).any():
-                    raise ValueError(
-                        "windowed_hll_stream: NULL keys promoted the "
-                        "batch to float64 and keys exceed 2^53 — filter "
-                        "NULL keys upstream to keep the column int64")
-            vals = col.to_numpy(dtype=np.int64)
-            if len(vals):
-                hll.add_batch(t, wang64(vals.view(U64)))
-            n_rows += len(pdf)
-        state.update((hll.to_bytes(t), n_rows))
+    return _fold(
+        src, [group_col, "win_start", "win_end"], "windowed_hll_stream",
+        _kind_store("hll", p=p), key_col,
+        lambda key, s, c: pd.DataFrame({
+            group_col: [key[0]], "win_start": [key[1]],
+            "win_end": [key[2]], "est_distinct": [hll.card(s.t)],
+            "n_rows": [c[0]]}),
+        f"{group_col} string, win_start timestamp, win_end timestamp, "
+        "est_distinct double, n_rows bigint",
+        counters={"n_rows": lambda rows, v: len(rows)},
         # finalize when the event-time watermark passes the window end
-        state.setTimeoutTimestamp(_epoch_ms(win_end))
-
-    return (src.groupBy(group_col, "win_start", "win_end")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "append",
-                                    GroupStateTimeout.EventTimeTimeout))
+        timeout=lambda key: _epoch_ms(key[2]))
 
 
 def kll_drift_stream(stream_df, group_col: str, baseline: "dict[str, bytes]",
@@ -492,37 +437,39 @@ def kll_drift_stream(stream_df, group_col: str, baseline: "dict[str, bytes]",
     deterministic per trigger schedule, not byte-stable across replans —
     the emitted KS is ESTIMATE-level gated (the guarantee band), exactly
     like the batch ``ks_sketch_report``."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..core.kll import KLL
     from ..operators.drift import kll_ks
 
-    out_schema = f"{group_col} string, n bigint, ks double"
-    state_schema = "sketch binary"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (blob,) = state.get
-            s = KLL.from_bytes(bytes(blob))
-        else:
-            s = KLL(k=k, seed=7)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            vals = (pd.concat(chunks, ignore_index=True)[value_col]
-                    .dropna().to_numpy(dtype=np.float64))
-            vals = vals[np.isfinite(vals)]
-            if len(vals):
-                s.update_batch(vals)
-        wire = s.to_bytes()
-        state.update((wire,))
+    def emit(key, s, _):
         base = baseline.get(key[0])
         if s.n and base is not None:
-            yield pd.DataFrame({group_col: [key[0]], "n": [s.n],
-                                "ks": [kll_ks(wire, base)]})
+            return pd.DataFrame({group_col: [key[0]], "n": [s.n],
+                                 "ks": [kll_ks(s.to_bytes(), base)]})
+        return None
 
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold(stream_df, [group_col], "kll_drift_stream",
+                 _kind_store("kll", k=k, seed=7), value_col, emit,
+                 f"{group_col} string, n bigint, ks double",
+                 keep=np.isfinite)
+
+
+def _dd_pair_stream(stream_df, group_col, baseline, value_col, alpha,
+                    where, stat, pair):
+    """The dd drift monitors: ``(group, n, n_bins, <stat>)`` from
+    ``pair(live, baseline)`` -> (n_bins, value), for groups with a
+    baseline."""
+
+    def emit(key, s, _):
+        base = baseline.get(key[0])
+        if s.n and base is not None:
+            n_bins, val = pair(s, get_kind("dd").load(bytes(base)))
+            return pd.DataFrame({group_col: [key[0]], "n": [int(s.n)],
+                                 "n_bins": [n_bins], stat: [val]})
+        return None
+
+    return _fold(stream_df, [group_col], where,
+                 _kind_store("dd", alpha=alpha), value_col, emit,
+                 f"{group_col} string, n bigint, n_bins bigint, "
+                 f"{stat} double", keep=_finite_nonneg)
 
 
 def dd_psi_stream(stream_df, group_col: str, baseline: "dict[str, bytes]",
@@ -545,38 +492,11 @@ def dd_psi_stream(stream_df, group_col: str, baseline: "dict[str, bytes]",
     batch forever, the ddsketch_state_stream posture); the baseline
     dict rides the task closure (KB per group — bound the keyspace).
     Emits ``(group, n, n_bins, psi)`` per trigger."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..core.ddsketch import DDSketch
     from ..operators.drift import dd_psi_pair
 
-    out_schema = f"{group_col} string, n bigint, n_bins bigint, psi double"
-    state_schema = "sketch binary"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (blob,) = state.get
-            s = DDSketch.from_bytes(bytes(blob))
-        else:
-            s = DDSketch(alpha)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            vals = (pd.concat(chunks, ignore_index=True)[value_col]
-                    .dropna().to_numpy(dtype=np.float64))
-            vals = vals[np.isfinite(vals) & (vals >= 0)]
-            if len(vals):
-                s.update_batch(vals)
-        state.update((s.to_bytes(),))
-        base = baseline.get(key[0])
-        if s.n and base is not None:
-            n_bins, psi = dd_psi_pair(s, DDSketch.from_bytes(bytes(base)),
-                                      smooth)
-            yield pd.DataFrame({group_col: [key[0]], "n": [int(s.n)],
-                                "n_bins": [n_bins], "psi": [psi]})
-
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _dd_pair_stream(stream_df, group_col, baseline, value_col, alpha,
+                           "dd_psi_stream", "psi",
+                           lambda live, base: dd_psi_pair(live, base, smooth))
 
 
 def priority_sample_stream(stream_df, group_col: str, k: int,
@@ -597,17 +517,15 @@ def priority_sample_stream(stream_df, group_col: str, k: int,
     Contracts: ids and weights must be INTEGER COLUMNS — checked against
     the stream schema at construction time (plan-time fail-fast, not a
     wedged checkpointed batch; inside a batch, NULL-promoted float64
-    values of a long column convert back exactly). NULL id/weight rows
-    drop and do not count toward n_seen; zero weights drop inside the
-    core state and cannot bias estimates. Emits ``(group, n_seen,
-    n_sample, tau, est_total)`` per trigger; est_total is the DLT
-    estimate of the TOTAL ingested weight (the subset-sum estimator at
-    S = everything).
+    values of a long column convert back exactly, or raise from 2^53 on).
+    NULL id/weight rows drop and do not count toward n_seen; zero weights
+    drop inside the core state and cannot bias estimates. Emits
+    ``(group, n_seen, n_sample, tau, est_total)`` per trigger; est_total
+    is the DLT estimate of the TOTAL ingested weight (the subset-sum
+    estimator at S = everything).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    from ..core.prioritysample import PrioritySample
     from ..operators.splits import _priority_inputs
 
     int_types = (ByteType, ShortType, IntegerType, LongType)
@@ -618,47 +536,20 @@ def priority_sample_stream(stream_df, group_col: str, k: int,
                 f"type, got {stream_df.schema[c].dataType}")
 
     _, prio = _priority_inputs(id_col, weight_col, seed)
-    src = stream_df.withColumn("_prio", prio)
-    out_schema = (f"{group_col} string, n_seen bigint, n_sample bigint, "
-                  "tau double, est_total double")
-    state_schema = "sketch binary, n_seen bigint"
 
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            blob, n_seen = state.get
-            s = PrioritySample.from_bytes(bytes(blob))
-            n_seen = int(n_seen)
-        else:
-            s, n_seen = PrioritySample(k), 0
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            ok = (pdf[id_col].notna() & pdf[weight_col].notna()
-                  & pdf["_prio"].notna())
-            pdf = pdf[ok]
-            if len(pdf):
-                # long columns arrive float64 after pandas NULL promotion;
-                # that conversion is exact only below 2^53 — verify the
-                # round-trip instead of trusting it (ids/weights >= 2^53
-                # would otherwise be silently mangled)
-                s.update_batch(
-                    _exact_int64(pdf[id_col], "priority_sample_stream",
-                                 id_col),
-                    _exact_int64(pdf[weight_col],
-                                 "priority_sample_stream", weight_col),
-                    pdf["_prio"].to_numpy(np.float64))
-                n_seen += len(pdf)
-        state.update((s.to_bytes(), n_seen))
-        if n_seen:
-            yield pd.DataFrame({group_col: [key[0]],
-                                "n_seen": [n_seen],
-                                "n_sample": [len(s.items())],
-                                "tau": [s.tau],
-                                "est_total": [s.estimate_total()]})
+    def emit(key, s, c):
+        if not c[0]:
+            return None
+        return pd.DataFrame({group_col: [key[0]], "n_seen": [c[0]],
+                             "n_sample": [len(s.items())], "tau": [s.tau],
+                             "est_total": [s.estimate_total()]})
 
-    return (src.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold(stream_df.withColumn("_prio", prio), [group_col],
+                 "priority_sample_stream", _kind_store("ps", k=k),
+                 [id_col, weight_col, "_prio"], emit,
+                 f"{group_col} string, n_seen bigint, n_sample bigint, "
+                 "tau double, est_total double",
+                 counters={"n_seen": lambda rows, v: len(v)})
 
 
 def dd_ks_stream(stream_df, group_col: str, baseline: "dict[str, bytes]",
@@ -675,34 +566,7 @@ def dd_ks_stream(stream_df, group_col: str, baseline: "dict[str, bytes]",
     dd_psi_stream: no-baseline groups accumulate silently; NULL/NaN/inf
     and negative values drop; the baseline dict rides the task closure
     (KB per group). Emits ``(group, n, n_bins, ks)`` per trigger."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..core.ddsketch import DDSketch
     from ..operators.drift import dd_ks_pair
 
-    out_schema = f"{group_col} string, n bigint, n_bins bigint, ks double"
-    state_schema = "sketch binary"
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (blob,) = state.get
-            s = DDSketch.from_bytes(bytes(blob))
-        else:
-            s = DDSketch(alpha)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            vals = (pd.concat(chunks, ignore_index=True)[value_col]
-                    .dropna().to_numpy(dtype=np.float64))
-            vals = vals[np.isfinite(vals) & (vals >= 0)]
-            if len(vals):
-                s.update_batch(vals)
-        state.update((s.to_bytes(),))
-        base = baseline.get(key[0])
-        if s.n and base is not None:
-            n_bins, ks = dd_ks_pair(s, DDSketch.from_bytes(bytes(base)))
-            yield pd.DataFrame({group_col: [key[0]], "n": [int(s.n)],
-                                "n_bins": [n_bins], "ks": [ks]})
-
-    return (stream_df.groupBy(group_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _dd_pair_stream(stream_df, group_col, baseline, value_col, alpha,
+                           "dd_ks_stream", "ks", dd_ks_pair)

@@ -35,8 +35,10 @@ def main() -> int:
         print("usage: check_queries.py name [name ...]")
         return 2
     from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
+    # one worker thread and one shuffle partition per usable core
+    cores = len(os.sched_getaffinity(0))
+    spark = (SparkSession.builder.master(f"local[{cores}]")
+             .config("spark.sql.shuffle.partitions", str(cores))
              .config("spark.driver.memory", "8g")
              .config("spark.ui.enabled", "false")
              .appName("check-queries").getOrCreate())

@@ -89,6 +89,25 @@ def test_default_max_words_is_bounded(spark, corpus):
     assert m_default == m_none and seg_default == seg_none
 
 
+def test_max_words_cap_warns_when_it_truncates(spark):
+    """A histogram cut at max_words says so with one UserWarning naming
+    the cap and the exact opt-out; a cap the corpus fits under is
+    silent."""
+    import warnings
+
+    five = spark.createDataFrame([(0, "a bb ccc dddd eeeee a bb a")],
+                                 "doc_id long, text string")
+    with pytest.warns(UserWarning, match="max_words=3.*max_words=None"):
+        _, seg = bpe_learn(five, n_merges=2, max_words=3)
+    assert set(seg) == {"a", "bb", "ccc"}
+    for cap in (5, None):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            _, seg = bpe_learn(five, n_merges=2, max_words=cap)
+        assert not [w for w in caught if "max_words" in str(w.message)]
+        assert len(seg) == 5
+
+
 def test_validation_errors(spark, corpus):
     with pytest.raises(ValueError, match="n_merges"):
         bpe_learn(corpus, n_merges=0)

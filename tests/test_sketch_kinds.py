@@ -107,3 +107,70 @@ def test_weighted_rows_aggregates_match_direct_builds(spark):
             KINDS[name].update(want, np.rec.fromarrays(
                 [np.array([r[c] for r in kept]) for c in cols]))
             assert bytes(got[g][name]) == want.to_bytes(), (g, name)
+
+
+def test_pandas_values_follows_the_batch_contract():
+    """The pandas value reader (what the UDAFs and streams read): NULL
+    cells drop; array cells concatenate and their NULL/NaN elements drop;
+    int64 keys pass one exactness guard — int64 passes through untouched,
+    float64 from pandas NULL promotion only below 2^53 (where int->float
+    is injective: a >= 2^53 value may have lost low bits upstream and the
+    mangled float round-trips cleanly, so magnitude is the only sound
+    guard) and only when integral, uint64 only below 2^63 (a bare astype
+    would wrap negative); struct rows with a NULL or NaN field drop."""
+    import pandas as pd
+
+    from grenier_spark.operators.sketch_build import _pandas_values
+
+    def read(cells, dtype=np.int64):
+        return _pandas_values(cells, dtype, "t")
+
+    # scalar cells; a NULL cell drops
+    assert read(pd.Series([7, None, 9], name="id")).tolist() == [7, 9]
+    # array cells: a NULL element reaches pandas as NaN in float64 arrays
+    cells = pd.Series([np.array([1.0, np.nan, 3.0]), None,
+                       np.array([4.0, 5.0])], name="tokens")
+    out = read(cells)
+    assert out.dtype == np.int64 and out.tolist() == [1, 3, 4, 5]
+    assert read(pd.Series([[1, None, 3]])).tolist() == [1, 3]
+    assert read(cells, np.float64).tolist() == [1.0, 3.0, 4.0, 5.0]
+
+    ints = pd.Series(np.int64([1, 2, (1 << 62) + 3]))
+    out = read(ints)
+    assert out.dtype == np.int64 and out.tolist() == ints.tolist()
+    assert read(pd.Series(np.int64([1 << 53]))).tolist() == [1 << 53]
+    # float64 holding exactly-representable sub-2^53 values: converts
+    ok = pd.Series(np.float64([3.0, float((1 << 53) - 1)]))
+    assert read(ok).tolist() == [3, (1 << 53) - 1]
+    # 2^53+1 promotes to float64(2^53) and round-trips cleanly — the
+    # corruption is upstream and undetectable, so magnitude must raise
+    bad = pd.Series(np.float64([float(2**53 + 1)]), name="id")
+    with pytest.raises(ValueError, match="'id'.*2\\^53"):
+        read(bad)
+    with pytest.raises(ValueError, match="2\\^53"):
+        read(pd.Series([np.array([float(1 << 53), np.nan])]))
+    with pytest.raises(ValueError, match="non-integral"):
+        read(pd.Series(np.float64([3.5])))
+    # uint64 representable as int64: converts; >= 2^63: raises
+    oku = pd.Series(np.uint64([1, (1 << 63) - 1]))
+    assert read(oku).tolist() == [1, (1 << 63) - 1]
+    with pytest.raises(ValueError, match="2\\^63"):
+        read(pd.Series(np.uint64([1 << 63])))
+
+    # struct rows, as dict cells (a UDAF) or a frame of fields (a stream):
+    # an int field NULL-promoted to float converts back exactly
+    dw = get_kind("dw").dtype
+    rows = read(pd.Series([{"v": 1.5, "w": 2.0}, {"v": None, "w": 3.0},
+                           None, {"v": 2.5, "w": None},
+                           {"v": float("nan"), "w": 1.0},
+                           {"v": 4.0, "w": 5.0}]), dw)
+    assert rows[rows.dtype.names[0]].tolist() == [1.5, 4.0]
+    assert rows[rows.dtype.names[1]].dtype == np.int64
+    assert rows[rows.dtype.names[1]].tolist() == [2, 5]
+    frame = pd.DataFrame({"id": [1.0, 2.0, None], "w": [3.0, None, 1.0],
+                          "prio": [0.5, 0.25, 0.125]})
+    ps = read(frame, get_kind("ps").dtype)
+    assert len(ps) == 1 and ps[0].tolist() == (1, 3, 0.5)
+    with pytest.raises(ValueError, match="'w'.*non-integral"):
+        read(pd.DataFrame({"id": [1], "w": [0.5], "prio": [1.0]}),
+             get_kind("ps").dtype)

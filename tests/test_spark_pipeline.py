@@ -753,6 +753,21 @@ def test_udaf_refuses_lossy_nullable_int64(spark):
     assert ok.groupBy("g").agg(hll_agg_col("k").alias("s")).count() == 1
 
 
+def test_udaf_drops_null_token_elements_like_batch(spark):
+    """A NULL element inside a token array drops, as in the batch build:
+    the aggregate is byte-equal to build_sketches over the same rows (the
+    NaN-promoted element used to hash as the key INT64_MIN)."""
+    from grenier_spark.functions.aggregates import hll_agg_col
+
+    df = spark.createDataFrame([("a", [1, None, 3]), ("a", [4, 5])],
+                               "g string, t array<bigint>")
+    batch = build_sketches(df, [SketchSpec.of("h", "hll", "t", p=10)],
+                           group_cols=["g"]).first()
+    got = df.groupBy("g").agg(hll_agg_col("t", p=10).alias("s")).first()
+    assert batch.n_values == 4
+    assert bytes(got.s) == bytes(batch.sketch)
+
+
 def test_mom_distributed_build_matches_fsum(spark, docs_df):
     """Moments (kind 'mom') through the two-level pipeline: power sums per
     group equal math.fsum of the identical per-element power chain over

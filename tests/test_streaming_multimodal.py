@@ -586,6 +586,91 @@ def test_stateful_hll_stream_skips_null_token_cells(spark, tmp_path):
     assert abs(last.est_distinct - 4) < 0.5  # {1,2,3,4}
 
 
+def _null_element_stream(spark, tmp_path):
+    """The rows ("a", [1, NULL, 3]), ("a", [4, 5]) as a one-file stream:
+    the NULL token element reaches pandas as NaN in a float64 array."""
+    import pandas as pd
+
+    schema = "doc_id string, tokens array<bigint>, source string"
+    src_dir = str(tmp_path / "null_elem_src")
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": ["d0", "d1"],
+                      "tokens": [[1, None, 3], [4, 5]],
+                      "source": ["a", "a"]}), schema
+    ).coalesce(1).write.parquet(src_dir)
+    return spark.readStream.schema(schema).parquet(src_dir)
+
+
+def _run_update_stream(out, tmp_path, name):
+    q = (out.writeStream.outputMode("update").format("memory")
+         .queryName(name)
+         .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    return out.sparkSession.sql(f"select * from {name}").toPandas()
+
+
+def test_stateful_hll_stream_drops_null_token_elements(spark, tmp_path):
+    """A NULL element inside a token array drops, as in the batch build:
+    the stream emits the batch estimate and counts only the non-NULL
+    tokens (the element used to become the phantom key INT64_MIN)."""
+    from grenier_spark.operators.sketch_build import build_sketches
+    from grenier_spark.streaming.stateful import hll_state_stream
+
+    stream = _null_element_stream(spark, tmp_path)
+    last = _run_update_stream(hll_state_stream(stream, "source", p=10),
+                              tmp_path, "null_elem_hll").iloc[-1]
+    batch = build_sketches(
+        spark.createDataFrame([("a", [1, None, 3]), ("a", [4, 5])],
+                              "source string, tokens array<bigint>"),
+        [SketchSpec.of("h", "hll", "tokens", p=10)], ["source"]).first()
+    assert batch.n_values == 4
+    assert last.est_distinct == hll.card(hll.from_bytes(bytes(batch.sketch)))
+    assert last.n_docs == 2 and last.n_tokens == 4
+
+
+def test_lossy_state_stream_drops_null_token_elements(spark, tmp_path):
+    """lossy_state_stream over a token array with one NULL element: the
+    report equals a batch counter fed the non-NULL tokens in doc order."""
+    from grenier_spark.core.countish import LossyCounter
+    from grenier_spark.streaming.stateful import lossy_state_stream
+
+    stream = _null_element_stream(spark, tmp_path)
+    # a support this low reports every token, so the report shows n
+    got = _run_update_stream(
+        lossy_state_stream(stream, "source", support=0.001,
+                           error_tolerance=0.01),
+        tmp_path, "null_elem_lossy")
+    lc = LossyCounter(0.001, 0.01)
+    lc.observe_batch(np.array([1, 3, 4, 5], dtype=np.int64))
+    want = {(t, int(lc.f[t]), lc.n) for t in lc.f
+            if (lc.f[t] + lc.delta[t]) / lc.n >= 0.001}
+    assert want == {(1, 1, 4), (3, 1, 4), (4, 1, 4), (5, 1, 4)}
+    assert {(int(r.token), int(r.f), int(r.n))
+            for r in got.itertuples()} == want
+
+
+def test_order_col_missing_from_stream_raises(spark, tmp_path):
+    """Every operator that takes order_col refuses a stream without it at
+    construction, naming the column: the within-trigger order would
+    otherwise silently depend on Arrow chunking."""
+    from grenier_spark.streaming.stateful import (lossy_state_stream,
+                                                  moments_state_stream,
+                                                  req_state_stream)
+
+    src_dir = tmp_path / "no_order"
+    src_dir.mkdir()
+    tokens = spark.readStream.schema(
+        "tokens array<bigint>, source string").parquet(str(src_dir))
+    with pytest.raises(ValueError, match="'doc_id'"):
+        lossy_state_stream(tokens, "source", "tokens")
+    values = spark.readStream.schema(
+        "event_type string, value double").parquet(str(src_dir))
+    for op in (moments_state_stream, req_state_stream):
+        with pytest.raises(ValueError, match="'event_id'"):
+            op(values, "event_type")
+
+
 def test_moments_state_stream_matches_batch_twin(spark, tmp_path):
     """Streaming running moments: state after two triggers (split across a
     query RESTART on one checkpoint) must equal a batch Moments fed the
@@ -1061,39 +1146,6 @@ def test_priority_sample_stream_exact_across_restart(spark, tmp_path):
                   .schema("doc_id long, source string, w double")
                   .option("maxFilesPerTrigger", "16").parquet(src_dir))
         priority_sample_stream(stream, "source", k=3, weight_col="w")
-
-
-def test_exact_int64_guards_null_promoted_longs():
-    """_exact_int64 (the priority_sample_stream conversion path): int64
-    passes through untouched; float64 from pandas NULL promotion is
-    accepted only below 2^53 (where int->float is injective) — a
-    >= 2^53 value that may have lost low bits upstream raises instead of
-    silently mangling the sample (the mangled float round-trips cleanly,
-    so magnitude is the only sound guard), and non-integral floats
-    raise too."""
-    import pandas as pd
-
-    from grenier_spark.streaming.stateful import _exact_int64
-
-    ints = pd.Series(np.int64([1, 2, (1 << 62) + 3]))
-    out = _exact_int64(ints, "t", "id")
-    assert out.dtype == np.int64 and out.tolist() == ints.tolist()
-    # float64 holding exactly-representable sub-2^53 values: converts
-    ok = pd.Series(np.float64([3.0, float((1 << 53) - 1)]))
-    assert _exact_int64(ok, "t", "id").tolist() == [3, (1 << 53) - 1]
-    # 2^53+1 promotes to float64(2^53) and round-trips cleanly — the
-    # corruption is upstream and undetectable, so magnitude must raise
-    bad = pd.Series(np.float64([float(2**53 + 1)]))
-    with pytest.raises(ValueError, match="2\\^53"):
-        _exact_int64(bad, "t", "id")
-    with pytest.raises(ValueError, match="non-integral"):
-        _exact_int64(pd.Series(np.float64([3.5])), "t", "id")
-    # uint64 representable as int64: converts; >= 2^63: raises (a bare
-    # astype would wrap negative — the same silent corruption class)
-    oku = pd.Series(np.uint64([1, (1 << 63) - 1]))
-    assert _exact_int64(oku, "t", "id").tolist() == [1, (1 << 63) - 1]
-    with pytest.raises(ValueError, match="2\\^63"):
-        _exact_int64(pd.Series(np.uint64([1 << 63])), "t", "id")
 
 
 def test_dd_ks_stream_exact_across_restart(spark, tmp_path):
