@@ -5056,14 +5056,21 @@ def q_weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDERING IS LOAD-BEARING: the driver's correctness pass certifies the
     # FIRST 50 entries only (each CORRECTNESS_r{N} == the first 50 keys of
-    # that round's dict, key-for-key). Round 5 leads with 50 of the 55
-    # queries that had never received a driver-side CORRECTNESS row after
-    # r04 (all are green in the bitwise-identical in-suite harness,
-    # tests/test_entry_oracles.py); the 5 overflow twins directly follow at
-    # slots 51-55 (each shares an oracle/family with an in-window sibling).
-    # The rotation ledger lives in COVERAGE.md §driver-certification.
+    # that round's dict, key-for-key). Round 6 leads with the 5 queries
+    # that have never received a driver-side CORRECTNESS row (the r5
+    # overflow twins); the first 45 keys of the r5 window (50/50 green in
+    # CORRECTNESS_r05) fill slots 6-50 and its last 5 move to slots 51-55.
+    # Every entry stays green in the bitwise-identical in-suite harness
+    # (tests/test_entry_oracles.py). The rotation ledger lives in
+    # COVERAGE.md §driver-certification.
     return {
-        # -- r5 window: last driver-uncertified gates (1-50) --------------
+        # -- r6 window (1-5): the never-driver-certified gates ------------
+        "priority_subset_estimate_sketch": q_priority_subset_estimate_sketch,
+        "boilerplate_clean_docs": q_boilerplate_clean,
+        "streaming_value_dd_ks": q_streaming_value_dd_ks,
+        "csk_join_size": q_csk_join_size,
+        "stride_interleave_docs": q_stride_interleave_docs,
+        # -- r6 window (6-50): the r5 window, certified in CORRECTNESS_r05 -
         # flagship composition gates first: they certify operator interop
         "training_pipeline_e2e": q_training_pipeline_e2e,
         "tokenized_pipeline_e2e": q_tokenized_pipeline_e2e,
@@ -5115,20 +5122,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_token_kmv_jaccard": q_source_token_kmv_jaccard,
         "value_histogram_kll": q_value_histogram_kll,
         "token_neardup": q_token_neardup,
-        # fold / cube / migration family
+        # -- slots 51-55: fold / cube / migration family (certified r05) ---
         "hll_fold_registers": q_hll_fold_registers,
         "hll_cube_tokens": q_hll_cube_tokens,
         "sketch_fold_cells": q_sketch_fold_cells,
         "hll_precision_migration": q_hll_precision_migration,
         "dd_cube_quantiles": q_dd_cube_quantiles,
-        # -- overflow (51-55): uncertified twins of in-window siblings ----
-        # each shares an oracle or pipeline with a slot-1..50 gate; they
-        # stay gated by the in-suite harness (COVERAGE.md rotation ledger)
-        "priority_subset_estimate_sketch": q_priority_subset_estimate_sketch,
-        "boilerplate_clean_docs": q_boilerplate_clean,
-        "streaming_value_dd_ks": q_streaming_value_dd_ks,
-        "csk_join_size": q_csk_join_size,
-        "stride_interleave_docs": q_stride_interleave_docs,
         # -- driver-certified in r01-r04: keep green in-suite -------------
         "string_funcs_parts": q_string_funcs_parts,
         "customers_without_orders": q_customers_without_orders,

@@ -5,8 +5,14 @@ Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32) and prints
 ONE JSON line::
 
-    {"metric": "...", "value": <total wall sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": ..., "tokens_per_sec": ...}
+    {"metric": "...", "schema_version": 2, "value": <total wall sec>,
+     "unit": "sec", "queries": {...per-query sec...}, "sf": ...,
+     "tokens_per_sec": ...}
+
+``schema_version`` 2 is the first to carry the key. From it on,
+``tokens_per_sec`` is the best of the two byte-identical scan paths
+(Arrow and native reader), and ``tokens_per_sec_arrow`` carries the
+Arrow-path meaning ``tokens_per_sec`` had in rounds 1-4 (no key).
 
 The headline number is sketch-build throughput (tokens/sec) over the
 deterministic synthetic docs_bench table (FIXTURES.md §1: 2M docs, ~272M
@@ -36,6 +42,8 @@ BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
 # native-reader task count (round-5 sweep; see build_sketches_from_files
 # docstring) — single source for both the call site and the output JSON
 NATIVE_N_TASKS = 24
+# version of the output JSON's keys and their meanings (module docstring)
+SCHEMA_VERSION = 2
 
 
 def make_spark(cpus: int, task_cpus: int = 1):
@@ -391,6 +399,7 @@ def run_default():
                      <= timings["sketch_build_rep_native"] else native_loud)
     print(json.dumps({
         "metric": "sketch-build tokens/sec + headline query wall time",
+        "schema_version": SCHEMA_VERSION,
         "value": total,
         "unit": "sec",
         "queries": timings,

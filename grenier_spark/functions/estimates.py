@@ -1,40 +1,36 @@
 """Estimate-extraction Columns over serialized sketch states (BinaryType).
 
-Sketch states are KB-sized, so these pandas UDFs touch a handful of rows —
-never the token-scale data. Each deserializes the wire format produced by
-operators.sketch_build and evaluates the estimator kernel.
+Sketch states are KB-sized, so these UDFs touch a handful of rows — never
+the token-scale data. Each is one call of the UDF helper
+(``functions._udf``): the helper loads every sketch argument through the
+kind table (``get_kind(kind).load``, the wire format produced by
+operators.sketch_build) and the body here evaluates the estimator kernel.
+NULL in, NULL out: a NULL sketch (say, a group a left join found no sketch
+for), a NULL key or a NULL plain argument gives a NULL estimate.
+
+The estimators also exposed to SQL (functions/register.py) are the
+module-level bodies below, so each has one body for both surfaces.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..core import hll
-from ..core.bloom import Bloom
-from ..core.cuckoo import Cuckoo
-from ..core.countmin import CountMin
-from ..core.ddsketch import DDSketch
-from ..core.kll import KLL
-from ..core.req import REQ
-from ..core.tdigest import TDigest
+from ._udf import probe_udf, row_udf
 
-
-def _col(c: "Column | str") -> Column:
-    return F.col(c) if isinstance(c, str) else c
+_hll_card = row_udf("double", lambda s: hll.card(s.t), "hll")
+_hll_card_orig = row_udf("double", lambda s: hll.card_hll(s.t), "hll")
+_bloom_card = row_udf("double", lambda s: s.cardinality(), "bloom")
+_ddsum_value = row_udf("double", lambda s: s.value(), "ddsum")
+_kmv_est = row_udf("double", lambda s: s.estimate(), "kmv")
+_csk_f2 = row_udf("long", lambda s: s.f2(), "csk")
 
 
 def hll_card_col(col: "Column | str") -> Column:
     """HLL++ cardinality estimate of a serialized HLL state (hll.ml:142-155)."""
-
-    @pandas_udf("double")
-    def _hll_card(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: hll.card(hll.from_bytes(bytes(b))))
-
-    return _hll_card(_col(col))
+    return _hll_card(col)
 
 
 def hll_merge_col(a: "Column | str", b: "Column | str") -> Column:
@@ -44,16 +40,11 @@ def hll_merge_col(a: "Column | str", b: "Column | str") -> Column:
     merged state, intersection from inclusion-exclusion — all on KB-sized
     states, never rescanning data. Raises on mismatched precision
     (merge precondition Q6)."""
+    def merge(u, v):
+        u.merge(v)
+        return u.to_bytes()
 
-    @pandas_udf("binary")
-    def _m(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        def one(x, y):
-            u = hll.from_bytes(bytes(x))
-            hll.merge(u, hll.from_bytes(bytes(y)))
-            return hll.to_bytes(u)
-        return pd.Series([one(x, y) for x, y in zip(xs, ys)])
-
-    return _m(_col(a), _col(b))
+    return row_udf("binary", merge, "hll", "hll")(a, b)
 
 
 def hll_fold_col(col: "Column | str", p_new: int) -> Column:
@@ -62,13 +53,9 @@ def hll_fold_col(col: "Column | str", p_new: int) -> Column:
     fold_precision). The production face of cross-precision merging: fold
     a p=14 pipeline's sketch table to match a p=10 archive, then merge —
     KB blobs in, KB blobs out, no rescan of the data that built them."""
-
-    @pandas_udf("binary")
-    def _f(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: hll.to_bytes(
-            hll.fold_precision(hll.from_bytes_any(bytes(b)), p_new)))
-
-    return _f(_col(col))
+    return row_udf("binary",
+                   lambda s: hll.to_bytes(hll.fold_precision(s.t, p_new)),
+                   "hll")(col)
 
 
 def hll_card_orig_col(col: "Column | str") -> Column:
@@ -76,46 +63,16 @@ def hll_card_orig_col(col: "Column | str") -> Column:
     hll.ml:97-112) of a serialized HLL state — kept alongside
     :func:`hll_card_col` for parity with the reference's dual estimator
     surface."""
-
-    @pandas_udf("double")
-    def _hll_card_orig(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: hll.card_hll(hll.from_bytes(bytes(b))))
-
-    return _hll_card_orig(_col(col))
+    return _hll_card_orig(col)
 
 
 def cms_query_col(sketch: "Column | str", key: "Column | str") -> Column:
     """Count-min point estimate for a (sketch, hashed-key) pair."""
-
-    @pandas_udf("long")
-    def _q(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        # one VECTORIZED query per distinct blob (the common shape is one
-        # broadcast sketch against many keys — a per-row query() loop is
-        # the per-row-Python anti-pattern CLAUDE.md bans)
-        out = np.empty(len(blobs), dtype=np.int64)
-        ks = keys.to_numpy(dtype=np.int64).view(np.uint64)
-        codes, uniq = pd.factorize(blobs.map(bytes), sort=False)
-        for c, b in enumerate(uniq):
-            m = codes == c
-            out[m] = CountMin.from_bytes(b).query(ks[m])
-        return pd.Series(out)
-
-    return _q(_col(sketch), _col(key))
+    return probe_udf("long", "cms", "query")(sketch, key)
 
 
 def bloom_contains_col(sketch: "Column | str", key: "Column | str") -> Column:
-    @pandas_udf("boolean")
-    def _c(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        # vectorized per distinct blob, as in cms_query_col above
-        ks = keys.to_numpy(dtype=np.int64).view(np.uint64)
-        out = np.empty(len(blobs), dtype=bool)
-        codes, uniq = pd.factorize(blobs.map(bytes), sort=False)
-        for c, b in enumerate(uniq):
-            m = codes == c
-            out[m] = Bloom.from_bytes(b).contains(ks[m])
-        return pd.Series(out)
-
-    return _c(_col(sketch), _col(key))
+    return probe_udf("boolean", "bloom", "contains")(sketch, key)
 
 
 def cuckoo_contains_col(sketch: "Column | str",
@@ -124,17 +81,7 @@ def cuckoo_contains_col(sketch: "Column | str",
     TRUE is 'maybe present' at the structural fpr ~ 8/2^fp_bits, FALSE is
     'definitely absent'; inserted-and-not-deleted keys are guaranteed
     TRUE (no false negatives — core/cuckoo.py module contract)."""
-    @pandas_udf("boolean")
-    def _c(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        ks = keys.to_numpy(dtype=np.int64).view(np.uint64)
-        out = np.empty(len(blobs), dtype=bool)
-        codes, uniq = pd.factorize(blobs.map(bytes), sort=False)
-        for c, b in enumerate(uniq):
-            m = codes == c
-            out[m] = Cuckoo.from_bytes(b).contains(ks[m])
-        return pd.Series(out)
-
-    return _c(_col(sketch), _col(key))
+    return probe_udf("boolean", "ckf", "contains")(sketch, key)
 
 
 def cuckoo_delete_col(sketch: "Column | str",
@@ -144,49 +91,29 @@ def cuckoo_delete_col(sketch: "Column | str",
     you inserted — core/cuckoo.py contract). The state is KB-sized, so
     rebuilding the blob per row is the cheap path; per-key removal flags
     come from re-probing."""
-    @pandas_udf("binary")
-    def _d(blobs: pd.Series, key_lists: pd.Series) -> pd.Series:
-        def one(b, ks):
-            f = Cuckoo.from_bytes(bytes(b))
-            f.delete_batch(np.asarray(list(ks), dtype=np.int64)
-                           .view(np.uint64))
-            return f.to_bytes()
-        return pd.Series([one(b, ks) for b, ks in zip(blobs, key_lists)])
+    def delete(f, ks):
+        f.delete_batch(np.asarray(ks, dtype=np.int64).view(np.uint64))
+        return f.to_bytes()
 
-    return _d(_col(sketch), _col(keys_array))
+    return row_udf("binary", delete, "ckf", None)(sketch, keys_array)
 
 
 def cuckoo_stats_col(col: "Column | str") -> Column:
     """(n_items, slots_used, load_factor, fpr_bound) of a serialized
     cuckoo filter as a struct column."""
-    @pandas_udf("struct<n_items:long,slots_used:long,"
-                "load_factor:double,fpr_bound:double>")
-    def _s(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in blobs:
-            f = Cuckoo.from_bytes(bytes(b))
-            rows.append((f.n_items, int(np.count_nonzero(f.table)),
-                         f.load_factor(), f.fpr()))
-        return pd.DataFrame(rows, columns=["n_items", "slots_used",
-                                           "load_factor", "fpr_bound"])
-
-    return _s(_col(col))
+    return row_udf("struct<n_items:long,slots_used:long,"
+                   "load_factor:double,fpr_bound:double>",
+                   lambda f: (f.n_items, int(np.count_nonzero(f.table)),
+                              f.load_factor(), f.fpr()), "ckf")(col)
 
 
 def bloom_cardinality_col(col: "Column | str") -> Column:
-    @pandas_udf("double")
-    def _bloom_card(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: Bloom.from_bytes(bytes(b)).cardinality())
-
-    return _bloom_card(_col(col))
+    return _bloom_card(col)
 
 
 def kll_quantiles_col(sketch: "Column | str", qs: "list[float]") -> Column:
-    @pandas_udf("array<double>")
-    def _q(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: KLL.from_bytes(bytes(b)).quantiles(qs).tolist())
-
-    return _q(_col(sketch))
+    return row_udf("array<double>", lambda s: s.quantiles(qs).tolist(),
+                   "kll")(sketch)
 
 
 def kll_histogram_col(sketch: "Column | str", n_buckets: int) -> Column:
@@ -203,44 +130,32 @@ def kll_histogram_col(sketch: "Column | str", n_buckets: int) -> Column:
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
 
-    @pandas_udf("array<struct<bucket:long,lo:double,hi:double,"
-                "est_count:double>>")
-    def _h(blobs: pd.Series) -> pd.Series:
-        bs = np.linspace(0.0, 1.0, n_buckets + 1)
+    bs = np.linspace(0.0, 1.0, n_buckets + 1)
 
-        def one(b):
-            s = KLL.from_bytes(bytes(b))
-            if not s.n:
-                return []
-            edges = s.quantiles(bs)
-            r = s.rank(edges)
-            r[0], r[-1] = 0.0, 1.0  # full mass inside the outer edges
-            return [(i + 1, float(edges[i]), float(edges[i + 1]),
-                     float((r[i + 1] - r[i]) * s.n))
-                    for i in range(n_buckets)]
-        return blobs.map(one)
+    def one(s):
+        if not s.n:
+            return []
+        edges = s.quantiles(bs)
+        r = s.rank(edges)
+        r[0], r[-1] = 0.0, 1.0  # full mass inside the outer edges
+        return [(i + 1, float(edges[i]), float(edges[i + 1]),
+                 float((r[i + 1] - r[i]) * s.n))
+                for i in range(n_buckets)]
 
-    return _h(_col(sketch))
+    return row_udf("array<struct<bucket:long,lo:double,hi:double,"
+                   "est_count:double>>", one, "kll")(sketch)
 
 
 def tdigest_quantiles_col(sketch: "Column | str", qs: "list[float]") -> Column:
-    @pandas_udf("array<double>")
-    def _q(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: TDigest.from_bytes(bytes(b)).quantiles(qs).tolist())
-
-    return _q(_col(sketch))
+    return row_udf("array<double>", lambda s: s.quantiles(qs).tolist(),
+                   "tdigest")(sketch)
 
 
 def req_quantiles_col(sketch: "Column | str", qs: "list[float]") -> Column:
     """REQ quantile estimates (core/req.py, PODS'21): rank error shrinks
     multiplicatively toward the upper tail — the p99/p999 surface."""
-
-    @pandas_udf("array<double>")
-    def _q(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: REQ.from_bytes(bytes(b)).quantiles(qs).tolist())
-
-    return _q(_col(sketch))
+    return row_udf("array<double>", lambda s: s.quantiles(qs).tolist(),
+                   "req")(sketch)
 
 
 def dd_quantiles_col(sketch: "Column | str", qs: "list[float]") -> Column:
@@ -248,58 +163,29 @@ def dd_quantiles_col(sketch: "Column | str", qs: "list[float]") -> Column:
     relative error alpha of the exact rank element — and, uniquely among
     the quantile kinds, reproducible value-exactly in SQL
     (sql_oracles.dd_quantile_sql)."""
-
-    @pandas_udf("array<double>")
-    def _q(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: DDSketch.from_bytes(bytes(b)).quantiles(qs))
-
-    return _q(_col(sketch))
+    return row_udf("array<double>", lambda s: s.quantiles(qs), "dd")(sketch)
 
 
 def dd_buckets_col(sketch: "Column | str") -> Column:
     """Serialized DDSketch state as (bucket, cnt) struct rows — the raw
     log-histogram, byte-level surface for the cross-engine gate (DuckDB
     recomputes each bucket as ceil(ln(x)/ln(gamma)))."""
-
-    @pandas_udf("array<struct<bucket: int, cnt: long>>")
-    def _b(blobs: pd.Series) -> pd.Series:
-        def one(b):
-            s = DDSketch.from_bytes(bytes(b))
-            return [{"bucket": int(i), "cnt": int(c)}
-                    for i, c in zip(s.idx, s.counts)]
-        return blobs.map(one)
-
-    return _b(_col(sketch))
+    return row_udf("array<struct<bucket: int, cnt: long>>",
+                   lambda s: list(zip(s.idx.tolist(), s.counts.tolist())),
+                   "dd")(sketch)
 
 
 def dd_stats_col(sketch: "Column | str") -> Column:
     """DDSketch state summary: total count, zero-bucket count, number of
     log buckets."""
-
-    @pandas_udf("struct<n: long, zero_count: long, n_buckets: long>")
-    def _s(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in blobs:
-            s = DDSketch.from_bytes(bytes(b))
-            rows.append({"n": s.n, "zero_count": s.zero_count,
-                         "n_buckets": len(s.idx)})
-        return pd.DataFrame(rows, columns=["n", "zero_count", "n_buckets"])
-
-    return _s(_col(sketch))
+    return row_udf("struct<n: long, zero_count: long, n_buckets: long>",
+                   lambda s: (s.n, s.zero_count, len(s.idx)), "dd")(sketch)
 
 
 def ddsum_col(col: "Column | str") -> Column:
     """hi + lo of a serialized DDSum state: the ~106-bit-accurate sum
     collapsed to its correctly-rounded float64."""
-
-    @pandas_udf("double")
-    def _v(blobs: pd.Series) -> pd.Series:
-        from ..core.doubledouble import DDSum
-
-        return blobs.map(lambda b: DDSum.from_bytes(bytes(b)).value())
-
-    return _v(_col(col))
+    return _ddsum_value(col)
 
 
 def moments_col(col: "Column | str") -> Column:
@@ -307,38 +193,20 @@ def moments_col(col: "Column | str") -> Column:
     (n, sum_x, sum_x2, sum_x3, sum_x4, mean, variance, skew, kurtosis) —
     the dd power sums collapsed to doubles plus the fixed derived chain
     (core/doubledouble.py ``Moments.stats``)."""
+    def stats(m):
+        n, mean, var, skew, kurt = m.stats()
+        return (n, *m.sums(), mean, var, skew, kurt)
 
-    @pandas_udf("struct<n: long, sum_x: double, sum_x2: double, "
-                "sum_x3: double, sum_x4: double, mean: double, "
-                "variance: double, skew: double, kurtosis: double>")
-    def _m(blobs: pd.Series) -> pd.DataFrame:
-        from ..core.doubledouble import Moments
-
-        rows = []
-        for b in blobs:
-            m = Moments.from_bytes(bytes(b))
-            s1, s2, s3, s4 = m.sums()
-            n, mean, var, skew, kurt = m.stats()
-            rows.append({"n": n, "sum_x": s1, "sum_x2": s2, "sum_x3": s3,
-                         "sum_x4": s4, "mean": mean, "variance": var,
-                         "skew": skew, "kurtosis": kurt})
-        return pd.DataFrame(rows, columns=["n", "sum_x", "sum_x2", "sum_x3",
-                                           "sum_x4", "mean", "variance",
-                                           "skew", "kurtosis"])
-
-    return _m(_col(col))
+    return row_udf("struct<n: long, sum_x: double, sum_x2: double, "
+                   "sum_x3: double, sum_x4: double, mean: double, "
+                   "variance: double, skew: double, kurtosis: double>",
+                   stats, "mom")(col)
 
 
 def kmv_est_col(col: "Column | str") -> Column:
     """Distinct-count estimate of a serialized KMV state (exact below k,
     unbiased (k-1)/U_(k) above — core/kmv.py)."""
-    @pandas_udf("double")
-    def _e(blobs: pd.Series) -> pd.Series:
-        from ..core.kmv import KMV
-
-        return blobs.map(lambda b: KMV.from_bytes(bytes(b)).estimate())
-
-    return _e(_col(col))
+    return _kmv_est(col)
 
 
 def kmv_stats_col(col: "Column | str") -> Column:
@@ -346,63 +214,30 @@ def kmv_stats_col(col: "Column | str") -> Column:
     engine-independent surface the SQL oracle recomputes exactly:
     kth_hash is the largest kept hash (signed int64 view of the uint64,
     the suite's cross-engine convention), or NULL while under-full."""
-    @pandas_udf("struct<n_kept: long, kth_hash: long>")
-    def _s(blobs: pd.Series) -> pd.DataFrame:
-        from ..core.kmv import KMV
+    def stats(s):
+        full = len(s.values) == s.k
+        return (len(s.values),
+                int(np.int64(np.uint64(s.values[-1]))) if full else None)
 
-        rows = []
-        for b in blobs:
-            s = KMV.from_bytes(bytes(b))
-            full = len(s.values) == s.k
-            rows.append({"n_kept": len(s.values),
-                         "kth_hash": int(np.int64(np.uint64(s.values[-1])))
-                         if full else None})
-        return pd.DataFrame(rows, columns=["n_kept", "kth_hash"])
-
-    return _s(_col(col))
+    return row_udf("struct<n_kept: long, kth_hash: long>", stats, "kmv")(col)
 
 
 def kmv_jaccard_col(a: "Column | str", b: "Column | str") -> Column:
     """Theta-sketch set operation over two serialized KMV states:
     (jaccard_est, intersection_est, n_matched) — core/kmv.py
     ``KMV.jaccard``."""
-    @pandas_udf("struct<jaccard_est: double, intersection_est: double, "
-                "n_matched: long>")
-    def _j(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        from ..core.kmv import KMV
-
-        rows = []
-        for x, y in zip(xs, ys):
-            j, i, m = KMV.from_bytes(bytes(x)).jaccard(
-                KMV.from_bytes(bytes(y)))
-            rows.append({"jaccard_est": j, "intersection_est": i,
-                         "n_matched": m})
-        return pd.DataFrame(rows, columns=["jaccard_est",
-                                           "intersection_est",
-                                           "n_matched"])
-
-    return _j(_col(a), _col(b))
+    return row_udf("struct<jaccard_est: double, intersection_est: double, "
+                   "n_matched: long>", lambda x, y: x.jaccard(y),
+                   "kmv", "kmv")(a, b)
 
 
 def kmv_a_not_b_col(a: "Column | str", b: "Column | str") -> Column:
     """Theta-sketch set DIFFERENCE over two serialized KMV states:
     (diff_frac, difference_est, n_only_a) — core/kmv.py ``KMV.a_not_b``
     (|A \\ B| estimated over the bottom-k' of the union)."""
-    @pandas_udf("struct<diff_frac: double, difference_est: double, "
-                "n_only_a: long>")
-    def _d(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        from ..core.kmv import KMV
-
-        rows = []
-        for x, y in zip(xs, ys):
-            f, d, m = KMV.from_bytes(bytes(x)).a_not_b(
-                KMV.from_bytes(bytes(y)))
-            rows.append({"diff_frac": f, "difference_est": d,
-                         "n_only_a": m})
-        return pd.DataFrame(rows, columns=["diff_frac", "difference_est",
-                                           "n_only_a"])
-
-    return _d(_col(a), _col(b))
+    return row_udf("struct<diff_frac: double, difference_est: double, "
+                   "n_only_a: long>", lambda x, y: x.a_not_b(y),
+                   "kmv", "kmv")(a, b)
 
 
 def minhash_sig_col(col: "Column | str") -> Column:
@@ -411,42 +246,21 @@ def minhash_sig_col(col: "Column | str") -> Column:
     cross-engine convention, so DuckDB recomputes every component exactly
     via the wang64/splitmix64 UHUGEINT twin). Never-updated components
     surface as the sentinel -1 (signed view of 2^64-1)."""
-    @pandas_udf("array<long>")
-    def _s(blobs: pd.Series) -> pd.Series:
-        from ..core.minhash import MinHashSig
-
-        return blobs.map(lambda b: MinHashSig.from_bytes(bytes(b))
-                         .values.view(np.int64).tolist())
-
-    return _s(_col(col))
+    return row_udf("array<long>", lambda s: s.values.view(np.int64).tolist(),
+                   "mh")(col)
 
 
 def csk_f2_col(col: "Column | str") -> Column:
     """AMS second-moment estimate of a serialized CountSketch: median
     over rows of sum_j cell^2 — exact int64 (core/countsketch.py)."""
-    @pandas_udf("long")
-    def _f(blobs: pd.Series) -> pd.Series:
-        from ..core.countsketch import CountSketch
-
-        return blobs.map(lambda b: CountSketch.from_bytes(bytes(b)).f2())
-
-    return _f(_col(col))
+    return _csk_f2(col)
 
 
 def csk_inner_col(a: "Column | str", b: "Column | str") -> Column:
     """Join-size / inner-product estimate between two serialized
     CountSketch states with identical (depth, width, seed): median over
     rows of the row dot product — exact int64."""
-    @pandas_udf("long")
-    def _i(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        from ..core.countsketch import CountSketch
-
-        return pd.Series([
-            CountSketch.from_bytes(bytes(x)).inner(
-                CountSketch.from_bytes(bytes(y)))
-            for x, y in zip(xs, ys)])
-
-    return _i(_col(a), _col(b))
+    return row_udf("long", lambda x, y: x.inner(y), "csk", "csk")(a, b)
 
 
 def fd_guarantees_col(small: "Column | str",
@@ -466,31 +280,20 @@ def fd_guarantees_col(small: "Column | str",
 
     Sketch rows only (one per group) — never the vector-scale data.
     """
-    @pandas_udf("struct<fd_n: long, psd_ok: boolean, spectral_ok: boolean, "
-                "mass_ok: boolean, fnorm2_ok: boolean>")
-    def _g(ss: pd.Series, es: pd.Series) -> pd.DataFrame:
-        from ..core.freqdirs import FrequentDirections
-
-        rows = []
-        for sb, eb in zip(ss, es):
-            s = FrequentDirections.from_bytes(bytes(sb))
-            e = FrequentDirections.from_bytes(bytes(eb))
-            evals = np.linalg.eigvalsh(e.gram() - s.gram())
-            tol = 1e-8 * max(s.fnorm2, 1.0)
-            rows.append((
-                s.n,
+    def guarantees(s, e):
+        evals = np.linalg.eigvalsh(e.gram() - s.gram())
+        tol = 1e-8 * max(s.fnorm2, 1.0)
+        return (s.n,
                 bool(evals.min() >= -tol),
                 bool(evals.max() <= s.delta + tol),
-                bool(s.ell * s.delta
-                     <= s.fnorm2 - s.stored_fnorm2() + tol),
+                bool(s.ell * s.delta <= s.fnorm2 - s.stored_fnorm2() + tol),
                 bool(s.n == e.n
-                     and abs(s.fnorm2 - e.fnorm2)
-                     <= 1e-9 * max(e.fnorm2, 1.0)
-                     and e.delta <= 1e-12 * max(e.fnorm2, 1.0))))
-        return pd.DataFrame(rows, columns=["fd_n", "psd_ok", "spectral_ok",
-                                           "mass_ok", "fnorm2_ok"])
+                     and abs(s.fnorm2 - e.fnorm2) <= 1e-9 * max(e.fnorm2, 1.0)
+                     and e.delta <= 1e-12 * max(e.fnorm2, 1.0)))
 
-    return _g(_col(small), _col(exact))
+    return row_udf("struct<fd_n: long, psd_ok: boolean, spectral_ok: boolean, "
+                   "mass_ok: boolean, fnorm2_ok: boolean>",
+                   guarantees, "fd", "fd")(small, exact)
 
 
 def ps_items_col(sketch: "Column | str") -> Column:
@@ -498,27 +301,12 @@ def ps_items_col(sketch: "Column | str") -> Column:
     (core/prioritysample.py) — w_hat = max(w, tau) is the DLT adjusted
     weight whose subset sums are unbiased estimates; priority-descending,
     ties by id."""
-
-    @pandas_udf("array<struct<id: long, w: long, w_hat: double>>")
-    def _i(blobs: pd.Series) -> pd.Series:
-        from ..core.prioritysample import PrioritySample
-
-        return blobs.map(
-            lambda b: PrioritySample.from_bytes(bytes(b)).items())
-
-    return _i(_col(sketch))
+    return row_udf("array<struct<id: long, w: long, w_hat: double>>",
+                   lambda s: s.items(), "ps")(sketch)
 
 
 def ps_tau_col(sketch: "Column | str") -> Column:
     """The (k+1)-th-largest-priority threshold of a serialized
     PrioritySample — 0.0 while the population fits in k (estimates
     exact)."""
-
-    @pandas_udf("double")
-    def _t(blobs: pd.Series) -> pd.Series:
-        from ..core.prioritysample import PrioritySample
-
-        return blobs.map(
-            lambda b: PrioritySample.from_bytes(bytes(b)).tau)
-
-    return _t(_col(sketch))
+    return row_udf("double", lambda s: s.tau, "ps")(sketch)

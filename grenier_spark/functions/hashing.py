@@ -1,4 +1,4 @@
-"""Hash / bucket Column functions (vectorized pandas UDFs over Arrow batches).
+"""Hash / bucket Column functions (vectorized Arrow UDFs, ``functions._udf``).
 
 The hot path stays JVM-side wherever Spark has an equivalent builtin
 (``F.xxhash64`` for generic row hashing); these UDFs exist for the two
@@ -9,45 +9,44 @@ operations Spark lacks with the required bit-exact semantics:
 * ``jump_bucket_col`` — jump consistent hash (reference jmphash/jmphash.ml),
   minimal-relocation bucket assignment used for skew-controlled
   ``df.repartition(n, bucket)`` (SURVEY.md §4.3).
+
+Keys are read as Arrow int64 with their validity mask, so every key keeps
+its 64 bits next to a NULL, and a NULL key gives a NULL hash or bucket.
+The SQL ``wang64`` / ``jump_bucket`` (functions/register.py) run the same
+bodies.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..core.bits import U64, wang64
 from ..core.jmphash import jump_bucket
 from ..core.rendezvous import hrw_bucket_among
+from ._udf import key_udf
+
+_wang64 = key_udf("long", lambda k: wang64(k.view(U64)).view(np.int64))
+
+
+def _jump(ks: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """jump_bucket per row's bucket count: one call per distinct n."""
+    out = np.empty(len(ks), dtype=np.int64)
+    for nv in np.unique(n):
+        m = n == nv
+        out[m] = jump_bucket(ks[m].view(U64), int(nv))
+    return out
 
 
 def wang64_col(col: "Column | str") -> Column:
-    """wang64(key) as a signed-long column (bit pattern of the uint64 hash).
-
-    UDFs are created lazily: pandas_udf parses its DDL type via the active
-    session, so module import must stay session-free.
-    """
-
-    @pandas_udf("long")
-    def _wang(keys: pd.Series) -> pd.Series:
-        out = wang64(keys.to_numpy(dtype=np.int64).view(np.uint64))
-        return pd.Series(out.view(np.int64))
-
-    return _wang(F.col(col) if isinstance(col, str) else col)
+    """wang64(key) as a signed-long column (bit pattern of the uint64 hash)."""
+    return _wang64(col)
 
 
 def jump_bucket_col(col: "Column | str", n_buckets: int) -> Column:
     """Jump-consistent bucket in [0, n_buckets) of a long column."""
-
-    @pandas_udf("int")
-    def _jump(keys: pd.Series) -> pd.Series:
-        ks = keys.to_numpy(dtype=np.int64).view(np.uint64)
-        return pd.Series(jump_bucket(ks, n_buckets).astype(np.int32))
-
-    return _jump(F.col(col) if isinstance(col, str) else col)
+    return key_udf("int", _jump)(col, F.lit(n_buckets))
 
 
 def repartition_by_jump(df, key_col: str, n_buckets: int):
@@ -81,13 +80,7 @@ def hrw_bucket_col(col: "Column | str", n_nodes: int = None,
     Pass ``n_nodes`` for the full set 0..n-1 or ``nodes`` for a live
     subset."""
     live = tuple(range(n_nodes)) if nodes is None else tuple(nodes)
-
-    @pandas_udf("int")
-    def _hrw(keys: pd.Series) -> pd.Series:
-        ks = keys.to_numpy(dtype=np.int64).view(np.uint64)
-        return pd.Series(hrw_bucket_among(ks, live).astype(np.int32))
-
-    return _hrw(F.col(col) if isinstance(col, str) else col)
+    return key_udf("int", lambda k: hrw_bucket_among(k.view(U64), live))(col)
 
 
 def md5_low64_col(col: "Column | str") -> Column:

@@ -5,119 +5,45 @@ After ``register_sql_functions(spark)``::
 
     SELECT source, hll_card(sketch) FROM sketches_view
     SELECT jump_bucket(wang64(user_id), 32) AS bucket FROM events
+
+Each name registers the same UDF-helper body (``functions._udf``) as its
+Column twin in estimates.py / hashing.py, so both surfaces read sketches
+and keys alike: NULL in, NULL out, and int64 keys keep all 64 bits.
+The per-row quantile and moment readers exist only here: they take ``q``
+as a column instead of a Python list.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+from .estimates import (_bloom_card, _csk_f2, _ddsum_value, _hll_card,
+                        _hll_card_orig, _kmv_est)
+from .hashing import _jump, _wang64
+from ._udf import key_udf, row_udf
 
-from ..core import hll
-from ..core.bits import U64, wang64
-from ..core.bloom import Bloom
-from ..core.jmphash import jump_bucket
-from ..core.kll import KLL
-from ..core.tdigest import TDigest
+
+def _quantile(kind: str):
+    return row_udf("double", lambda s, q: float(s.quantiles([float(q)])[0]),
+                   kind, None)
 
 
 def register_sql_functions(spark) -> None:
-    @pandas_udf("double")
-    def _hll_card(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: hll.card(hll.from_bytes(bytes(b))))
-
-    @pandas_udf("double")
-    def _hll_card_original(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: hll.card_hll(hll.from_bytes(bytes(b))))
-
-    @pandas_udf("long")
-    def _wang64(keys: pd.Series) -> pd.Series:
-        return pd.Series(
-            wang64(keys.to_numpy(dtype=np.int64).view(U64)).view(np.int64))
-
-    @pandas_udf("long")
-    def _jump(keys: pd.Series, n: pd.Series) -> pd.Series:
-        ks = keys.to_numpy(dtype=np.int64).view(U64)
-        nvals = n.to_numpy()
-        if (nvals == nvals[0]).all():
-            return pd.Series(jump_bucket(ks, int(nvals[0])))
-        # per-row n: group rows by bucket count (silently applying row 0's
-        # n to the whole batch would return wrong buckets for the rest)
-        out = np.empty(len(ks), dtype=np.int64)
-        for nv in np.unique(nvals):
-            m = nvals == nv
-            out[m] = jump_bucket(ks[m], int(nv))
-        return pd.Series(out)
-
-    @pandas_udf("double")
-    def _bloom_card(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: Bloom.from_bytes(bytes(b)).cardinality())
-
-    @pandas_udf("double")
-    def _kll_q(blobs: pd.Series, q: pd.Series) -> pd.Series:
-        return pd.Series([float(KLL.from_bytes(bytes(b)).quantiles([qq])[0])
-                          for b, qq in zip(blobs, q)])
-
-    @pandas_udf("double")
-    def _td_q(blobs: pd.Series, q: pd.Series) -> pd.Series:
-        return pd.Series([float(TDigest.from_bytes(bytes(b)).quantiles([qq])[0])
-                          for b, qq in zip(blobs, q)])
-
-    @pandas_udf("double")
-    def _req_q(blobs: pd.Series, q: pd.Series) -> pd.Series:
-        from ..core.req import REQ
-
-        return pd.Series([float(REQ.from_bytes(bytes(b)).quantiles([qq])[0])
-                          for b, qq in zip(blobs, q)])
-
-    @pandas_udf("double")
-    def _dd_q(blobs: pd.Series, q: pd.Series) -> pd.Series:
-        from ..core.ddsketch import DDSketch
-
-        return pd.Series([float(DDSketch.from_bytes(bytes(b)).quantile(qq))
-                          for b, qq in zip(blobs, q)])
-
-    @pandas_udf("double")
-    def _ddsum_v(blobs: pd.Series) -> pd.Series:
-        from ..core.doubledouble import DDSum
-
-        return blobs.map(lambda b: DDSum.from_bytes(bytes(b)).value())
-
-    @pandas_udf("double")
-    def _kmv_card(blobs: pd.Series) -> pd.Series:
-        from ..core.kmv import KMV
-
-        return blobs.map(lambda b: KMV.from_bytes(bytes(b)).estimate())
-
-    @pandas_udf("long")
-    def _csk_f2(blobs: pd.Series) -> pd.Series:
-        from ..core.countsketch import CountSketch
-
-        return blobs.map(lambda b: CountSketch.from_bytes(bytes(b)).f2())
-
-    @pandas_udf("double")
-    def _mom_mean(blobs: pd.Series) -> pd.Series:
-        from ..core.doubledouble import Moments
-
-        return blobs.map(lambda b: Moments.from_bytes(bytes(b)).stats()[1])
-
-    @pandas_udf("double")
-    def _mom_variance(blobs: pd.Series) -> pd.Series:
-        from ..core.doubledouble import Moments
-
-        return blobs.map(lambda b: Moments.from_bytes(bytes(b)).stats()[2])
-
-    spark.udf.register("kmv_card", _kmv_card)
-    spark.udf.register("csk_f2", _csk_f2)
-    spark.udf.register("mom_mean", _mom_mean)
-    spark.udf.register("mom_variance", _mom_variance)
-    spark.udf.register("ddsum_value", _ddsum_v)
-    spark.udf.register("hll_card", _hll_card)
-    spark.udf.register("hll_card_original", _hll_card_original)
-    spark.udf.register("wang64", _wang64)
-    spark.udf.register("jump_bucket", _jump)
-    spark.udf.register("bloom_cardinality", _bloom_card)
-    spark.udf.register("kll_quantile", _kll_q)
-    spark.udf.register("tdigest_quantile", _td_q)
-    spark.udf.register("dd_quantile", _dd_q)
-    spark.udf.register("req_quantile", _req_q)
+    fns = {
+        "kmv_card": _kmv_est,
+        "csk_f2": _csk_f2,
+        "mom_mean": row_udf("double", lambda m: m.stats()[1], "mom"),
+        "mom_variance": row_udf("double", lambda m: m.stats()[2], "mom"),
+        "ddsum_value": _ddsum_value,
+        "hll_card": _hll_card,
+        "hll_card_original": _hll_card_orig,
+        "wang64": _wang64,
+        "jump_bucket": key_udf("long", _jump),
+        "bloom_cardinality": _bloom_card,
+        "kll_quantile": _quantile("kll"),
+        "tdigest_quantile": _quantile("tdigest"),
+        "dd_quantile": row_udf("double",
+                               lambda s, q: float(s.quantile(float(q))),
+                               "dd", None),
+        "req_quantile": _quantile("req"),
+    }
+    for name, fn in fns.items():
+        spark.udf.register(name, fn.udf())

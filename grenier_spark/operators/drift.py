@@ -25,7 +25,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..core.kll import KLL
+from ..functions._udf import row_udf
+from .sketch_build import get_kind
 
 
 def kll_ks(blob_a: bytes, blob_b: bytes) -> float:
@@ -35,11 +36,11 @@ def kll_ks(blob_a: bytes, blob_b: bytes) -> float:
     retained items, so the union grid attains the exact supremum OF THE
     SKETCH ECDFs; the distance to the true KS is bounded by the two rank
     guarantees."""
-    return _kll_ks_decoded(KLL.from_bytes(bytes(blob_a)),
-                           KLL.from_bytes(bytes(blob_b)))
+    load = get_kind("kll").load
+    return _kll_ks_decoded(load(bytes(blob_a)), load(bytes(blob_b)))
 
 
-def _kll_ks_decoded(a: "KLL", b: "KLL") -> float:
+def _kll_ks_decoded(a, b) -> float:
     va, _ = a._weighted_items()
     vb, _ = b._weighted_items()
     if not len(va) or not len(vb):
@@ -139,23 +140,11 @@ def dd_ks_report(df: DataFrame, value_col: str, side_col: str,
     ``weight_col`` for the token-weighted view). Same one-build-per-
     (group, side) scaffold and side contract as :func:`psi_sketch_report`.
     Returns (group..., side_a, side_b, n_a, n_b, n_bins, ks)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..core.ddsketch import DDSketch
-
     j, group_cols = _dd_two_sides(df, value_col, side_col, group_cols,
                                   alpha, weight_col)
-
-    @pandas_udf("struct<n_a:bigint,n_b:bigint,n_bins:bigint,ks:double>")
-    def _ks(a, b):
-        import pandas as pd
-        rows = []
-        for x, y in zip(a, b):
-            sa = DDSketch.from_bytes(bytes(x))
-            sb = DDSketch.from_bytes(bytes(y))
-            n_bins, ks = dd_ks_pair(sa, sb)
-            rows.append((int(sa.n), int(sb.n), n_bins, ks))
-        return pd.DataFrame(rows, columns=["n_a", "n_b", "n_bins", "ks"])
+    _ks = row_udf("struct<n_a:bigint,n_b:bigint,n_bins:bigint,ks:double>",
+                  lambda sa, sb: (int(sa.n), int(sb.n), *dd_ks_pair(sa, sb)),
+                  "dd", "dd")
 
     return (j.select(*group_cols, "side_a", "side_b",
                      _ks("_ska", "_skb").alias("r"))
@@ -176,8 +165,6 @@ def ks_sketch_report(df: DataFrame, value_col: str, side_col: str,
     pair to compare); side_a is the smaller label. NULL values are
     excluded (KLL skips NaN; a NULL side would silently form a third
     side, so it raises)."""
-    from pyspark.sql.functions import pandas_udf
-
     from .sketch_build import SketchSpec, build_sketches
 
     group_cols = list(group_cols or [])
@@ -187,11 +174,7 @@ def ks_sketch_report(df: DataFrame, value_col: str, side_col: str,
     res = build_sketches(src, [SketchSpec.of("d", "kll", value_col, k=k)],
                          group_cols=group_cols + [side_col])
 
-    @pandas_udf("double")
-    def _ks(a, b):
-        import pandas as pd
-        return pd.Series([kll_ks(x, y) for x, y in zip(a, b)])
-
+    _ks = row_udf("double", _kll_ks_decoded, "kll", "kll")
     w = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy()
     sides = (res.select(*group_cols, side_col, "sketch", "n_values")
              .withColumn("_rk", F.row_number().over(
@@ -237,25 +220,18 @@ def ks_window_shift_report(df: DataFrame, value_col: str, period_col: str,
     counts (KLL tracks n exactly), ks_sketch carries the merged-sketch
     rank-guarantee budget |ks_sketch - ks_exact| <= eps_a + eps_b
     (KLL's eps survives any merge tree, FOCS'16 Thm 1)."""
-    from pyspark.sql.functions import pandas_udf
-
     from .rolling import rolling_sketch_merge_ordered
     from .sketch_build import SketchSpec, build_sketches
-    from ..core.kll import KLL
 
     src = df.where(F.col(value_col).isNotNull())
     per = build_sketches(src, [SketchSpec.of("d", "kll", value_col, k=k)],
                          group_cols=[period_col])
     rolled = rolling_sketch_merge_ordered(per, period_col, window, "kll")
 
-    @pandas_udf("struct<n_a:bigint,n_b:bigint,ks:double>")
-    def _ks(a, b):
-        import pandas as pd
-        rows = []
-        for x, y in zip(a, b):
-            sa, sb = KLL.from_bytes(bytes(x)), KLL.from_bytes(bytes(y))
-            rows.append((int(sa.n), int(sb.n), _kll_ks_decoded(sa, sb)))
-        return pd.DataFrame(rows, columns=["n_a", "n_b", "ks"])
+    _ks = row_udf("struct<n_a:bigint,n_b:bigint,ks:double>",
+                  lambda sa, sb: (int(sa.n), int(sb.n),
+                                  _kll_ks_decoded(sa, sb)),
+                  "kll", "kll")
 
     prev = rolled.select(
         (F.col(period_col) + window).alias(period_col),
@@ -367,23 +343,12 @@ def psi_sketch_report(df: DataFrame, value_col: str, side_col: str,
     even with smoothing — the industry 0.1 / 0.25 verdict thresholds
     assume coarse binning). Returns (group..., side_a, side_b, n_a,
     n_b, n_bins, psi)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..core.ddsketch import DDSketch
-
     j, group_cols = _dd_two_sides(df, value_col, side_col, group_cols,
                                   alpha, weight_col)
-
-    @pandas_udf("struct<n_a:bigint,n_b:bigint,n_bins:bigint,psi:double>")
-    def _psi(a, b):
-        import pandas as pd
-        rows = []
-        for x, y in zip(a, b):
-            sa = DDSketch.from_bytes(bytes(x))
-            sb = DDSketch.from_bytes(bytes(y))
-            n_bins, psi = dd_psi_pair(sa, sb, smooth)
-            rows.append((int(sa.n), int(sb.n), n_bins, psi))
-        return pd.DataFrame(rows, columns=["n_a", "n_b", "n_bins", "psi"])
+    _psi = row_udf("struct<n_a:bigint,n_b:bigint,n_bins:bigint,psi:double>",
+                   lambda sa, sb: (int(sa.n), int(sb.n),
+                                   *dd_psi_pair(sa, sb, smooth)),
+                   "dd", "dd")
 
     return (j.select(*group_cols, "side_a", "side_b",
                      _psi("_ska", "_skb").alias("r"))
@@ -452,28 +417,19 @@ def psi_attribution_report(df: DataFrame, value_col: str, side_col: str,
     terms are bit-equal cross-engine, so the ranking (and everything
     emitted) is value-exact in SQL (``dd_psi_attr_sql``). Returns
     (group..., rank, bin, rep_value, c_a, c_b, term)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..core.ddsketch import DDSketch
-
     gamma = (1.0 + alpha) / (1.0 - alpha)
     j, group_cols = _dd_two_sides(df, value_col, side_col, group_cols,
                                   alpha, weight_col)
 
-    @pandas_udf("array<struct<bin:bigint,rep_value:double,c_a:bigint,"
-                "c_b:bigint,term:double>>")
-    def _attr(a, b):
-        import pandas as pd
-        out = []
-        for x, y in zip(a, b):
-            rows = dd_psi_terms(DDSketch.from_bytes(bytes(x)),
-                                DDSketch.from_bytes(bytes(y)), smooth)
-            rows.sort(key=lambda r: (-abs(r[4]), r[0]))
-            out.append([
-                (int(i), 0.0 if zb else 2.0 * gamma ** int(i) / (gamma + 1.0),
+    def top_terms(sa, sb):
+        terms = sorted(dd_psi_terms(sa, sb, smooth),
+                       key=lambda r: (-abs(r[4]), r[0]))
+        return [(int(i), 0.0 if zb else 2.0 * gamma ** int(i) / (gamma + 1.0),
                  int(ca), int(cb), float(t))
-                for i, zb, ca, cb, t in rows[:k]])
-        return pd.Series(out)
+                for i, zb, ca, cb, t in terms[:k]]
+
+    _attr = row_udf("array<struct<bin:bigint,rep_value:double,c_a:bigint,"
+                    "c_b:bigint,term:double>>", top_terms, "dd", "dd")
 
     return (j.select(*group_cols, "side_a", "side_b",
                      F.posexplode(_attr("_ska", "_skb")).alias("i", "r"))
