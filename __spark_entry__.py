@@ -2718,8 +2718,9 @@ def q_hll_precision_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = build_sketches(new, [SketchSpec.of("h", "hll", "user_id", p=10)],
                            group_cols=["event_type"])
         af = a.withColumn("sketch", hll_fold_col("sketch", 10))
+        # one row per event_type from each of the two builds
         cells = merge_partials(af.unionByName(b), {"h": "hll"},
-                               ["event_type"])
+                               ["event_type"], max_rows_per_key=2)
         est = cells.select("event_type",
                            F.col("n_rows").alias("n_events"),
                            F.round(hll_card_col("sketch"), 6)

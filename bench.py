@@ -2,8 +2,8 @@
 """Benchmark harness (driver-run per round; also supports scaling mode).
 
 Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32) and prints
-ONE JSON line::
+``SF_DIR`` below) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on) and prints ONE JSON line::
 
     {"metric": "...", "schema_version": 2, "value": <total wall sec>,
      "unit": "sec", "queries": {...per-query sec...}, "sf": ...,
@@ -37,11 +37,14 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# one task slot per usable core of this host
+HOST_CPUS = len(os.sched_getaffinity(0))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", HOST_CPUS))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
-# native-reader task count (round-5 sweep; see build_sketches_from_files
-# docstring) — single source for both the call site and the output JSON
-NATIVE_N_TASKS = 24
+# native-reader task count: one reader per usable core (see
+# build_sketches_from_files docstring) — single source for both the call
+# site and the output JSON
+NATIVE_N_TASKS = HOST_CPUS
 # version of the output JSON's keys and their meanings (module docstring)
 SCHEMA_VERSION = 2
 
@@ -138,7 +141,7 @@ def hash_stress_job(spark, n_keys: int, n_parts: int):
     partials = (spark.range(0, n_parts, numPartitions=n_parts)
                 .mapInArrow(gen, out_schema))
     res = merge_partials(partials, {s.name: s.kind for s in specs}, [],
-                         fanout=32)
+                         fanout=32, max_rows_per_key=n_parts)
     return res.select("sketch_name", "n_values").toPandas()
 
 
@@ -315,11 +318,11 @@ def run_default():
     # round 5 this is a co-headline: the engine's build throughput is the
     # best of the two scan paths (both are the same mergeable pipeline; a
     # manifest-driven production build would pick the native reader
-    # anyway). n_tasks=24 from the round-5 sweep (fewer, fatter readers on
-    # a bandwidth-bound single guest: 8/12/16/24/32/64 tasks measured
+    # anyway). n_tasks is one reader per usable core (on the old 32-vCPU
+    # guest a sweep of 8/12/16/24/32/64 tasks measured
     # 87.7/76.2/71.3/93.1/82.3/88.8 M t/s in like windows; 24 repeated
-    # best across draws). Same probe-certified attempt protocol as the
-    # DataFrame loop, smaller budget.
+    # best there). Same probe-certified attempt protocol as the DataFrame
+    # loop, smaller budget.
     from grenier_spark.operators.sketch_build import (SketchSpec,
                                                       build_sketches_from_files)
 

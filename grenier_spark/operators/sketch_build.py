@@ -5,16 +5,22 @@ Pipeline shape::
     df.select(group_cols + value_cols)           # Catalyst prunes the scan
       .mapInArrow(partial_builder, ...)          # level 1: per-partition
                                                  #   vectorized numpy updates
-      .groupBy(group, name, salt).applyInPandas  # level 2a: fan-in merge
-      .groupBy(group, name).applyInPandas        # level 2b: final merge
+      [.groupBy(group, name, salt).applyInArrow] # level 2a: fan-in merge,
+                                                 #   only when needed
+      .groupBy(group, name).applyInArrow         # level 2b: final merge
 
 Level 1 turns token-scale data into sketch-scale rows (one KB-sized state
 per (input partition x group x spec)); only sketch-sized rows ever shuffle.
-The two-stage merge bounds any single reducer's fan-in to ``fanout`` rows,
-so the plan survives 100k input partitions (1000-executor scale) without a
-single-task funnel. HLL/CMS/Bloom merges are exact and associative, so the
-result is BIT-IDENTICAL to a single-threaded build regardless of
-partitioning (tests/test_spark_pipeline.py asserts this parity).
+The merge takes ONE stage when the caller shows that no (group, spec) gets
+more than ``fanout`` partial rows: the partition count of the level-1
+input, read from its plan, or the native reader's ``n_tasks``. Otherwise
+(a larger or unknown bound) the salted level 2a first cuts any single
+reducer's fan-in to ``fanout`` rows, so the plan survives 100k input
+partitions (1000-executor scale) without a single-task funnel. HLL/CMS/Bloom
+merges are exact and associative, so the result is BIT-IDENTICAL to a
+single-threaded build regardless of partitioning or merge shape
+(tests/test_spark_pipeline.py and tests/test_sketch_kinds.py assert this
+parity).
 
 Per-partition metrics (partition id, rows, values, build time) ride along in
 the partial rows and survive aggregation as sums — the lineage/metrics
@@ -33,10 +39,12 @@ from typing import Callable
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+from py4j.protocol import Py4JError
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 from pyspark.sql.types import (BinaryType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
@@ -493,6 +501,8 @@ def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
 
     Returns DataFrame[group_cols..., sketch_name, sketch, n_rows, n_values,
     part_id(-1 after merge), build_us(summed)], one row per (group, spec).
+    The merge takes one stage when ``df``'s partition count, read from its
+    plan without a Spark job, is at most ``fanout`` (:func:`merge_partials`).
     """
     group_cols = list(group_cols or [])
     specs = list(specs)
@@ -511,7 +521,48 @@ def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
             yield rb
 
     partials = src.mapInArrow(partial_builder, out_schema)
-    return merge_partials(partials, kind_of, group_cols, fanout)
+    # each level-1 task emits at most one row per (group, spec)
+    return merge_partials(partials, kind_of, group_cols, fanout,
+                          _partition_count(src))
+
+
+def _partition_count(df: DataFrame) -> "int | None":
+    """How many partitions ``df`` has, from its physical plan and without
+    starting a Spark job; None when that is not known up front.
+
+    A shuffle reached from the top through one-child nodes gives its own
+    partition count: those nodes keep or reduce the partitioning, and
+    adaptive execution may coalesce the shuffle but splits it only when
+    rebalancing. A plan with no Exchange (an adaptive plan runs its
+    shuffles, a broadcast runs a job), no subquery and no cached relation
+    (its buffers build from their own plan) is executed to its RDD, which
+    runs no job, for that RDD's partition count. Anything else is
+    unknown."""
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+    except (AttributeError, Py4JError):   # Spark Connect; a streaming plan
+        return None
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    node = plan
+    while node.children().length() == 1 and \
+            "Exchange" not in node.nodeName():
+        node = node.children().apply(0)
+    if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+        if "REBALANCE" in node.shuffleOrigin().toString():
+            return None
+        return int(node.numPartitions())
+    if _plan_has(plan, ("Exchange", "InMemoryTableScan")) or \
+            plan.subqueriesAll().length():
+        return None
+    return int(plan.execute().getNumPartitions())
+
+
+def _plan_has(node, names: "tuple[str, ...]") -> bool:
+    if any(n in node.nodeName() for n in names):
+        return True
+    kids = node.children()
+    return any(_plan_has(kids.apply(i), names) for i in range(kids.length()))
 
 
 def _batch_group_codes(batch: pa.RecordBatch, group_cols: "list[str]"):
@@ -646,6 +697,14 @@ class _Accumulator:
             out, schema=to_arrow_schema(self.out_schema))
 
 
+# Arrow types of parquet columns that Spark reads as the type
+# from_arrow_type gives them
+_PLAIN_ARROW = (pa.types.is_boolean, pa.types.is_signed_integer,
+                pa.types.is_float32, pa.types.is_float64, pa.types.is_string,
+                pa.types.is_large_string, pa.types.is_binary,
+                pa.types.is_date32, pa.types.is_decimal128)
+
+
 def build_sketches_from_files(spark, files: "list[str]",
                               specs: "list[SketchSpec]",
                               group_cols: "list[str] | None" = None,
@@ -669,9 +728,12 @@ def build_sketches_from_files(spark, files: "list[str]",
     sizing rule as any scan. Partial rows and everything downstream are
     identical to build_sketches (byte parity asserted in tests).
 
-    The output schema is probed from ``files[0]``; every task checks each
-    of its files against that probe (needed columns present, same Arrow
-    types) and raises a ValueError naming the file that drifted."""
+    The output schema is probed from the footer of ``files[0]``, read on
+    the driver, so building the DataFrame starts no Spark job; every task
+    checks each of its files against that probe (needed columns present,
+    same Arrow types) and raises a ValueError naming the file that
+    drifted. Each task emits one partial row per (group, spec), so the
+    merge takes one stage when ``n_tasks <= fanout``."""
     import pyarrow.parquet as pq
 
     group_cols = list(group_cols or [])
@@ -679,11 +741,23 @@ def build_sketches_from_files(spark, files: "list[str]",
     value_cols = sorted({s.column for s in specs})
     kind_of = {s.name: s.kind for s in specs}
 
-    # Spark-side schema probed from the first file (0 rows read)
-    probe = spark.read.parquet(files[0]).select(*group_cols, *value_cols)
-    out_schema = StructType([probe.schema[c] for c in group_cols]
-                            + _TAIL_FIELDS)
+    # the first file's footer, read on the driver: spark.read.parquet
+    # would start a schema-inference job for it
     need_cols = group_cols + value_cols
+    probe = pq.read_schema(files[0])
+    absent = [c for c in need_cols if c not in probe.names]
+    if absent:
+        raise ValueError(f"build_sketches_from_files: {files[0]}: no "
+                         f"column {absent[0]!r}")
+    want = {c: probe.field(c).type for c in need_cols}
+    if all(any(is_type(want[c]) for is_type in _PLAIN_ARROW)
+           for c in group_cols):
+        group_fields = [StructField(c, from_arrow_type(want[c]))
+                        for c in group_cols]
+    else:   # timestamps, unsigned or nested: Spark's own parquet reading
+        group_fields = list(spark.read.parquet(files[0])
+                            .select(*group_cols).schema)
+    out_schema = StructType(group_fields + _TAIL_FIELDS)
 
     if n_tasks is None:
         n_tasks = len(files)
@@ -709,8 +783,6 @@ def build_sketches_from_files(spark, files: "list[str]",
         use_threads = n_tasks * 2 <= slots
 
     def worker(batches):
-        probe_types = pq.read_schema(files[0])
-        want = {c: probe_types.field(c).type for c in need_cols}
         acc = _Accumulator(specs, group_cols, out_schema)
         for b in batches:
             for path in b.column("path").to_pylist():
@@ -731,7 +803,9 @@ def build_sketches_from_files(spark, files: "list[str]",
             yield out
 
     partials = paths_df.mapInArrow(worker, out_schema)
-    return merge_partials(partials, kind_of, group_cols, fanout)
+    # one partial row per (group, spec) per task; n_tasks is not read from
+    # the plan: that would run the repartition's shuffle as a job
+    return merge_partials(partials, kind_of, group_cols, fanout, n_tasks)
 
 
 def build_sketches_deterministic(df: DataFrame, specs: "list[SketchSpec]",
@@ -769,30 +843,43 @@ def build_sketches_deterministic(df: DataFrame, specs: "list[SketchSpec]",
 
 
 def merge_partials(partials: DataFrame, kind_of: "dict[str, str]",
-                   group_cols: "list[str]", fanout: int = 32) -> DataFrame:
-    """Two-stage associative merge of partial-sketch rows (level 2a + 2b)."""
+                   group_cols: "list[str]", fanout: int = 32,
+                   max_rows_per_key: "int | None" = None) -> DataFrame:
+    """Associative merge of partial-sketch rows to one row per
+    (group_cols, sketch_name), with part_id -1 and the counters summed.
+
+    ``max_rows_per_key`` is the most partial rows any (group, spec) can
+    get, a fact the caller already holds and reads without a Spark job:
+    the level-1 partition count (:func:`build_sketches`), ``n_tasks``
+    (:func:`build_sketches_from_files`), the lineage-file count
+    (plans/checkpoint.py) or the batch count (streaming/incremental.py).
+    When it is at most ``fanout``, one ``groupBy(group_cols +
+    sketch_name)`` stage merges everything. When it is larger or None
+    (unknown; the sketch cube, whose coarse cells take many rows), a
+    salted level 2a over ``part_id mod fanout`` first bounds every
+    reducer's fan-in to ``fanout`` rows, then level 2b merges those."""
     merge_keys = group_cols + ["sketch_name"]
-    out_fields = [f for f in partials.schema.fields if f.name != "_salt"]
-    out_schema = StructType(out_fields)
-    names = [f.name for f in out_fields]
+    schema = partials.schema
+    arrow_schema = to_arrow_schema(schema)
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        kind = get_kind(kind_of[pdf["sketch_name"].iloc[0]])
-        blob = kind.merge([bytes(b) for b in pdf["sketch"]])
-        head = pdf.iloc[:1].copy()
-        head["sketch"] = [blob]
-        head["n_rows"] = np.int64(pdf["n_rows"].sum())
-        head["n_values"] = np.int64(pdf["n_values"].sum())
-        head["part_id"] = np.int32(-1)
-        head["build_us"] = np.int64(pdf["build_us"].sum())
-        return head[names]
+    def merge_group(tbl: pa.Table) -> pa.Table:
+        kind = get_kind(kind_of[tbl["sketch_name"][0].as_py()])
+        head = tbl.slice(0, 1)
+        cols = dict(zip(head.column_names, head.columns))
+        cols["sketch"] = [kind.merge(tbl["sketch"].to_pylist())]
+        for c in ("n_rows", "n_values", "build_us"):
+            cols[c] = [pc.sum(tbl[c]).as_py()]
+        cols["part_id"] = [-1]
+        return pa.Table.from_pydict(
+            {f.name: cols[f.name] for f in arrow_schema}).cast(arrow_schema)
 
-    level2a = (partials
-               .withColumn("_salt", F.pmod(F.col("part_id"), F.lit(fanout)))
-               .groupBy(*merge_keys, "_salt")
-               .applyInPandas(merge_group, out_schema))
-    return (level2a.groupBy(*merge_keys)
-            .applyInPandas(merge_group, out_schema))
+    if max_rows_per_key is None or max_rows_per_key > fanout:
+        partials = (partials
+                    .withColumn("_salt",
+                                F.pmod(F.col("part_id"), F.lit(fanout)))
+                    .groupBy(*merge_keys, "_salt")
+                    .applyInArrow(merge_group, schema))
+    return partials.groupBy(*merge_keys).applyInArrow(merge_group, schema)
 
 
 def build_dd_weighted(df: DataFrame, value_col: str, weight_col: str,
@@ -808,7 +895,7 @@ def build_dd_weighted(df: DataFrame, value_col: str, weight_col: str,
     Same 10^12-row shape as :func:`build_sketches`: the (value, weight)
     pairs fold into KB bucket histograms in the scan stage (mapInArrow,
     narrow — the payload never shuffles) and only sketch-sized partial
-    rows ride the two-stage bounded-fan-in merge. DDSketch state is a
+    rows ride the bounded-fan-in merge. DDSketch state is a
     pure bucket histogram, so the result is BYTE-IDENTICAL to a
     single-stream weighted build under any partitioning, and the weighted
     estimator is value-exactly SQL-reproducible

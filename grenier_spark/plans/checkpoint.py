@@ -176,7 +176,8 @@ class CheckpointedSketchJob:
                 f"lineage integrity violation: {len(missing)}/{len(want)} "
                 f"input files covered by neither checkpoint rows nor a "
                 f"coverage declaration: {sorted(missing)[:3]}...")
-        return self._final_merge(merged_rows)
+        # each covered file holds one row per (group, spec)
+        return self._final_merge(merged_rows, len(row_cov))
 
     def history(self, spark) -> DataFrame:
         """Metric evolution across input snapshots from checkpoint state
@@ -199,16 +200,22 @@ class CheckpointedSketchJob:
         rows = self.table.read(spark) if self.table.files() else None
         if rows is None:
             raise ValueError("checkpoint holds no partials — run() first")
-        sids = sorted(r.snapshot_id for r in
-                      rows.select("snapshot_id").distinct().collect())
+        lineage = (rows.select("snapshot_id", "lineage_file").distinct()
+                   .collect())
+        sids = sorted({r.snapshot_id for r in lineage})
         out = None
         for s in sids:  # few snapshots; each merge is a KB-row Spark job
-            m = (self._final_merge(rows.where(F.col("snapshot_id") <= s))
+            n_files = sum(r.snapshot_id <= s for r in lineage)
+            m = (self._final_merge(rows.where(F.col("snapshot_id") <= s),
+                                   n_files)
                  .withColumn("as_of_snapshot", F.lit(s).cast("long")))
             out = m if out is None else out.unionByName(m)
         return out
 
-    def _final_merge(self, partial_rows: DataFrame) -> DataFrame:
+    def _final_merge(self, partial_rows: DataFrame,
+                     n_files: int) -> DataFrame:
+        """Merge per-file rows over ``n_files`` lineage files: each file
+        holds one row per (group, spec), so no merge key gets more."""
         kind_of = {s.name: s.kind for s in self.specs}
         rows = partial_rows.drop("snapshot_id")
         # the per-file rows are already level-2 outputs for their file; the
@@ -216,4 +223,5 @@ class CheckpointedSketchJob:
         rows = rows.withColumn("part_id",
                                F.abs(F.hash("lineage_file")).cast("int"))
         rows = rows.drop("lineage_file")
-        return merge_partials(rows, kind_of, self.group_cols, self.fanout)
+        return merge_partials(rows, kind_of, self.group_cols, self.fanout,
+                              n_files)

@@ -70,8 +70,13 @@ class IncrementalSketchSink:
 
     def current(self, spark) -> DataFrame:
         """Merged sketch state over all batches so far."""
-        rows = self.table.read(spark)
+        # each processed batch id appended one snapshot (ids count from 1)
+        # with one row per (group, spec): the batch count bounds the rows
+        # a merge key gets, read from the manifest without a Spark job
+        n_batches = (self.table.current_snapshot() or {}).get("id")
+        rows = self.table.read(spark, n_batches)
         kind_of = {s.name: s.kind for s in self.specs}
         rows = rows.withColumn("part_id",
                                F.col("batch_id").cast("int")).drop("batch_id")
-        return merge_partials(rows, kind_of, self.group_cols, self.fanout)
+        return merge_partials(rows, kind_of, self.group_cols, self.fanout,
+                              n_batches)

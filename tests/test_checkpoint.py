@@ -213,3 +213,55 @@ def test_run_accepts_relative_input_path(spark, tmp_path, monkeypatch):
         [SketchSpec.of("h", "hll", "v", p=8)], group_cols=["source"])
     out = job.run(spark, rel).toPandas()
     assert len(out) == 1 and out.n_values[0] == 10
+
+
+def _merge_stages(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FlatMapGroupsInArrow")
+
+
+@pytest.mark.parametrize("fanout,stages", [(2, 2), (32, 1)])
+def test_merge_shape_follows_file_count(spark, tmp_path, fanout, stages):
+    """3 input files give each (source, spec) 3 checkpoint rows: fanout=2
+    keeps the salted two-stage merge in run() and history(), fanout=32
+    merges in one stage, and both give the bytes of a one-shot build."""
+    from grenier_spark.operators.sketch_build import build_sketches
+
+    src = str(tmp_path / "gen")
+    write_documents_local(src, 300)
+    table = SnapshotTable(str(tmp_path / "docs"))
+    table.append(spark.read.parquet(src).repartition(3))
+    assert len(table.files()) == 3
+    job = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"],
+                                fanout=fanout)
+    ran = job.run(spark, table)
+    hist = job.history(spark)
+    assert _merge_stages(ran) == _merge_stages(hist) == stages
+    want = sketches_of(build_sketches(table.read(spark), SPECS, ["source"]))
+    assert len(want) == 8
+    assert sketches_of(ran) == want
+    assert sketches_of(hist.drop("as_of_snapshot")) == want
+
+
+@pytest.mark.parametrize("fanout,stages", [(2, 2), (32, 1)])
+def test_incremental_merge_shape_follows_batch_count(spark, tmp_path,
+                                                      fanout, stages):
+    """The incremental sink over 3 batches: current() merges 3 rows per
+    (source, spec) in two stages at fanout=2 and in one at fanout=32,
+    with the bytes of a one-shot build either way."""
+    from grenier_spark.operators.sketch_build import build_sketches
+    from grenier_spark.streaming.incremental import IncrementalSketchSink
+
+    src = str(tmp_path / "gen")
+    write_documents_local(src, 300)
+    docs = spark.read.parquet(src)
+    sink = IncrementalSketchSink(str(tmp_path / "state"), SPECS, ["source"],
+                                 fanout=fanout)
+    for b in range(3):
+        sink.process_batch(docs.where(docs.doc_id.substr(-1, 1).cast("int")
+                                      % 3 == b), b)
+    cur = sink.current(spark)
+    assert _merge_stages(cur) == stages
+    want = sketches_of(build_sketches(docs, SPECS, ["source"]))
+    assert len(want) == 8
+    assert sketches_of(cur) == want

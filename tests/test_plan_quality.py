@@ -627,3 +627,77 @@ def test_priority_sample_build_is_window_free_and_pruned(spark):
     for i, ln in enumerate(lines):
         if "Exchange" in ln and "Broadcast" not in ln:
             assert i < arrow_at, plan
+
+
+def _hash_exchanges_above_map(df) -> int:
+    """Hash Exchanges above the MapInArrow partial build (the merge
+    shuffles); asserts none sits below it."""
+    lines = plan_of(df).splitlines()
+    arrow_at = min(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    hashed = [i for i, ln in enumerate(lines)
+              if "Exchange hashpartitioning" in ln]
+    assert all(i < arrow_at for i in hashed), "\n".join(lines)
+    return len(hashed)
+
+
+def _built_without_jobs(spark, build):
+    """``build()``'s DataFrame, asserting that building it started no
+    Spark job."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("merge-shape-gate", "building must not run jobs")
+    try:
+        df = build()
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "merge-shape-gate")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return df
+
+
+def test_merge_takes_one_stage_when_fan_in_fits(spark, docs_tiny, tmp_path):
+    """One merge shuffle when no (group, spec) can get more than `fanout`
+    partial rows: a parquet scan of at most `fanout` partitions, a
+    `repartition(3)` (the count of the shuffle below the partial build),
+    or a native build with `n_tasks <= fanout`. The salted two-stage tree
+    stays when the bound is larger (13 partitions, 5 readers, fanout 4) or
+    unknown (a cached input, the sketch cube). Building the DataFrames
+    starts no Spark job: the bound comes from the plan or from
+    `n_tasks`."""
+    import pyarrow.parquet as pq
+
+    from grenier_spark.operators.cube import sketch_cube
+    from grenier_spark.operators.sketch_build import build_sketches_from_files
+
+    specs = [SketchSpec.of("h", "hll", "tokens", p=10)]
+    tbl = pq.read_table(docs_tiny)
+    files = []
+    for i in range(5):
+        files.append(str(tmp_path / f"part-{i}.parquet"))
+        pq.write_table(tbl.slice(i * 200, 200), files[-1])
+    docs = spark.read.parquet(docs_tiny)
+    one_scan = _built_without_jobs(spark, lambda: build_sketches(
+        docs, specs, ["source"], fanout=4))
+    one_shuffled = _built_without_jobs(spark, lambda: build_sketches(
+        docs.repartition(3), specs, ["source"], fanout=4))
+    one_native = _built_without_jobs(spark, lambda: build_sketches_from_files(
+        spark, files, specs, ["source"], fanout=4, n_tasks=4))
+    two_scan = _built_without_jobs(spark, lambda: build_sketches(
+        docs.repartition(13), specs, ["source"], fanout=4))
+    two_native = _built_without_jobs(spark, lambda: build_sketches_from_files(
+        spark, files, specs, ["source"], fanout=4, n_tasks=5))
+    cached = docs.cache()
+    try:
+        two_cached = _built_without_jobs(spark, lambda: build_sketches(
+            cached, specs, ["source"], fanout=4))
+    finally:
+        cached.unpersist()
+    assert _hash_exchanges_above_map(one_scan) == 1
+    assert _hash_exchanges_above_map(one_shuffled) == 1
+    assert _hash_exchanges_above_map(one_native) == 1
+    assert _hash_exchanges_above_map(two_scan) == 2
+    assert _hash_exchanges_above_map(two_native) == 2
+    assert _hash_exchanges_above_map(two_cached) == 2
+    # the cube passes no bound: its lattice merge keeps the salted stage
+    cube = sketch_cube(docs, ["source"], specs)
+    assert plan_of(cube).count("FlatMapGroupsInArrow") == 2

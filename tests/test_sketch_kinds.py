@@ -174,3 +174,70 @@ def test_pandas_values_follows_the_batch_contract():
     with pytest.raises(ValueError, match="'w'.*non-integral"):
         read(pd.DataFrame({"id": [1], "w": [0.5], "prio": [1.0]}),
              get_kind("ps").dtype)
+
+
+def _merge_stages(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("FlatMapGroupsInArrow")
+
+
+def test_one_and_two_stage_merges_agree_for_every_kind(spark):
+    """Over 3 input partitions, fanout=32 merges in one stage and fanout=2
+    forces the salted two-stage tree (salts {0, 2} and {1}). Every
+    exact-merge kind gives the same bytes in both shapes, equal to a
+    single-stream build of the group; kll, tdigest and req keep their
+    estimate-level contract in both."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from grenier_spark.operators.sketch_build import build_sketches
+
+    rng = np.random.default_rng(5)
+    n = 4000
+    pdf = pd.DataFrame({
+        "g": rng.choice(["a", "b"], n), "k": rng.integers(0, 1 << 20, n),
+        "x": rng.gamma(2.0, 10.0, n), "w": rng.integers(1, 50, n),
+        "id": rng.permutation(10 * n)[:n].astype(np.int64)})
+    pdf["prio"] = pdf.w / rng.uniform(1e-9, 1.0, n)
+    df = spark.createDataFrame(pdf).select(
+        "g", "k", "x", F.struct("x", "w").alias("dw"),
+        F.struct("id", "w", "prio").alias("ps")).repartition(3)
+    column = {"dw": "dw", "ps": "ps"}
+    exact = [k for k, v in KINDS.items() if v.exact_merge]
+    quantile = ["kll", "tdigest", "req"]
+    params = {**PARAMS, "kll": {"k": 200}, "tdigest": {"delta": 100},
+              "req": {"k": 32}}
+    specs = [SketchSpec.of(k, k, column.get(k, "x" if KINDS[k].input.dtype
+                                            is np.float64 else "k"),
+                           **params.get(k, {}))
+             for k in exact + quantile]
+    one = build_sketches(df, specs, ["g"], fanout=32)
+    two = build_sketches(df, specs, ["g"], fanout=2)
+    assert (_merge_stages(one), _merge_stages(two)) == (1, 2)
+    got = [{(r.g, r.sketch_name): (bytes(r.sketch), r.n_values)
+            for r in res.collect()} for res in (one, two)]
+
+    for g, rows in pdf.groupby("g"):
+        stream = {"k": rows.k.to_numpy(), "x": rows.x.to_numpy(),
+                  "dw": np.rec.fromarrays([rows.x.to_numpy(),
+                                           rows.w.to_numpy()]),
+                  "ps": np.rec.fromarrays([rows.id.to_numpy(),
+                                           rows.w.to_numpy(),
+                                           rows.prio.to_numpy()])}
+        for spec in specs:
+            kind = KINDS[spec.kind]
+            blobs = [shape[(g, spec.name)][0] for shape in got]
+            assert got[0][(g, spec.name)][1] == got[1][(g, spec.name)][1] \
+                == len(rows), spec.name
+            if kind.exact_merge:
+                whole = kind.new(spec.p)
+                kind.update(whole, stream[spec.column])
+                assert blobs[0] == blobs[1] == whole.to_bytes(), \
+                    (g, spec.name)
+                continue
+            x = np.sort(rows.x.to_numpy())
+            for blob in blobs:
+                est = kind.load(blob).quantiles([0.1, 0.5, 0.9])
+                for q, v in zip((0.1, 0.5, 0.9), est):
+                    assert abs(np.searchsorted(x, v, side="right") / len(x)
+                               - q) < 0.05, (g, spec.name, q)

@@ -438,6 +438,43 @@ def test_native_file_builder_names_a_drifted_file(spark, docs_tiny,
                                       ["source"], n_tasks=2).collect()
 
 
+def test_native_file_builder_group_types_match_dataframe_path(spark,
+                                                               tmp_path):
+    """The native reader types its group columns from the first file's
+    footer (plain Arrow types) or, for a timestamp, from Spark's own
+    parquet reading; either way its schema and rows equal the DataFrame
+    path's."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from grenier_spark.operators.sketch_build import build_sketches_from_files
+
+    n = 60
+    path = str(tmp_path / "typed.parquet")
+    pq.write_table(pa.table({
+        "s": pa.array([f"g{i % 2}" for i in range(n)]),
+        "i": pa.array([i % 3 for i in range(n)], pa.int16()),
+        "d": pa.array([datetime.date(2024, 1, 1 + i % 2) for i in range(n)]),
+        "t": pa.array([datetime.datetime(2024, 1, 1, i % 2)
+                       for i in range(n)], pa.timestamp("us", tz="UTC")),
+        "v": pa.array(range(n), pa.int64())}), path)
+    specs = [SketchSpec.of("h", "hll", "v", p=8)]
+    for groups in (["s", "i", "d"], ["s", "t"]):
+        native = build_sketches_from_files(spark, [path], specs, groups)
+        df_path = build_sketches(spark.read.parquet(path), specs, groups)
+        assert native.schema == df_path.schema, groups
+
+        def rows(df):
+            return sorted(tuple(r[c] for c in groups)
+                          + (bytes(r.sketch), r.n_rows)
+                          for r in df.collect())
+
+        assert rows(native) == rows(df_path), groups
+        assert len(rows(native)) == (6 if "i" in groups else 2)
+
+
 def test_sql_function_registration(spark, docs_df):
     """Registered SQL functions work in spark.sql strings end-to-end."""
     from grenier_spark.functions.register import register_sql_functions
