@@ -17,15 +17,15 @@ with :func:`grenier_spark.functions.hll_merge_col` for sketch algebra.
 
 Token hashing is the canonical chain (``wang64`` of the int64-widened
 token, reference hll/test.ml:7) via the SAME kind-table update the
-distributed build uses, over the values the build would feed it
-(``sketch_build._pandas_values``: NULL cells and NULL/NaN array elements
-drop, int64 keys pass one exactness guard), so for the exact-merge kinds
-(hll / cms / bloom / ...) the emitted bytes are BIT-IDENTICAL to
+distributed build uses: each aggregate is an Arrow GROUPED_AGG UDF
+(``pa.Array -> bytes``) reading its group with the build's own reader
+(``sketch_build._read``), so for the exact-merge kinds (hll / cms /
+bloom / ...) the emitted bytes are BIT-IDENTICAL to
 ``operators.sketch_build.build_sketches`` over the same rows
 (tests/test_spark_pipeline.py::test_grouped_agg_udaf_byte_parity).
 
 Scale caveat (why :func:`operators.sketch_build.build_sketches` remains
-the 100-TB path): Spark executes pandas GROUPED_AGG UDFs as *complete*
+the 100-TB path): Spark executes GROUPED_AGG UDFs as *complete*
 aggregates — every raw row shuffles to its group's reducer before the UDF
 runs; there is no partial-aggregation/combine step. That is the right
 trade for interactive SQL over modest groups, and exactly the wrong one at
@@ -35,30 +35,32 @@ sketch-row merge keeps token-scale data out of the shuffle entirely.
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from ..operators.sketch_build import _pandas_values, get_kind
+from ..operators.sketch_build import _read, get_kind
 
 
 def _make_agg_udf(kind: str, params: dict):
     """The one GROUPED_AGG UDF builder both surfaces share (a fix to the
     kernel sequence must reach the DataFrame and SQL paths together).
-    Created lazily per call (module-level pandas_udf creation breaks under
-    spark-submit import ordering — see BENCH/BASELINE.md)."""
+    Created lazily per call: arrow_udf parses its return type through the
+    active session."""
     get_kind(kind)
 
-    @pandas_udf("binary")
-    def _agg(xs: pd.Series) -> bytes:
+    @arrow_udf("binary")
+    def _agg(xs: pa.Array) -> bytes:
         k = get_kind(kind)
         state = k.new(params)
         # one update per group: the same histogram/chunk kernel as the
         # distributed partial builder => byte parity for the exact-merge
         # kinds; kll/tdigest/ddsum are deterministic for a given value
         # order, but that order is the group's row order.
-        k.update(state, _pandas_values(xs, k.dtype, "sketch aggregate"))
+        values, _ = _read(xs, np.array([0, len(xs)]))
+        k.update(state, values)
         return state.to_bytes()
 
     return _agg

@@ -26,10 +26,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (BinaryType, IntegerType, LongType,
                                StructField, StructType)
 
@@ -129,15 +130,16 @@ def _rolling_merge(sketches: DataFrame, period_col: str, window: int,
         + [StructField(period_col, LongType()),
            StructField("sketch", BinaryType()),
            StructField("n_periods", IntegerType())])
-    names = [f.name for f in out_schema.fields]
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def merge_group(pdf):
+    def merge_group(tbl: pa.Table) -> pa.Table:
         if sort_by_period:
-            pdf = pdf.sort_values("_src_p", kind="stable")
-        blob = get_kind(kind).merge([bytes(b) for b in pdf["_sk"]])
-        head = pdf.iloc[:1].copy()
-        head["sketch"] = [blob]
-        head["n_periods"] = np.int32(pdf["_src_p"].nunique())
-        return head[names]
+            tbl = tbl.sort_by("_src_p")   # Arrow's sort is stable
+        head = tbl.slice(0, 1)
+        cols = {c: head[c] for c in g + [period_col]}
+        cols["sketch"] = [get_kind(kind).merge(tbl["_sk"].to_pylist())]
+        cols["n_periods"] = [pc.count_distinct(tbl["_src_p"]).as_py()]
+        return pa.Table.from_pydict(
+            {f.name: cols[f.name] for f in arrow_schema}).cast(arrow_schema)
 
-    return ex.groupBy(*g, period_col).applyInPandas(merge_group, out_schema)
+    return ex.groupBy(*g, period_col).applyInArrow(merge_group, out_schema)

@@ -26,8 +26,8 @@ Per-partition metrics (partition id, rows, values, build time) ride along in
 the partial rows and survive aggregation as sums — the lineage/metrics
 surface the checkpoint layer (plans/checkpoint.py) persists.
 
-Per-batch grouping cost: one token-level ``np.repeat`` + stable argsort per
-value column, then O(1) slices per group — no per-group rescans.
+Per-batch grouping cost: one row argsort + one take per batch, one read per
+column (:func:`_read`), then O(1) slices per group — no per-group rescans.
 """
 
 from __future__ import annotations
@@ -106,66 +106,6 @@ _HIST_MIN = 8192  # fewer values: a histogram costs more than it saves
 _NATIVE_BATCH_ROWS = 1 << 16  # rows per batch the native reader feeds
 
 
-def _grouped_counts(batch: pa.RecordBatch, col: str, codes: np.ndarray,
-                    n_groups: int):
-    """Per-group (distinct_keys, counts, n_values) via ONE composite
-    bincount over ``group_code * V + token`` — the count-sketch fast path
-    generalized to grouped batches.
-
-    Versus routing through :func:`_grouped_column` (token-level group-code
-    repeat, per-group mask scans, gather copies, int64 upcast: ~100 bytes
-    of memory traffic per token), this touches each token ~3x less — and
-    memory traffic is what bounds this box (BENCH/BASELINE.md). Returns
-    None when inapplicable (nulls, negative/huge ids, float keys); callers
-    fall back to the exact generic path. Byte-exact for hll/cms/bloom/kmv: the
-    same distinct keys and multiplicities reach the state updates.
-    """
-    arr = batch.column(col)
-    is_list = pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
-    if is_list:
-        offsets = arr.offsets.to_numpy()
-        flat = arr.values.slice(int(offsets[0]),
-                                int(offsets[-1] - offsets[0]))
-        if flat.null_count or arr.null_count:
-            return None
-        values = flat.to_numpy(zero_copy_only=False)
-    else:
-        if arr.null_count:
-            return None
-        values = arr.to_numpy(zero_copy_only=False)
-    # applicability checks BEFORE the token-scale repeat: a column that
-    # declines every batch (md5-range ids) must not pay a wasted 8B/token
-    # write first
-    if len(values) < _HIST_MIN or not np.issubdtype(values.dtype, np.integer):
-        return None
-    vmax = int(values.max())
-    if int(values.min()) < 0 or (vmax + 1) * n_groups >= _VOCAB_LIMIT:
-        return None
-    if n_groups > 1:
-        vcodes = np.repeat(codes, np.diff(offsets)) if is_list else codes
-    else:
-        vcodes = None
-    v_span = vmax + 1
-    if vcodes is None:
-        counts = np.bincount(values, minlength=v_span)
-    else:
-        # composite key built in place in the repeat buffer: two fewer
-        # token-scale allocations/write passes than `vcodes * V + values`
-        comp = vcodes if vcodes.base is None and vcodes is not codes \
-            else vcodes.astype(np.int64)
-        np.multiply(comp, np.int64(v_span), out=comp)
-        np.add(comp, values, out=comp, casting="unsafe")
-        counts = np.bincount(comp, minlength=n_groups * v_span)
-    out = []
-    for g in range(n_groups):
-        sl = counts[g * v_span:(g + 1) * v_span]
-        nz = np.flatnonzero(sl)
-        gcounts = sl[nz]
-        out.append((nz.astype(np.int64).view(U64), gcounts,
-                    int(gcounts.sum())))
-    return out
-
-
 _TAIL_FIELDS = [
     StructField("sketch_name", StringType(), False),
     StructField("sketch", BinaryType(), False),
@@ -176,75 +116,65 @@ _TAIL_FIELDS = [
 ]
 
 
-def _grouped_column(batch: pa.RecordBatch, col: str, codes: np.ndarray,
-                    n_groups: int):
-    """Group-sorted flat values + group boundaries for a list/scalar column.
+def _read(col: pa.Array, bounds: np.ndarray):
+    """THE value reader: ``col`` (rows sorted by group; group g is rows
+    ``bounds[g]:bounds[g + 1]``) read to ``(values, value_bounds)``, where
+    group g's values are ``values[value_bounds[g]:value_bounds[g + 1]]``.
 
-    Returns (sorted_values, bounds) where group g's values are
-    ``sorted_values[bounds[g]:bounds[g + 1]]``.
-    """
-    arr = batch.column(col)
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-        offsets = arr.offsets.to_numpy()
-        flat = arr.values.slice(int(offsets[0]),
-                                int(offsets[-1] - offsets[0]))
-        vcodes = np.repeat(codes, np.diff(offsets))
+    List cells flatten (a NULL cell holds nothing); scalar cells are the
+    values. NULL elements and float NaN drop, filtered at the Arrow level
+    so an int64 column never passes through a nullable-float conversion
+    (|v| > 2^53 would mangle). A struct column (the weighted-rows input)
+    reads to a record array of its fields, and a row drops when any field
+    is NULL or NaN — one joint filter."""
+    if pa.types.is_struct(col.type):
+        fields = col.flatten()
+    elif pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+        if col.null_count:
+            lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy()
+            offsets = np.concatenate([[0], np.cumsum(lens)])
+        else:
+            offsets = col.offsets.to_numpy()
+            offsets = offsets - offsets[0]
+        bounds = offsets[bounds]
+        fields = [col.flatten()]
     else:
-        flat = arr
-        vcodes = codes
-    # drop nulls at the ARROW level, before numpy conversion: an int64
-    # column with nulls otherwise converts to float64, silently mangling
-    # token ids with |v| > 2^53 and turning null list elements into NaN
-    # that would later be counted as garbage int64 values
-    if flat.null_count:
-        ok = ~np.asarray(flat.is_null())
-        flat = flat.drop_null()
-        vcodes = vcodes[ok]
-    values = flat.to_numpy(zero_copy_only=False)
-    if values.dtype.kind == "f":  # float32 NaN must filter like float64
-        keep = ~np.isnan(values)
-        values, vcodes = values[keep], vcodes[keep]
-    if n_groups == 1:
-        return values, np.array([0, len(values)], dtype=np.int64)
-    if n_groups <= 16:
-        # few groups: g boolean-mask compressions beat an O(n log n) argsort
-        # (measured ~5x on 4-group token batches)
-        parts = [values[vcodes == g] for g in range(n_groups)]
-        bounds = np.zeros(n_groups + 1, dtype=np.int64)
-        np.cumsum([len(p) for p in parts], out=bounds[1:])
-        return np.concatenate(parts) if parts else values, bounds
-    order = np.argsort(vcodes, kind="stable")
-    sorted_vals = values[order]
-    bounds = np.searchsorted(vcodes[order], np.arange(n_groups + 1))
-    return sorted_vals, bounds
-
-
-def _grouped_rows(batch: pa.RecordBatch, col: str, codes: np.ndarray,
-                  n_groups: int):
-    """Group-sorted rows of a struct column (the weighted-rows input) as
-    one numpy record array + group boundaries, like
-    :func:`_grouped_column`. A row drops when any field is NULL — one
-    JOINT filter at the Arrow level, so int64 fields never pass through a
-    nullable-float conversion (|v| > 2^53 would mangle) — or when a float
-    field is NaN (the _grouped_column contract)."""
-    fields = batch.column(col).flatten()
-    ok = np.ones(batch.num_rows, dtype=bool)
+        fields = [col]
+    keep = None
     for f in fields:
-        if f.null_count:
-            ok &= np.asarray(f.is_valid())
-    mask = pa.array(ok)
-    cols = [f.filter(mask).to_numpy(zero_copy_only=False) for f in fields]
-    keep = np.ones(int(ok.sum()), dtype=bool)
-    for c in cols:
-        if c.dtype.kind == "f":
-            keep &= ~np.isnan(c)
-    rows = np.rec.fromarrays([c[keep] for c in cols])
-    vcodes = codes[ok][keep]
-    if n_groups == 1:
-        return rows, np.array([0, len(rows)], dtype=np.int64)
-    order = np.argsort(vcodes, kind="stable")
-    bounds = np.searchsorted(vcodes[order], np.arange(n_groups + 1))
-    return rows[order], bounds
+        if pa.types.is_floating(f.type):   # a NULL reads as NaN
+            ok = ~np.isnan(f.to_numpy(zero_copy_only=False))
+        elif f.null_count:
+            ok = f.is_valid().to_numpy(zero_copy_only=False)
+        else:
+            continue
+        keep = ok if keep is None else keep & ok
+    if keep is not None and not keep.all():
+        fields = [f.filter(pa.array(keep)) for f in fields]
+        kept = np.zeros(len(keep) + 1, dtype=np.int64)
+        np.cumsum(keep, out=kept[1:])
+        bounds = kept[bounds]
+    cols = [f.to_numpy(zero_copy_only=False) for f in fields]
+    if pa.types.is_struct(col.type):
+        return np.rec.fromarrays(cols), bounds
+    return cols[0], bounds
+
+
+def _histogram(values: np.ndarray):
+    """(distinct keys as u64, counts) of one group's values, or None when
+    a histogram does not pay: fewer than ``_HIST_MIN`` values, non-integer
+    values, a negative one, or ``max + 1 >= _VOCAB_LIMIT``. Dense small
+    non-negative ids (BPE-style vocabularies) repeat many times per
+    batch, and the histogram-taking kinds fold each distinct key once
+    with its multiplicity — byte-exact against the raw stream."""
+    if len(values) < _HIST_MIN or values.dtype.kind not in "iu":
+        return None
+    vmax = int(values.max())
+    if vmax + 1 >= _VOCAB_LIMIT or int(values.min()) < 0:
+        return None
+    counts = np.bincount(values.astype(np.intp, copy=False))
+    keys = np.flatnonzero(counts)
+    return keys.astype(np.int64).view(U64), counts[keys]
 
 
 def _exact_int64(values: np.ndarray, name: str, where: str) -> np.ndarray:
@@ -288,11 +218,11 @@ def _typed(values: np.ndarray, dtype, name: str, where: str) -> np.ndarray:
 
 def _pandas_values(cells: "pd.Series | pd.DataFrame", dtype,
                    where: str) -> np.ndarray:
-    """The pandas twin of :func:`_grouped_column` / :func:`_grouped_rows`:
-    one column as it reaches Python code (a UDAF group, a stream
-    trigger), read to the value vector a kind's update takes, under the
-    batch build's contract. NULL cells drop; array cells concatenate, and
-    their NULL or NaN elements drop; int64 values pass
+    """The pandas twin of :func:`_read`, for the stateful streams only
+    (Spark has no Arrow form of ``applyInPandasWithState``): one column of
+    a stream trigger read to the value vector a kind's update takes, under
+    the batch build's contract. NULL cells drop; array cells concatenate,
+    and their NULL or NaN elements drop; int64 values pass
     :func:`_exact_int64`. A tuple ``dtype`` (a :attr:`Kind.dtype` of the
     weighted-rows kinds) reads struct rows — a Series of dict cells or a
     DataFrame of the fields, one dtype per field — into a record array; a
@@ -333,12 +263,10 @@ def _update_hashed(state, values: np.ndarray) -> None:
     # touches each id many times: folding ONCE PER DISTINCT id with its
     # multiplicity is byte-exact (max-merge HLL, weighted count-min add,
     # idempotent Bloom/KMV/MinHash) and cuts hash traffic by the
-    # batch/vocab ratio. It is the single-group case of _grouped_counts.
-    hist = (_grouped_counts(pa.record_batch([pa.array(values)], names=["v"]),
-                            "v", None, 1) if len(values) >= _HIST_MIN
-            else None)
+    # batch/vocab ratio
+    hist = _histogram(values)
     if hist is not None:
-        state.update_batch(*hist[0][:2])
+        state.update_batch(*hist)
         return
     keys = _int_keys(state, values).view(U64)
     for s in range(0, len(keys), _CHUNK):
@@ -347,7 +275,7 @@ def _update_hashed(state, values: np.ndarray) -> None:
 
 def _update_counted(state, values: np.ndarray) -> None:
     # one exact-histogram absorb per batch — the same state transition
-    # as the _grouped_counts fast path (same histogram)
+    # as the update from _histogram (same histogram)
     state.update_batch(_int_keys(state, values))
 
 
@@ -379,14 +307,12 @@ def _update_matrix(state, values: np.ndarray) -> None:
 @dataclass(frozen=True)
 class Input:
     """An input class: how one group's values reach a state — the
-    raw-stream update, the update from a (distinct keys, counts) histogram
-    when the kind has one (its columns ride the composite-bincount fast
-    path), the per-batch grouping kernel, and the dtype the pandas reader
-    reads a column to (None: struct rows, typed per field by the kind)."""
+    raw-stream update, the update from a :func:`_histogram` of the values
+    when the kind has one, and the dtype the pandas reader reads a column
+    to (None: struct rows, typed per field by the kind)."""
 
     update: Callable
     update_counts: "Callable | None" = None
-    group: Callable = _grouped_column
     dtype: "type | None" = np.int64
 
 
@@ -397,7 +323,7 @@ VALUES = Input(lambda st, v: st.update_batch(v.astype(np.float64)),
                dtype=np.float64)
 MATRIX = Input(_update_matrix, dtype=np.float64)
 ROWS = Input(lambda st, rows: st.update_batch(
-    *(rows[f] for f in rows.dtype.names)), group=_grouped_rows, dtype=None)
+    *(rows[f] for f in rows.dtype.names)), dtype=None)
 
 
 @dataclass(frozen=True)
@@ -504,6 +430,15 @@ def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
     The merge takes one stage when ``df``'s partition count, read from its
     plan without a Spark job, is at most ``fanout`` (:func:`merge_partials`).
     """
+    return _build(df, specs, group_cols, fanout, None)
+
+
+def _build(df: DataFrame, specs: "list[SketchSpec]",
+           group_cols: "list[str] | None", fanout: int,
+           max_rows_per_key: "int | None") -> DataFrame:
+    """:func:`build_sketches` with the merge bound of
+    :func:`merge_partials` given; None reads it from the plan (each
+    level-1 task emits at most one row per (group, spec))."""
     group_cols = list(group_cols or [])
     specs = list(specs)
     value_cols = sorted({s.column for s in specs})
@@ -521,9 +456,10 @@ def build_sketches(df: DataFrame, specs: "list[SketchSpec]",
             yield rb
 
     partials = src.mapInArrow(partial_builder, out_schema)
-    # each level-1 task emits at most one row per (group, spec)
+    if max_rows_per_key is None:
+        max_rows_per_key = _partition_count(src)
     return merge_partials(partials, kind_of, group_cols, fanout,
-                          _partition_count(src))
+                          max_rows_per_key)
 
 
 def _partition_count(df: DataFrame) -> "int | None":
@@ -617,49 +553,52 @@ class _Accumulator:
         self.group_cols = group_cols
         self.out_schema = out_schema
         self.value_cols = sorted({s.column for s in specs})
-        inputs = {c: [k.input for s, k in self.specs if s.column == c]
-                  for c in self.value_cols}
-        # columns consumed ONLY by kinds with a histogram update can ride
-        # the composite-bincount fast path (quantile/sum sketches need the
-        # raw stream)
-        self.countable = {c: all(i.update_counts for i in ins)
-                          for c, ins in inputs.items()}
-        self.group = {c: ins[0].group for c, ins in inputs.items()}
+        # a column consumed ONLY by kinds with a histogram update takes
+        # one histogram per group, fed to all of them (quantile/sum
+        # sketches need the raw stream)
+        self.countable = {c: all(k.input.update_counts for s, k in self.specs
+                                 if s.column == c)
+                          for c in self.value_cols}
         self.states: dict = {}   # (gkey, spec_name) -> state
         self.counts: dict = {}   # (gkey, spec_name) -> [rows, values]
         self.t0 = time.monotonic()
 
     def feed(self, batch: pa.RecordBatch) -> None:
+        """Fold one batch: its rows sorted by group once (one stable
+        argsort of the group codes, one take of the value columns), then
+        each value column read once by :func:`_read`."""
         if batch.num_rows == 0:
             return
         codes, gkeys = _batch_group_codes(batch, self.group_cols)
-        grouped: dict = {}
-        counted: dict = {}
-        for c in self.value_cols:
-            gc = (_grouped_counts(batch, c, codes, len(gkeys))
-                  if self.countable[c] else None)
-            if gc is not None:
-                counted[c] = gc
-            else:
-                grouped[c] = self.group[c](batch, c, codes, len(gkeys))
-        row_counts = np.bincount(codes, minlength=len(gkeys))
+        cols = batch.select(self.value_cols)
+        if len(gkeys) > 1:
+            order = np.argsort(codes, kind="stable")
+            bounds = np.searchsorted(codes[order], np.arange(len(gkeys) + 1))
+            cols = cols.take(order)
+        else:
+            bounds = np.array([0, batch.num_rows])
+        reads = {c: _read(cols.column(c), bounds) for c in self.value_cols}
         for g, gkey in enumerate(gkeys):
+            group: dict = {}   # column -> (values, histogram or None)
             for spec, kind in self.specs:
+                c = spec.column
+                if c not in group:
+                    values, vbounds = reads[c]
+                    gvals = values[vbounds[g]:vbounds[g + 1]]
+                    group[c] = (gvals, _histogram(gvals) if self.countable[c]
+                                else None)
+                gvals, hist = group[c]
                 key = (gkey, spec.name)
                 st = self.states.get(key)
                 if st is None:
                     st = self.states.setdefault(key, kind.new(spec.p))
                 cnt = self.counts.setdefault(key, [0, 0])
-                cnt[0] += int(row_counts[g])
-                if spec.column in counted:
-                    keys, gcounts, nvals = counted[spec.column][g]
-                    kind.update_counts(st, keys, gcounts)
-                    cnt[1] += nvals
+                cnt[0] += int(bounds[g + 1] - bounds[g])
+                cnt[1] += len(gvals)
+                if hist is not None:
+                    kind.update_counts(st, *hist)
                 else:
-                    vals, bounds = grouped[spec.column]
-                    gvals = vals[bounds[g]:bounds[g + 1]]
                     kind.update(st, gvals)
-                    cnt[1] += len(gvals)
 
     def flush(self) -> "pa.RecordBatch | None":
         """One partial-rows RecordBatch, or None when nothing was fed.
@@ -838,8 +777,8 @@ def build_sketches_deterministic(df: DataFrame, specs: "list[SketchSpec]",
         routed = df.coalesce(1)
     routed = routed.sortWithinPartitions(*(group_cols + order_cols))
     # every group lives in exactly one sorted partition -> its level-1
-    # partial is the complete sketch; the merge stages are identity
-    return build_sketches(routed, specs, group_cols=group_cols, fanout=1)
+    # partial is the complete sketch, one row per merge key: one stage
+    return _build(routed, specs, group_cols, 1, 1)
 
 
 def merge_partials(partials: DataFrame, kind_of: "dict[str, str]",

@@ -521,6 +521,20 @@ def test_bloom_pruned_join_probe_is_scan_stage(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+def test_grouped_deterministic_build_merges_in_one_stage(spark, docs_tiny):
+    """build_sketches_deterministic routes each group's rows to one
+    partition, so every merge key gets exactly one partial row: one merge
+    stage (one FlatMapGroupsInArrow), not the salted two-stage tree."""
+    from grenier_spark.operators.sketch_build import \
+        build_sketches_deterministic
+
+    docs = spark.read.parquet(docs_tiny)
+    df = build_sketches_deterministic(
+        docs, [SketchSpec.of("k", "kll", "n_tok", k=64)],
+        group_cols=["source"], order_cols=["n_tok"])
+    assert plan_of(df).count("FlatMapGroupsInArrow") == 1
+
+
 def test_rolling_merge_exchanges_only_sketch_rows(spark, docs_tiny):
     """Trailing-window rollup (operators/rolling.py): every Exchange in
     the rolled plan carries (group, day, sketch)-shaped KB rows — the raw

@@ -532,17 +532,21 @@ def test_null_tokens_dropped_not_mangled(spark):
     assert res[0].n_values == 3  # nulls not counted
 
 
-def test_grouped_counts_equals_generic_path_fuzz():
-    """The composite-bincount fast path must produce byte-identical sketch
-    states to the generic grouped path for every applicable batch shape —
-    and correctly decline (fall back) on nulls / negatives / huge ids.
+def test_histogram_equals_raw_update_fuzz():
+    """Per group, the histogram update (_histogram) must give states
+    byte-identical to the raw update for every HASHED/COUNTED kind, for
+    every applicable batch shape — and decline on negatives,
+    max + 1 >= _VOCAB_LIMIT, fewer than _HIST_MIN values and floats.
+    Groups come from the batch build's own row sort and reader.
     Pure-numpy fuzz, no Spark session."""
     import numpy as np
     import pyarrow as pa
 
-    from grenier_spark.operators.sketch_build import (KINDS, SketchSpec,
-                                                      _grouped_column,
-                                                      _grouped_counts)
+    from grenier_spark.operators.sketch_build import (_CHUNK, _HIST_MIN,
+                                                      _VOCAB_LIMIT, COUNTED,
+                                                      HASHED, KINDS,
+                                                      SketchSpec, _histogram,
+                                                      _read)
 
     rng = np.random.default_rng(7)
     specs = [SketchSpec.of("h", "hll", "v", p=10),
@@ -552,52 +556,183 @@ def test_grouped_counts_equals_generic_path_fuzz():
              SketchSpec.of("m", "kmv", "v", k=32),
              SketchSpec.of("g", "mg", "v", k=16),
              SketchSpec.of("x", "mh", "v", k=16, seed=7)]
+    assert {KINDS[s.kind].input for s in specs} == {HASHED, COUNTED}
 
-    def states_equal(a, b, kind):
-        return a.to_bytes() == b.to_bytes()
+    def raw_update(kind, state, values):
+        keys = values.astype(np.int64)
+        if kind.input is COUNTED:
+            state.update_batch(keys)
+            return
+        keys = keys.view(U64)
+        for s in range(0, len(keys), _CHUNK):
+            state.update_batch(keys[s:s + _CHUNK])
 
+    hits = 0
     for trial in range(40):
         n_rows = int(rng.integers(1, 400))
         n_groups = int(rng.integers(1, 6))
         codes = rng.integers(0, n_groups, size=n_rows).astype(np.int64)
-        # ensure every group id occurs so bincount bounds line up
         codes[:n_groups] = np.arange(n_groups)
         scalar = bool(rng.integers(0, 2))
         lo = 0 if rng.integers(0, 2) else -3          # sometimes negatives
         hi = [60_000, 9_000_000][int(rng.integers(0, 2))]  # sometimes huge
         if scalar:
-            vals = rng.integers(lo, hi, size=n_rows).astype(np.int64)
-            arr = pa.array(vals)
+            arr = pa.array(rng.integers(lo, hi, size=n_rows).astype(np.int64))
         else:
             lens = rng.integers(0, 300, size=n_rows)
             flat = rng.integers(lo, hi, size=int(lens.sum())).astype(np.int64)
             offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
             arr = pa.ListArray.from_arrays(pa.array(offs), pa.array(flat))
-        batch = pa.RecordBatch.from_arrays([arr], ["v"])
 
-        gc = _grouped_counts(batch, "v", codes, n_groups)
-        vals_b, bounds = _grouped_column(batch, "v", codes, n_groups)
+        order = np.argsort(codes, kind="stable")
+        bounds = np.searchsorted(codes[order], np.arange(n_groups + 1))
+        values, vbounds = _read(arr.take(order), bounds)
+        for g in range(n_groups):
+            gvals = values[vbounds[g]:vbounds[g + 1]]
+            hist = _histogram(gvals)
+            # the decline contract, per group
+            applicable = (len(gvals) >= _HIST_MIN and int(gvals.min()) >= 0
+                          and int(gvals.max()) + 1 < _VOCAB_LIMIT)
+            assert (hist is not None) == applicable, (trial, g)
+            if hist is None:
+                continue
+            hits += 1
+            assert int(hist[1].sum()) == len(gvals)
+            for spec in specs:
+                kind = KINDS[spec.kind]
+                ref, got = kind.new(spec.p), kind.new(spec.p)
+                raw_update(kind, ref, gvals)
+                kind.update_counts(got, *hist)
+                assert got.to_bytes() == ref.to_bytes(), (trial, spec.kind, g)
+    assert hits
 
-        for spec in specs:
-            kind = KINDS[spec.kind]
-            for g in range(n_groups):
-                ref = kind.new(spec.p)
-                kind.update(ref, vals_b[bounds[g]:bounds[g + 1]])
-                if gc is not None:
-                    got = kind.new(spec.p)
-                    keys, cnts, nv = gc[g]
-                    kind.update_counts(got, keys, cnts)
-                    assert states_equal(got, ref, spec.kind), \
-                        (trial, spec.kind, g)
-                    assert nv == bounds[g + 1] - bounds[g]
-        # declination contract: the fast path must refuse batches whose
-        # keys are negative or whose composite range exceeds the limit
-        flat_np = (vals if scalar
-                   else flat if len(flat) else np.empty(0, dtype=np.int64))
-        if len(flat_np) >= 8192:
-            applicable = (int(flat_np.min()) >= 0 and
-                          (int(flat_np.max()) + 1) * n_groups < (1 << 22))
-            assert (gc is not None) == applicable, trial
+    # the rule's edges: the bound itself, too few values, floats
+    ok = np.zeros(_HIST_MIN, dtype=np.int64)
+    assert _histogram(ok) is not None
+    assert _histogram(ok[1:]) is None
+    assert _histogram(ok.astype(np.float64)) is None
+    assert _histogram(np.append(ok, -1)) is None
+    assert _histogram(np.append(ok, _VOCAB_LIMIT - 2)) is not None
+    assert _histogram(np.append(ok, _VOCAB_LIMIT - 1)) is None
+
+
+def test_accumulator_equals_per_group_reference_fuzz():
+    """_Accumulator (one row sort per batch, one read per column) against
+    a plain per-group reference built from the rows as Python values:
+    same bytes, n_rows and n_values for every (group, spec), kll
+    included, over NULL elements, NULL cells (holding elements or not),
+    NULL/NaN floats, struct rows with a NULL or NaN field (dw, ps), a
+    NULL group, 1 to 3,000 groups and sliced batches. Pure numpy, no
+    Spark session."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from grenier_spark.operators.sketch_build import (_TAIL_FIELDS, KINDS,
+                                                      _Accumulator)
+
+    specs = [SketchSpec.of("h", "hll", "tok", p=10),
+             SketchSpec.of("c", "cms", "tok", depth=3, width=256, seed=7),
+             SketchSpec.of("g", "mg", "tok", k=16),
+             SketchSpec.of("b", "bloom", "tok2", m=1 << 12, k=3, seed=7),
+             SketchSpec.of("q", "kll", "tok2", k=40),
+             SketchSpec.of("k", "kll", "x", k=40),
+             SketchSpec.of("d", "dd", "x"),
+             SketchSpec.of("w", "dw", "dw"),
+             SketchSpec.of("p", "ps", "ps", k=4)]
+    dtypes = {"tok": np.int64, "tok2": np.int64, "x": np.float64,
+              "dw": (np.float64, np.int64),
+              "ps": (np.int64, np.int64, np.float64)}
+    schema = StructType([StructField("src", StringType())] + _TAIL_FIELDS)
+
+    def kept(v):
+        return v is not None and not (isinstance(v, float) and math.isnan(v))
+
+    def cell_values(col, cell):
+        """One cell's values as the build contract reads them."""
+        if col in ("dw", "ps"):
+            if cell is None or not all(kept(v) for v in cell.values()):
+                return []
+            return [tuple(cell.values())]
+        if col == "x":
+            return [cell] if kept(cell) else []
+        return [v for v in (cell or []) if kept(v)]
+
+    def reference(batches):
+        states, counts = {}, {}
+        for rb in batches:
+            by_group: dict = {}
+            for r in rb.to_pylist():
+                by_group.setdefault(r["src"], []).append(r)
+            for gkey, mine in by_group.items():
+                for spec in specs:
+                    kind = KINDS[spec.kind]
+                    vals = [v for r in mine
+                            for v in cell_values(spec.column,
+                                                 r[spec.column])]
+                    dt = dtypes[spec.column]
+                    if isinstance(dt, tuple):
+                        arr = np.rec.fromarrays(
+                            [np.array([v[i] for v in vals], dtype=d)
+                             for i, d in enumerate(dt)])
+                    else:
+                        arr = np.array(vals, dtype=dt)
+                    key = ((gkey,), spec.name)
+                    st = states.setdefault(key, kind.new(spec.p))
+                    kind.update(st, arr)
+                    cnt = counts.setdefault(key, [0, 0])
+                    cnt[0] += len(mine)
+                    cnt[1] += len(vals)
+        # the partial rows carry a state's between-stage encoding
+        return {k: (getattr(st, "to_partial_bytes", st.to_bytes)(),
+                    *counts[k]) for k, st in states.items()}
+
+    rng = np.random.default_rng(11)
+    for trial, n_groups in enumerate([1, 1, 2, 3, 17, 17, 300, 3000]):
+        n = int(rng.integers(n_groups, 2 * n_groups + 2000))
+        src = [f"s{i}" for i in rng.integers(0, n_groups, n)]
+        if trial % 2:
+            src[int(rng.integers(0, n))] = None          # a NULL group
+        lens = rng.integers(0, 40, n)
+        offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+        total = int(offs[-1])
+        # ids dense enough that big groups take the histogram path
+        flat = rng.integers(0, 3000 if trial < 4 else 1 << 40, total)
+        null_el = rng.random(total) < 0.02
+        null_cell = pa.array(rng.random(n) < 0.05)   # may hold elements
+        tok = pa.ListArray.from_arrays(
+            pa.array(offs), pa.array(flat, mask=null_el), mask=null_cell)
+        tok2 = pa.ListArray.from_arrays(pa.array(offs), pa.array(flat))
+        xv = rng.gamma(2.0, 3.0, n)
+        xv[rng.random(n) < 0.05] = np.nan
+        x = pa.array(xv, mask=rng.random(n) < 0.05)
+        big = (1 << 62) + rng.integers(0, 1 << 20, n)   # |id| > 2^53
+        dw = pa.StructArray.from_arrays(
+            [pa.array(xv), pa.array(rng.integers(0, 5, n),
+                                    mask=rng.random(n) < 0.05)],
+            ["v", "w"], mask=pa.array(rng.random(n) < 0.05))
+        pv = rng.random(n)
+        pv[rng.random(n) < 0.05] = np.nan
+        ps = pa.StructArray.from_arrays(
+            [pa.array(big, mask=rng.random(n) < 0.05),
+             pa.array(rng.integers(1, 9, n)), pa.array(pv)],
+            ["id", "w", "prio"])
+        rb = pa.record_batch([pa.array(src), tok, tok2, x, dw, ps],
+                             names=["src", "tok", "tok2", "x", "dw", "ps"])
+        cuts = sorted(int(c) for c in rng.integers(0, n + 1, 2))
+        batches = [rb.slice(0, cuts[0]), rb.slice(cuts[0], cuts[1] - cuts[0]),
+                   rb.slice(cuts[1])]
+
+        acc = _Accumulator(specs, ["src"], schema)
+        for b in batches:
+            acc.feed(b)
+        out = acc.flush().to_pydict()
+        got = {((g,), name): (sk, nr, nv) for g, name, sk, nr, nv in zip(
+            out["src"], out["sketch_name"], out["sketch"], out["n_rows"],
+            out["n_values"])}
+        assert got == reference(batches), (trial, n_groups)
 
 
 # -- grouped-aggregate (UDAF) surface ---------------------------------------
@@ -768,26 +903,35 @@ def test_token_freq_spectrum_matches_counter(spark, docs_df, local_rows):
     assert got == want
 
 
-def test_udaf_refuses_lossy_nullable_int64(spark):
-    """A nullable BIGINT key column with values >= 2^53 reaches the
-    grouped-agg UDF as float64 (lossy): the aggregate must raise, not emit
-    a silently-wrong sketch."""
-    import pandas as pd
-    import pytest as _pytest
+def test_udaf_keeps_nullable_int64_exact(spark):
+    """A nullable BIGINT key column reaches the Arrow grouped-agg UDF as
+    exact int64 next to a NULL (a pandas UDF saw float64, which rounds
+    2^62 + 1 to 2^62): the aggregate equals build_sketches over the same
+    rows, with the big key kept exact, on the Column and SQL surfaces."""
+    from grenier_spark.functions.aggregates import (hll_agg_col,
+                                                    register_sql_aggregates)
 
-    from grenier_spark.functions.aggregates import hll_agg_col
+    df = spark.createDataFrame([("a", 2 ** 62 + 1), ("a", None), ("a", 5)],
+                               "g string, k long")
+    batch = build_sketches(df, [SketchSpec.of("h", "hll", "k", p=12)],
+                           group_cols=["g"]).first()
+    assert batch.n_values == 2
 
-    df = spark.createDataFrame(
-        pd.DataFrame({"g": ["a", "a", "a"],
-                      "k": [2 ** 62 + 1, None, 5]}),
-        schema="g string, k long")
-    with _pytest.raises(Exception, match="2\\^53|float64"):
-        df.groupBy("g").agg(hll_agg_col("k").alias("s")).collect()
-    # NULL-free stays exact int64 and works
-    ok = spark.createDataFrame(
-        pd.DataFrame({"g": ["a", "a"], "k": [2 ** 62 + 1, 5]}),
-        schema="g string, k long")
-    assert ok.groupBy("g").agg(hll_agg_col("k").alias("s")).count() == 1
+    def sketch_of(keys):
+        st = hll.make_p(12)
+        hll.add_batch(st, wang64(np.array(keys, dtype=np.int64).view(U64)))
+        return bytes(hll.to_bytes(st))
+
+    exact = sketch_of([2 ** 62 + 1, 5])
+    assert exact != sketch_of([2 ** 62, 5])   # the rounded key is visible
+    assert bytes(batch.sketch) == exact
+    got = df.groupBy("g").agg(hll_agg_col("k").alias("s")).first()
+    assert bytes(got.s) == exact
+    register_sql_aggregates(spark)
+    df.createOrReplaceTempView("nullable_big_keys")
+    sql = spark.sql("SELECT hll_agg(k) AS s FROM nullable_big_keys "
+                    "GROUP BY g").first()
+    assert bytes(sql.s) == exact
 
 
 def test_udaf_drops_null_token_elements_like_batch(spark):
