@@ -25,10 +25,10 @@ key's colliding fingerprint — the caller contract is delete-only-what-
 you-inserted (Fan et al. §3.2).
 
 Hot-path shape: ``contains`` is fully vectorized numpy (the probe path —
-the one that runs at token scale, e.g. scan-stage routing like
-``bloom_probe_udf``). ``update_batch``/``delete_batch`` vectorize the
-hash computations but place keys one at a time (eviction chains mutate
-state sequentially) — builds are for moderate-cardinality key SETS (dim
+the one that runs at token scale, e.g. scan-stage routing through
+``functions._udf.broadcast_probe_udf``). ``update_batch``/``delete_batch``
+vectorize the hash computations but place keys one at a time (eviction
+chains mutate state sequentially) — builds are for moderate-cardinality key SETS (dim
 keys, eval shingles, corpus ids), not token streams; token-scale
 insert-only membership stays Bloom.
 

@@ -1,6 +1,6 @@
 """The one UDF helper behind every sketch-reading and key-hashing Column
 and SQL function: ``pyspark.sql.functions.arrow_udf`` (scalar, one
-``pa.Array`` per argument in, one ``pa.Array`` out), in three shapes:
+``pa.Array`` per argument in, one ``pa.Array`` out), in four shapes:
 
 * :func:`row_udf` — per row: each sketch argument loads through
   ``get_kind(kind).load``, plain arguments (quantile lists, ``q``, key
@@ -10,11 +10,18 @@ and SQL function: ``pyspark.sql.functions.arrow_udf`` (scalar, one
   blob in the batch loads once and answers the keys it owns with one
   vectorized call (the common shape is one broadcast sketch against many
   keys; a per-row probe would be per-row Python).
+* :func:`broadcast_probe_udf` — one sketch shipped as a broadcast variable
+  against an int64 key column or an ``array<bigint>`` key column: the
+  result has the key column's shape. The sketch loads once per Python
+  worker, memoized on the broadcast object itself, so no batch re-reads
+  or hashes the blob. The dedup, decontamination and join prefilters
+  probe through it.
 * :func:`key_udf` — vectorized over integer columns (hashes, buckets).
 
 Integer columns are read as Arrow ``int64`` with their validity mask kept,
 so a NULL never promotes a batch to float64 (which rounds keys above 2^53).
-In every shape a NULL in any argument gives a NULL result.
+In every shape a NULL in any argument gives a NULL result; in an
+``array<bigint>`` key column a NULL element gives a NULL element.
 
 UDFs are built lazily, when a :class:`Udf` is called or registered:
 arrow_udf parses its DDL type through the active session, so module import
@@ -39,9 +46,10 @@ class Udf:
     calling it on columns (or names) builds the arrow_udf and applies it,
     :meth:`udf` builds it for ``spark.udf.register``."""
 
-    def __init__(self, ddl: str, batch: Callable):
+    def __init__(self, ddl: str, batch: Callable, deterministic: bool = True):
         self.ddl = ddl
         self.batch = batch
+        self.deterministic = deterministic
 
     def udf(self):
         from pyspark.sql.functions import arrow_udf
@@ -54,7 +62,8 @@ class Udf:
         def run(*arrays):
             return batch(out, *arrays)
 
-        return arrow_udf(run, dtype)
+        f = arrow_udf(run, dtype)
+        return f if self.deterministic else f.asNondeterministic()
 
     def __call__(self, *cols: "Column | str") -> Column:
         return self.udf()(*(F.col(c) if isinstance(c, str) else c
@@ -115,6 +124,47 @@ def probe_udf(ddl: str, kind: str, method: str) -> Udf:
         return _masked(res, ok, out)
 
     return Udf(ddl, batch)
+
+
+_LOADED: dict = {}   # broadcast -> its loaded sketch, per Python worker
+
+
+def _broadcast_sketch(kind: str, bc):
+    """``bc``'s sketch, loaded once per Python worker. A worker keeps one
+    broadcast object per broadcast id, so the memo keys on that object
+    (holding it keeps the identity from being reused); at most four stay
+    loaded."""
+    sk = _LOADED.get(bc)
+    if sk is None:
+        if len(_LOADED) >= 4:
+            _LOADED.clear()
+        sk = _LOADED[bc] = get_kind(kind).load(bc.value)
+    return sk
+
+
+def broadcast_probe_udf(ddl: str, kind: str, method: str, bc,
+                        deterministic: bool = True) -> Udf:
+    """``load(bc.value).<method>(keys)`` over an int64 key column, or over
+    every element of an ``array<bigint>`` key column (``ddl`` is then an
+    array type), one vectorized call per batch; keys reach it as uint64
+    bits. ``bc`` is a ``SparkContext.broadcast`` of the sketch bytes."""
+
+    def batch(out, keys):
+        probe = getattr(_broadcast_sketch(kind, bc), method)
+        if not pa.types.is_list(keys.type):
+            return _masked(probe(_values(keys).view(np.uint64)),
+                           _valid((keys,)), out)
+        flat = keys.flatten()   # a NULL cell holds no element
+        res = _masked(probe(_values(flat).view(np.uint64)), _valid((flat,)),
+                      out.value_type)
+        lens = pc.fill_null(pc.list_value_length(keys), 0).to_numpy()
+        offsets = np.zeros(len(keys) + 1, dtype=np.int32)
+        np.cumsum(lens, out=offsets[1:])
+        return pa.ListArray.from_arrays(
+            offsets, res, type=out,
+            mask=keys.is_null() if keys.null_count else None)
+
+    return Udf(ddl, batch, deterministic)
 
 
 def key_udf(ddl: str, fn: Callable) -> Udf:

@@ -230,8 +230,8 @@ def contamination_report_prefiltered(train: DataFrame, eval_set: DataFrame,
     the totals scan skips the per-window md5 that dominates the probe
     scan's cost.
     """
-    from .dedup import bloom_probe_udf
     from ..core.bloom import Bloom, params_for
+    from ..functions._udf import broadcast_probe_udf
     from .sketch_build import SketchSpec, build_sketches
 
     m, kh = params_for(max(1, expected_shingles), fpr)
@@ -248,7 +248,8 @@ def contamination_report_prefiltered(train: DataFrame, eval_set: DataFrame,
     blob = (bytes(row.sketch) if row is not None
             else Bloom(m, kh, seed=seed).to_bytes())
     bc = train.sparkSession.sparkContext.broadcast(blob)
-    probe = bloom_probe_udf(bc)
+    probe = broadcast_probe_udf("boolean", "bloom", "contains", bc,
+                                deterministic=False)
 
     tr = (train
           .select(id_col,

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..core.bits import U64, splitmix64_scalar, wang64
+from ..functions._udf import broadcast_probe_udf
 
 
 def _content_key(text_col: str, id_col: str):
@@ -879,60 +880,6 @@ def connected_components_star(pairs: DataFrame,
 
 # -- incremental ingest dedup (Bloom-gated) ---------------------------------
 
-_BLOOM_PROBE_CACHE: "dict[bytes, object]" = {}
-
-
-def _worker_memo(cache: "dict[bytes, object]", blob: bytes, loader):
-    """Per-worker-process memo of a DESERIALIZED broadcast sketch blob:
-    Python workers are reused across Arrow batches and tasks, so the
-    unpack cost is paid once per worker, not per batch. Keyed on an md5
-    digest of the blob; bounded to a handful of concurrently-live
-    objects (shared discipline of the Bloom and CMS probe paths)."""
-    import hashlib
-
-    key = hashlib.md5(blob).digest()
-    obj = cache.get(key)
-    if obj is None:
-        if len(cache) >= 4:
-            cache.clear()
-        obj = cache.setdefault(key, loader(blob))
-    return obj
-
-
-def bloom_probe_udf(bc):
-    """Arrow-batched probe of a broadcast Bloom blob (``bc`` = a
-    ``SparkContext.broadcast`` of the wire bytes): whole-batch vectorized
-    ``contains`` over the per-worker-memoized deserialized filter.
-    Nondeterministic ON PURPOSE (see :func:`incremental_ingest_dedup`).
-    Created lazily per call — module-level pandas_udfs break import (see
-    CLAUDE.md env gotchas)."""
-    @pandas_udf("boolean")
-    def _maybe_seen(keys: pd.Series) -> pd.Series:
-        bf = _bloom_from_cache(bc.value)
-        # A batch with NULL keys arrives as float64 with NaN — and the
-        # float64 promotion has ALREADY corrupted any present key with
-        # |k| >= 2^53 (md5 keys span the full int64 range), so a silent
-        # dropna-and-probe could claim "definitely new" for a true dup.
-        # Callers must feed a NULL-free long column (ingest dedup wraps
-        # the key in coalesce(.., 0)); fail loudly otherwise.
-        if keys.isna().any():
-            raise ValueError(
-                "bloom_probe_udf received NULL keys: the Arrow batch was "
-                "promoted to float64, which corrupts 64-bit content keys. "
-                "coalesce() the key column (NULL text -> constant) before "
-                "probing — see incremental_ingest_dedup.")
-        ks = keys.to_numpy(dtype=np.int64).view(np.uint64)
-        return pd.Series(bf.contains(ks))
-    return _maybe_seen.asNondeterministic()
-
-
-def _bloom_from_cache(blob: bytes):
-    """:func:`_worker_memo` of the DESERIALIZED Bloom filter (unpacked
-    bit array = 8x the wire blob)."""
-    from ..core.bloom import Bloom
-
-    return _worker_memo(_BLOOM_PROBE_CACHE, blob, Bloom.from_bytes)
-
 def _md5_low64_signed(text_col: str):
     """LOW half (hex chars 17-32) of md5(text) as a signed long (JVM-side)
     — the scalar content key the Bloom filter hashes internally (salted
@@ -1017,32 +964,26 @@ def incremental_ingest_dedup(existing: DataFrame, new: DataFrame,
     partial over each appended batch and merge, never probe a stale
     filter against a newer corpus.
 
-    Vectorized probe: one Arrow-batched pandas UDF over the blob —
-    ``Bloom.contains`` on the whole batch at once, not the per-row
-    blob-column probe of ``functions.bloom_contains_col``. The blob ships
-    via ``SparkContext.broadcast`` (fetched once per executor, not
-    serialized into every task), and the DESERIALIZED filter (unpackbits
-    is an 8x allocation) is memoized per Python worker process keyed on a
-    blob digest — paid once per worker, not once per Arrow batch.
+    Vectorized probe: the broadcast form of the UDF helper
+    (``functions._udf.broadcast_probe_udf``) — ``Bloom.contains`` on the
+    whole Arrow batch at once, not the per-row blob-column probe of
+    ``functions.bloom_contains_col``. The blob ships via
+    ``SparkContext.broadcast`` (fetched once per executor, not serialized
+    into every task), and the loaded filter (unpackbits is an 8x
+    allocation) is memoized per Python worker on the broadcast itself —
+    paid once per worker, not once per Arrow batch. A NULL text has a
+    NULL key and a NULL probe, so it is no candidate: is_new = true, the
+    NULL-keep of batch dedup.
     Marked nondeterministic ON PURPOSE: the probe is a pure function of
     the join key, so Catalyst's constraint inference would otherwise copy
     the predicate across the semi-join onto the CORPUS scan — a
     semantically harmless but Python-UDF-per-corpus-row pessimization.
     """
     bc = new.sparkSession.sparkContext.broadcast(bytes(bloom_bytes))
-    _probe_udf = lambda: bloom_probe_udf(bc)
-
-    # NULL-safe probe key: a NULL-text doc gets constant 0 so the batch
-    # stays int64 end-to-end (a single NaN would promote the whole Arrow
-    # batch to float64 and corrupt full-range keys — probe UDF raises).
-    # Routing stays correct either way: a 0-key false positive just
-    # reaches the exact _chash verification, where md5(NULL) = NULL
-    # matches nothing => is_new = true, same as batch dedup's NULL-keep.
-    keyed = (new.withColumn(
-        "_ckey", F.coalesce(_md5_low64_signed(text_col),
-                            F.lit(0).cast("long")))
-             .withColumn("_chash", F.md5(F.col(text_col))))
-    probed = keyed.withColumn("_maybe", _probe_udf()(F.col("_ckey")))
+    probe = broadcast_probe_udf("boolean", "bloom", "contains", bc,
+                                deterministic=False)
+    keyed = new.withColumn("_chash", F.md5(F.col(text_col)))
+    probed = keyed.withColumn("_maybe", probe(_md5_low64_signed(text_col)))
     # verification equality is the FULL 128-bit md5 (the same content
     # identity as exact_dup_*); only the Bloom routing key is 64-bit
     cand_keys = probed.where("_maybe").select("_chash").distinct()
@@ -1055,7 +996,7 @@ def incremental_ingest_dedup(existing: DataFrame, new: DataFrame,
             .join(F.broadcast(confirmed.withColumn("_hit", F.lit(True))),
                   "_chash", "left")
             .withColumn("is_new", F.col("_hit").isNull())
-            .drop("_ckey", "_chash", "_maybe", "_hit"))
+            .drop("_chash", "_maybe", "_hit"))
 
 
 # -- exact substring-span dedup (Lee et al. 2022) ----------------------------
@@ -1344,46 +1285,6 @@ FROM per_doc p JOIN w ON p.id = w.id"""
 
 # -- CMS-prefiltered substring-span dedup ------------------------------------
 
-_CMS_PROBE_CACHE: "dict[bytes, object]" = {}
-
-
-def _cms_from_cache(blob: bytes):
-    """:func:`_worker_memo` of the deserialized CountMin."""
-    from ..core.countmin import CountMin
-
-    return _worker_memo(_CMS_PROBE_CACHE, blob, CountMin.from_bytes)
-
-
-def cms_probe_positions_udf(bc, min_count: int):
-    """array<long> window keys -> array<int> 1-based positions whose CMS
-    estimate is >= ``min_count`` (a SUPERSET of the truly duplicated
-    positions: CMS never undercounts). Whole-batch vectorized: one
-    flatten + one CMS query + reduceat-free split by offsets. Created
-    lazily per call (module-level pandas_udfs break import)."""
-    @pandas_udf("array<int>")
-    def _probe(arrs: pd.Series) -> pd.Series:
-        cm = _cms_from_cache(bc.value)
-        lens = np.array([0 if a is None else len(a) for a in arrs],
-                        dtype=np.int64)
-        nz = np.flatnonzero(lens)
-        out = [None] * len(arrs)
-        if len(nz):
-            flat = np.concatenate(
-                [np.asarray(arrs.iloc[i], dtype=np.int64) for i in nz])
-            est = cm.query(flat.view(U64))
-            hit = est >= min_count
-            bounds = np.cumsum(lens[nz])
-            start = 0
-            for j, i in enumerate(nz):
-                stop = int(bounds[j])
-                pos = np.flatnonzero(hit[start:stop]) + 1
-                out[i] = pos.astype(np.int32)
-                start = stop
-        empty = np.array([], dtype=np.int32)
-        return pd.Series([empty if o is None else o for o in out])
-    return _probe
-
-
 def _window_key_col(text_col: str, k: int):
     """array<long>: per-doc low-64 md5 keys of each k-word window, in
     position order — the JVM expression twin of the k64 slice of
@@ -1418,11 +1319,14 @@ def duplicated_span_stats_prefiltered(df: DataFrame, text_col: str = "text",
        token-scale shuffle, the build discipline of sketch_build),
     2. broadcasts the merged matrix (depth x width int64; 32 MB at the
        4 x 2^20 default) and probes each doc's windows in the scan stage
-       (vectorized Arrow batch, one wang64 + min over rows per window),
-    3. explodes and shuffles ONLY the candidate positions whose estimate
-       is >= min_count — at web scale the duplication tail, typically a
-       few percent of windows — and computes the hex verify hash for
-       those rows alone,
+       through the broadcast form of the UDF helper
+       (``functions._udf.broadcast_probe_udf``: one vectorized query per
+       Arrow batch, one estimate per window key, the matrix loaded once
+       per Python worker); ``posexplode`` plus a filter keep the
+       positions whose estimate is >= min_count,
+    3. shuffles ONLY those candidate positions — at web scale the
+       duplication tail, typically a few percent of windows — and
+       computes the hex verify hash for those rows alone,
     4. runs the exact count -> island -> span tail unchanged.
 
     Exactness: CMS never undercounts, so every occurrence of a truly
@@ -1467,7 +1371,7 @@ def _prefiltered_occ(df: DataFrame, text_col: str, id_col: str, k: int,
     if row is None:
         return None
     bc = df.sparkSession.sparkContext.broadcast(bytes(row.sketch))
-    probe = cms_probe_positions_udf(bc, min_count)
+    est = broadcast_probe_udf("array<bigint>", "cms", "query", bc)
     words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
     base = (df.select(id_col, words.alias("_w"),
                       _window_key_col(text_col, k).alias("_wk"))
@@ -1477,11 +1381,12 @@ def _prefiltered_occ(df: DataFrame, text_col: str, id_col: str, k: int,
                         (F.size("_w") - k + 1).cast("long")
                         .alias("n_windows"),
                         "_w",
-                        F.explode(probe(F.col("_wk"))).alias("pos32"))
+                        F.posexplode(est(F.col("_wk"))).alias("_p", "_est"))
+            .where(F.col("_est") >= min_count)
             .select(id_col, "n_words", "n_windows",
-                    F.col("pos32").cast("long").alias("pos"),
+                    (F.col("_p") + 1).cast("long").alias("pos"),
                     F.md5(F.concat_ws(" ", F.slice(
-                        "_w", F.col("pos32"), k))).alias("sh"))
+                        "_w", F.col("_p") + 1, k))).alias("sh"))
             .persist())
 
 

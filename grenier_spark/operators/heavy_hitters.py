@@ -14,7 +14,6 @@ with k = number of partitions, asserted in tests/test_heavy_hitters.py).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,6 +21,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType,
                                StructField, StructType)
 
 from ..core.countish import LossyCounter
+from .sketch_build import _grouped_reads
 
 
 def heavy_hitter_tokens(df: DataFrame, token_col: str, support: float,
@@ -55,49 +55,18 @@ def heavy_hitter_tokens(df: DataFrame, token_col: str, support: float,
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            if group_cols:
-                gvals = pd.DataFrame(
-                    {c: batch.column(c).to_pandas() for c in group_cols})
-                codes, uniques = pd.factorize(
-                    pd.MultiIndex.from_frame(gvals) if len(group_cols) > 1
-                    else gvals[group_cols[0]], sort=False,
-                    use_na_sentinel=False)
-
-                def _norm(v):
-                    # NaN group values (nullable numeric group col) never
-                    # match as dict keys across batches (nan != nan) — a
-                    # fresh counter per batch for the null group would
-                    # inflate n_parts and weaken every bound for it
-                    return None if (not isinstance(v, (tuple, list))
-                                    and pd.isna(v)) else v
-
-                gkeys = [tuple(_norm(x) for x in u) if isinstance(u, tuple)
-                         else (_norm(u),) for u in uniques]
-            else:
-                codes = np.zeros(batch.num_rows, dtype=np.int64)
-                gkeys = [()]
-            arr = batch.column(token_col)
-            if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
-                offsets = arr.offsets.to_numpy()
-                flat = arr.values.slice(int(offsets[0]),
-                                        int(offsets[-1] - offsets[0]))
-                vcodes = np.repeat(codes, np.diff(offsets))
-            else:
-                flat = arr
-                vcodes = codes
-            # drop nulls BEFORE numpy conversion: int64 arrays with nulls
-            # otherwise convert to float64, mangling |id| > 2^53 token ids
-            if flat.null_count:
-                ok = ~np.asarray(flat.is_null())
-                flat = flat.drop_null()
-                vcodes = vcodes[ok]
-            values = flat.to_numpy(zero_copy_only=False)
+            # the build's grouping: each group's tokens in batch order
+            # (lossy counting is order-sensitive), NULLs dropped at the
+            # Arrow level so |id| > 2^53 stays exact
+            gkeys, _, reads = _grouped_reads(batch, group_cols, [token_col])
+            values, vbounds = reads[token_col]
             for g, gkey in enumerate(gkeys):
                 lc = counters.get(gkey)
                 if lc is None:
                     lc = counters.setdefault(
                         gkey, LossyCounter(support, error_tolerance))
-                lc.observe_batch(values[vcodes == g].astype(np.int64))
+                lc.observe_batch(
+                    values[vbounds[g]:vbounds[g + 1]].astype(np.int64))
         out = {f.name: [] for f in cand_schema.fields}
         for gkey, lc in counters.items():
             for token, fv in lc.f.items():
@@ -135,17 +104,24 @@ def heavy_hitter_tokens(df: DataFrame, token_col: str, support: float,
     # drops it; call .unpersist() on the result's source if calling in a
     # tight loop (one-shot analysis queries — the normal use — don't care).
     partials = src.mapInArrow(partial, cand_schema).persist()
+    tkeys = [f"_total_{c}" for c in group_cols]
     totals = (partials.where("is_total")
-              .groupBy(*group_cols).agg(F.sum("n").alias("n_total")))
+              .groupBy(*group_cols).agg(F.sum("n").alias("n_total"))
+              .toDF(*tkeys, "n_total"))
     cands = (partials.where(~F.col("is_total"))
              .groupBy(*group_cols, "token")
              .agg(F.sum("f").alias("f"), F.sum("delta").alias("delta"),
                   F.sum("n").alias("n_seen"),
                   F.count(F.lit(1)).alias("n_parts")))
-    # ungrouped totals is ONE row — broadcast explicitly so the plan is a
-    # BroadcastNestedLoopJoin by construction, not by AQE's grace
-    joined = (cands.join(totals, group_cols) if group_cols
-              else cands.crossJoin(F.broadcast(totals)))
+    # null-safe on the group: a NULL group is a real group, as in the
+    # partials. Ungrouped totals is ONE row — broadcast explicitly so the
+    # plan is a BroadcastNestedLoopJoin by construction, not by AQE's grace
+    if group_cols:
+        joined = cands.join(totals, [F.col(c).eqNullSafe(F.col(t))
+                                     for c, t in zip(group_cols, tkeys)])
+        joined = joined.drop(*tkeys)
+    else:
+        joined = cands.crossJoin(F.broadcast(totals))
     # COMPLETE upper bound, two terms beyond f + delta:
     #
     # * absent mass — partitions whose summaries do not contain the token

@@ -303,7 +303,7 @@ def bloom_pruned_join(fact: DataFrame, dim: DataFrame,
     value chain).
     """
     from ..core.bloom import Bloom, params_for
-    from .dedup import bloom_probe_udf
+    from ..functions._udf import broadcast_probe_udf
     from .sketch_build import SketchSpec, build_sketches
 
     if how not in ("inner", "semi", "leftsemi", "left_semi"):
@@ -328,7 +328,8 @@ def bloom_pruned_join(fact: DataFrame, dim: DataFrame,
     blob = (bytes(row.sketch) if row is not None
             else Bloom(m, kh, seed=seed).to_bytes())
     bc = fact.sparkSession.sparkContext.broadcast(blob)
-    probe = bloom_probe_udf(bc)
+    probe = broadcast_probe_udf("boolean", "bloom", "contains", bc,
+                                deterministic=False)
 
     pruned = fact.where(nn_fact).where(probe(key))
     return pruned.join(dim, cols, how)

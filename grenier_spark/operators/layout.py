@@ -113,8 +113,7 @@ def kll_range_buckets(df: DataFrame, col: str, n_buckets: int,
     import pandas as pd
     from pyspark.sql import functions as F  # noqa: F811 (local for clarity)
 
-    from ..core.kll import KLL
-    from .sketch_build import SketchSpec, build_sketches
+    from .sketch_build import SketchSpec, build_sketches, get_kind
 
     if n_buckets < 1:
         raise ValueError("kll_range_buckets needs n_buckets >= 1")
@@ -126,7 +125,7 @@ def kll_range_buckets(df: DataFrame, col: str, n_buckets: int,
     if row is None or n_buckets == 1:
         bounds = np.empty(0, dtype=np.float64)
     else:
-        sk = KLL.from_bytes(bytes(row.sketch))
+        sk = get_kind("kll").load(bytes(row.sketch))
         qs = np.arange(1, n_buckets) / float(n_buckets)
         bounds = np.asarray(sk.quantiles(qs), dtype=np.float64)
     bc = df.sparkSession.sparkContext.broadcast(bounds.tobytes())

@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..core.freqdirs import FrequentDirections
-from .sketch_build import SketchSpec, build_sketches
+from .sketch_build import SketchSpec, build_sketches, get_kind
 
 
 def fd_directions(blob: bytes, r: int) -> "tuple[np.ndarray, np.ndarray]":
@@ -46,7 +45,7 @@ def fd_directions(blob: bytes, r: int) -> "tuple[np.ndarray, np.ndarray]":
     their energies (squared singular values of B) from a serialized FD
     state. r' = min(r, rows(B)) — a group with fewer observed directions
     yields fewer; deterministic given the sketch bytes."""
-    fd = FrequentDirections.from_bytes(blob)
+    fd = get_kind("fd").load(blob)
     if not len(fd.B):
         return (np.empty((0, fd.dim)), np.empty(0))
     _u, s, vt = np.linalg.svd(fd.B, full_matrices=False)
@@ -164,10 +163,10 @@ def fd_projection_quality(vectors: DataFrame, r: int = 8, ell: int = 32,
         if row["sketch_name"] != "fdx":
             continue
         g = row[group_col]
-        twin = FrequentDirections.from_bytes(bytes(row["sketch"]))
+        twin = get_kind("fd").load(bytes(row["sketch"]))
         evals = np.sort(np.linalg.eigvalsh(twin.gram()))[::-1]
         tail = float(evals[r:].sum())  # exact ||A - A_r||_F^2
-        prod = FrequentDirections.from_bytes(sk[(g,)])
+        prod = get_kind("fd").load(sk[(g,)])
         bounds.append((g, tail, prod.delta, prod.fnorm2))
     spark = vectors.sparkSession
     bdf = spark.createDataFrame(

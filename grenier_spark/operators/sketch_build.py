@@ -103,6 +103,11 @@ _CHUNK = 1 << 16   # cache-block hash kernels: wang64/scatter temporaries stay
 # L2-resident (measured 3x single-core vs full-width passes)
 _VOCAB_LIMIT = 1 << 22  # dictionary-update fast path bound (16 MB bincount)
 _HIST_MIN = 8192  # fewer values: a histogram costs more than it saves
+# bincount slots per value a histogram may span: at 4 a bincount costs
+# about one raw hll update of the same values (measured at 8,192 to
+# 262,144 values); sparser ids take the raw update, never a bincount as
+# long as their largest id
+_HIST_SPAN = 4
 _NATIVE_BATCH_ROWS = 1 << 16  # rows per batch the native reader feeds
 
 
@@ -163,14 +168,16 @@ def _read(col: pa.Array, bounds: np.ndarray):
 def _histogram(values: np.ndarray):
     """(distinct keys as u64, counts) of one group's values, or None when
     a histogram does not pay: fewer than ``_HIST_MIN`` values, non-integer
-    values, a negative one, or ``max + 1 >= _VOCAB_LIMIT``. Dense small
+    values, a negative one, ``max + 1 >= _VOCAB_LIMIT``, or ids too sparse
+    for their count (``max + 1 > _HIST_SPAN * len(values)``). Dense small
     non-negative ids (BPE-style vocabularies) repeat many times per
     batch, and the histogram-taking kinds fold each distinct key once
     with its multiplicity — byte-exact against the raw stream."""
     if len(values) < _HIST_MIN or values.dtype.kind not in "iu":
         return None
     vmax = int(values.max())
-    if vmax + 1 >= _VOCAB_LIMIT or int(values.min()) < 0:
+    if (vmax + 1 >= _VOCAB_LIMIT or vmax + 1 > _HIST_SPAN * len(values)
+            or int(values.min()) < 0):
         return None
     counts = np.bincount(values.astype(np.intp, copy=False))
     keys = np.flatnonzero(counts)
@@ -543,6 +550,25 @@ def _batch_group_codes(batch: pa.RecordBatch, group_cols: "list[str]"):
     return np.zeros(batch.num_rows, dtype=np.int64), [()]
 
 
+def _grouped_reads(batch: pa.RecordBatch, group_cols: "list[str]",
+                   value_cols: "list[str]"):
+    """(gkeys, bounds, reads) of one batch: its rows sorted by group once
+    (one stable argsort of the :func:`_batch_group_codes` codes, one take
+    of ``value_cols``; group g is rows ``bounds[g]:bounds[g + 1]`` in
+    batch order), then each value column read once by :func:`_read` into
+    ``reads[column] = (values, value_bounds)``."""
+    codes, gkeys = _batch_group_codes(batch, group_cols)
+    cols = batch.select(value_cols)
+    if len(gkeys) > 1:
+        order = np.argsort(codes, kind="stable")
+        bounds = np.searchsorted(codes[order], np.arange(len(gkeys) + 1))
+        cols = cols.take(order)
+    else:
+        bounds = np.array([0, batch.num_rows])
+    return gkeys, bounds, {c: _read(cols.column(c), bounds)
+                           for c in value_cols}
+
+
 class _Accumulator:
     """Per-task partial-sketch state shared by every build path (the
     DataFrame path, the native-reader path, the weighted-rows builders):
@@ -564,20 +590,11 @@ class _Accumulator:
         self.t0 = time.monotonic()
 
     def feed(self, batch: pa.RecordBatch) -> None:
-        """Fold one batch: its rows sorted by group once (one stable
-        argsort of the group codes, one take of the value columns), then
-        each value column read once by :func:`_read`."""
+        """Fold one batch, grouped and read by :func:`_grouped_reads`."""
         if batch.num_rows == 0:
             return
-        codes, gkeys = _batch_group_codes(batch, self.group_cols)
-        cols = batch.select(self.value_cols)
-        if len(gkeys) > 1:
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(gkeys) + 1))
-            cols = cols.take(order)
-        else:
-            bounds = np.array([0, batch.num_rows])
-        reads = {c: _read(cols.column(c), bounds) for c in self.value_cols}
+        gkeys, bounds, reads = _grouped_reads(batch, self.group_cols,
+                                              self.value_cols)
         for g, gkey in enumerate(gkeys):
             group: dict = {}   # column -> (values, histogram or None)
             for spec, kind in self.specs:

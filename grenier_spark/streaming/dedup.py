@@ -82,17 +82,18 @@ def ingest_dedup_stream(stream_df: DataFrame, corpus_hashes: DataFrame,
     from the sink's checkpoint alone. The index is re-resolved per
     micro-batch (stream-static semantics), which keeps the growing corpus
     visible to the VERIFY side between batches."""
-    from ..operators.dedup import _md5_low64_signed, bloom_probe_udf
+    from ..functions._udf import broadcast_probe_udf
+    from ..operators.dedup import _md5_low64_signed
 
     bc = stream_df.sparkSession.sparkContext.broadcast(bytes(bloom_bytes))
+    probe = broadcast_probe_udf("boolean", "bloom", "contains", bc,
+                                deterministic=False)
     keyed = (stream_df
              .withColumn("content_hash", F.md5(F.col(text_col)))
-             # coalesce: NULL-safe probe key, same contract as the batch
-             # ingest dedup (a NaN batch would corrupt full-range keys)
+             # a NULL text has a NULL key, in no filter: it is new
              .withColumn("_maybe",
-                         bloom_probe_udf(bc)(
-                             F.coalesce(_md5_low64_signed(text_col),
-                                        F.lit(0).cast("long")))))
+                         F.coalesce(probe(_md5_low64_signed(text_col)),
+                                    F.lit(False))))
     clean = keyed.where(~F.col("_maybe")).withColumn("is_new", F.lit(True))
     hits = (corpus_hashes
             .select(F.col(hash_col).alias("content_hash"))

@@ -91,3 +91,44 @@ def test_ungrouped_totals_join_is_broadcast(spark, docs_tiny):
         if c / n >= SUPPORT:
             assert tok in got, (tok, c / n)
     assert (pdf.n == n).all()
+
+
+def test_grouped_partials_equal_per_group_lossy_counter(spark):
+    """Interleaved rows of several groups, a NULL group, NULL elements and
+    a token above 2^53, in one partition: each group's tokens reach its
+    counter in row order, so f, delta and n equal a per-group
+    LossyCounter fed the same stream (one summary: n_parts = 1, no
+    absent mass)."""
+    from grenier_spark.core.countish import LossyCounter
+
+    big = 2**60 + 1   # a float64 round trip changes it
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(600):
+        toks = [int(t) for t in rng.zipf(1.6, size=int(rng.integers(0, 12)))
+                if t < 2**40]
+        if i % 7 == 0:
+            toks.append(big)
+        if i % 11 == 0:
+            toks.insert(0, None)
+        rows.append((["a", "b", None][int(rng.integers(0, 3))], toks))
+    support, eps = 0.02, 0.005
+    df = spark.createDataFrame(rows, "g string, tokens array<long>")
+    got = heavy_hitter_tokens(df.coalesce(1), "tokens", support, eps,
+                              group_cols=["g"]).collect()
+    want = {}
+    for g in ("a", "b", None):
+        lc = LossyCounter(support, eps)
+        lc.observe_batch(np.array([t for s, toks in rows if s == g
+                                   for t in toks if t is not None],
+                                  dtype=np.int64))
+        for tok, f in lc.f.items():
+            est = (f + lc.delta[tok] + 1) / lc.n
+            if est >= support:
+                want[(g, int(tok))] = (int(f), lc.n, est)
+    assert (None, big) in want
+    have = {(r.g, r.token): (r.f, r.n, r.est_freq) for r in got}
+    assert sorted(have, key=str) == sorted(want, key=str)
+    for key, (f, n, est) in want.items():
+        assert have[key][:2] == (f, n), key
+        assert have[key][2] == pytest.approx(est, rel=1e-12), key

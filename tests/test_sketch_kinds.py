@@ -58,6 +58,31 @@ def test_every_kind_builds_serializes_loads_and_merges():
             assert merged == whole.to_bytes(), name
 
 
+def test_sketch_bytes_load_only_through_the_kind_table():
+    """Outside ``core/`` (the sketches themselves), the only readers of
+    sketch bytes are the loaders in the KINDS rows: every other module
+    loads through ``get_kind(kind).load``, so no executor or driver path
+    carries its own loader."""
+    import pathlib
+    import re
+
+    import grenier_spark
+
+    root = pathlib.Path(grenier_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] == "core":
+            continue
+        src = path.read_text()
+        if rel == pathlib.Path("operators", "sketch_build.py"):
+            start = src.index("\nKINDS = {")
+            src = src[:start] + src[src.index("\n}\n", start):]
+        hits += [f"{rel}:{src.count(chr(10), 0, m.start()) + 1}"
+                 for m in re.finditer(r"\.from_bytes\b", src)]
+    assert not hits, hits
+
+
 def test_unknown_kind_is_rejected():
     with pytest.raises(ValueError, match="unknown sketch kind"):
         get_kind("nope")

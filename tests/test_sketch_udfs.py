@@ -17,6 +17,7 @@ from grenier_spark.functions import (bloom_cardinality_col,
                                      kll_quantiles_col, kmv_est_col,
                                      moments_col, req_quantiles_col,
                                      tdigest_quantiles_col, wang64_col)
+from grenier_spark.functions._udf import broadcast_probe_udf
 from grenier_spark.functions.register import register_sql_functions
 from grenier_spark.operators.sketch_build import (SketchSpec, build_sketches,
                                                   get_kind)
@@ -63,6 +64,79 @@ def test_probes_keep_key_bits_next_to_null(spark):
     assert _by_k(got, "c") == {BIG: 2, None: None}
     assert _by_k(got, "b") == {BIG: True, None: None}
     assert _by_k(got, "f") == {BIG: True, None: None}
+
+
+def test_broadcast_probe_gives_null_for_null_key(spark):
+    """The broadcast probe of the Bloom prefilters: a NULL key gives a
+    NULL result, and a key above 2^53 next to it keeps its bits."""
+    bloom = _sketch("bloom", [1, BIG])
+    bc = spark.sparkContext.broadcast(bloom)
+    probe = broadcast_probe_udf("boolean", "bloom", "contains", bc,
+                                deterministic=False)
+    df = spark.createDataFrame([(BIG,), (BIG + 2,), (None,)],
+                               "k long").coalesce(1)
+    got = df.select("k", probe(F.col("k")).alias("b")).collect()
+    assert _by_k(got, "b") == {BIG: True, BIG + 2: False, None: None}
+
+
+def test_broadcast_probe_over_key_arrays(spark):
+    """``array<bigint>`` keys: one estimate per element, a NULL element
+    gives a NULL element, a NULL cell a NULL cell and an empty array an
+    empty array — per element equal to ``CountMin.query``."""
+    toks = [1, 2, 2, BIG, BIG, BIG]
+    blob = _sketch("cms", toks, depth=3, width=64)
+    cm = get_kind("cms").load(blob)
+    bc = spark.sparkContext.broadcast(blob)
+    est = broadcast_probe_udf("array<bigint>", "cms", "query", bc)
+    cells = [[1, None, BIG], None, [], [2, 7], [None]]
+    df = spark.createDataFrame(list(enumerate(cells)),
+                               "i int, ks array<bigint>").coalesce(1)
+    got = {r.i: r.e for r in df.select(
+        "i", est(F.col("ks")).alias("e")).collect()}
+
+    def query(k):
+        return int(cm.query(np.array([k], dtype=np.int64).view(
+            np.uint64))[0])
+
+    assert got == {i: None if c is None else
+                   [None if k is None else query(k) for k in c]
+                   for i, c in enumerate(cells)}
+    assert got[0][2] == 3 and got[3][0] == 2
+
+
+def test_broadcast_probe_loads_once_per_broadcast(monkeypatch):
+    """Spark-free: the sketch loads once per broadcast, however many
+    batches probe it, and a second broadcast loads its own."""
+    import dataclasses
+
+    import pyarrow as pa
+
+    from grenier_spark.functions import _udf
+    from grenier_spark.operators import sketch_build
+
+    loads = []
+    kind = sketch_build.KINDS["cms"]
+
+    def counted(blob):
+        loads.append(blob)
+        return kind.load(blob)
+
+    monkeypatch.setitem(sketch_build.KINDS, "cms",
+                        dataclasses.replace(kind, load=counted))
+    monkeypatch.setattr(_udf, "_LOADED", {})
+
+    class Bc:   # what a worker sees of a broadcast: its value
+        def __init__(self, value):
+            self.value = value
+
+    one = Bc(_sketch("cms", [5, 5, 6], depth=3, width=64))
+    two = Bc(_sketch("cms", [5], depth=3, width=64))
+    keys = pa.array([5, 6, None], pa.int64())
+    for bc, want in ((one, [2, 1, None]), (one, [2, 1, None]),
+                     (two, [1, 0, None]), (one, [2, 1, None])):
+        probe = broadcast_probe_udf("bigint", "cms", "query", bc)
+        assert probe.batch(pa.int64(), keys).to_pylist() == want
+    assert loads == [one.value, two.value]
 
 
 def test_null_sketch_gives_null_estimate(spark):

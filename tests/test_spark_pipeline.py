@@ -536,13 +536,15 @@ def test_histogram_equals_raw_update_fuzz():
     """Per group, the histogram update (_histogram) must give states
     byte-identical to the raw update for every HASHED/COUNTED kind, for
     every applicable batch shape — and decline on negatives,
-    max + 1 >= _VOCAB_LIMIT, fewer than _HIST_MIN values and floats.
+    max + 1 >= _VOCAB_LIMIT, ids sparser than max + 1 <= _HIST_SPAN * n,
+    fewer than _HIST_MIN values and floats.
     Groups come from the batch build's own row sort and reader.
     Pure-numpy fuzz, no Spark session."""
     import numpy as np
     import pyarrow as pa
 
     from grenier_spark.operators.sketch_build import (_CHUNK, _HIST_MIN,
+                                                      _HIST_SPAN,
                                                       _VOCAB_LIMIT, COUNTED,
                                                       HASHED, KINDS,
                                                       SketchSpec, _histogram,
@@ -592,7 +594,9 @@ def test_histogram_equals_raw_update_fuzz():
             hist = _histogram(gvals)
             # the decline contract, per group
             applicable = (len(gvals) >= _HIST_MIN and int(gvals.min()) >= 0
-                          and int(gvals.max()) + 1 < _VOCAB_LIMIT)
+                          and int(gvals.max()) + 1 < _VOCAB_LIMIT
+                          and int(gvals.max()) + 1
+                          <= _HIST_SPAN * len(gvals))
             assert (hist is not None) == applicable, (trial, g)
             if hist is None:
                 continue
@@ -606,14 +610,20 @@ def test_histogram_equals_raw_update_fuzz():
                 assert got.to_bytes() == ref.to_bytes(), (trial, spec.kind, g)
     assert hits
 
-    # the rule's edges: the bound itself, too few values, floats
+    # the rule's edges: the bounds themselves, too few values, floats
     ok = np.zeros(_HIST_MIN, dtype=np.int64)
     assert _histogram(ok) is not None
     assert _histogram(ok[1:]) is None
     assert _histogram(ok.astype(np.float64)) is None
     assert _histogram(np.append(ok, -1)) is None
-    assert _histogram(np.append(ok, _VOCAB_LIMIT - 2)) is not None
-    assert _histogram(np.append(ok, _VOCAB_LIMIT - 1)) is None
+    wide = np.zeros(_VOCAB_LIMIT // _HIST_SPAN, dtype=np.int64)
+    assert _histogram(np.append(wide, _VOCAB_LIMIT - 2)) is not None
+    assert _histogram(np.append(wide, _VOCAB_LIMIT - 1)) is None
+    # sparse ids: a bincount as long as the largest id is declined
+    span = _HIST_SPAN * (_HIST_MIN + 1)
+    assert _histogram(np.append(ok, span - 1)) is not None
+    assert _histogram(np.append(ok, span)) is None
+    assert _histogram(np.append(ok, 4_194_302)) is None
 
 
 def test_accumulator_equals_per_group_reference_fuzz():

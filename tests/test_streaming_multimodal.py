@@ -554,6 +554,34 @@ def test_ingest_dedup_stream_vs_corpus(spark, tmp_path):
     assert got.content_hash.notna().all()
 
 
+def test_ingest_dedup_stream_keeps_null_text(spark, tmp_path):
+    """A NULL-text row has a NULL probe key: the stream keeps it, once,
+    with is_new = true (batch dedup's NULL-keep), next to a corpus dup and
+    a fresh doc in the same micro-batch."""
+    from grenier_spark.operators.dedup import bloom_of_corpus
+    from grenier_spark.streaming.dedup import ingest_dedup_stream
+
+    corpus = spark.createDataFrame(
+        [(i, f"corpus doc {i}") for i in range(20)],
+        "doc_id long, text string")
+    index = corpus.select(F.md5("text").alias("content_hash")).distinct()
+    blob = bloom_of_corpus(corpus, expected_docs=20, fpr=0.01)
+    schema = "doc_id long, text string"
+    src_dir = str(tmp_path / "ign_in")
+    spark.createDataFrame(
+        [(100, "corpus doc 3"), (101, None), (102, "fresh one")], schema
+    ).coalesce(1).write.parquet(src_dir)
+    stream = spark.readStream.schema(schema).parquet(src_dir)
+    q = (ingest_dedup_stream(stream, index, blob).writeStream
+         .outputMode("append").format("memory").queryName("ign")
+         .option("checkpointLocation", str(tmp_path / "ign_ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = spark.sql("SELECT doc_id, is_new FROM ign").collect()
+    assert sorted((r.doc_id, r.is_new) for r in got) == \
+        [(100, False), (101, True), (102, True)]
+
+
 def test_stateful_hll_stream_skips_null_token_cells(spark, tmp_path):
     """A NULL tokens cell must not wedge the stream (the poison row would
     replay from the checkpoint forever) — it is skipped, other rows in
