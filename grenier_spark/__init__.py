@@ -27,3 +27,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from grenier_spark import _worker
+
+_worker.install()
