@@ -587,12 +587,14 @@ class _Accumulator:
                           for c in self.value_cols}
         self.states: dict = {}   # (gkey, spec_name) -> state
         self.counts: dict = {}   # (gkey, spec_name) -> [rows, values]
-        self.t0 = time.monotonic()
+        self.t0: "float | None" = None   # set by the first non-empty feed
 
     def feed(self, batch: pa.RecordBatch) -> None:
         """Fold one batch, grouped and read by :func:`_grouped_reads`."""
         if batch.num_rows == 0:
             return
+        if self.t0 is None:
+            self.t0 = time.monotonic()
         gkeys, bounds, reads = _grouped_reads(batch, self.group_cols,
                                               self.value_cols)
         for g, gkey in enumerate(gkeys):
@@ -625,10 +627,12 @@ class _Accumulator:
         proportional to register fill); its kind's loader reads it and
         every merge re-emits the public wire format.
 
-        build_us is the TASK's wall time apportioned across its emitted
-        rows (remainder on the first), so SUM(build_us) over any row set
-        equals total build wall time — stamping the full elapsed on
-        every (group, spec) row would overcount by rows-per-task once
+        build_us is the task's wall time from its first non-empty
+        :meth:`feed` to this flush — the wait for the scan's first batch
+        is not sketch work and is left out — apportioned across the
+        emitted rows (remainder on the first), so SUM(build_us) over any
+        row set equals total build wall time; stamping the full elapsed
+        on every (group, spec) row would overcount by rows-per-task once
         the metrics table is aggregated."""
         if not self.states:
             return None

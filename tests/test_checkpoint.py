@@ -131,6 +131,11 @@ def test_empty_input_file_does_not_fail_integrity_gate(
 
     r2 = sketches_of(job.run(spark, input_table))  # must not raise
     assert r1 == r2  # zero new rows -> identical merged sketches
+    # the empty file is covered by the commit's declaration, not its rows
+    (empty_file,) = set(input_table.files(2)) - set(input_table.files(1))
+    props = job.table.current_snapshot()["properties"]
+    assert props["covered_files"] == [os.path.abspath(empty_file)]
+    assert props["row_files"] == []
     assert job.covered_files(spark) >= set(input_table.files())
     # and a further resume is still a clean no-op
     r3 = sketches_of(job.run(spark, input_table))
@@ -163,6 +168,11 @@ def test_stray_lineage_path_raises_not_launders(spark, tmp_path,
     job = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"])
     with pytest.raises(RuntimeError, match="normalization mismatch"):
         job.run(spark, input_table)
+    # the partials were written once, checked from the staged files and
+    # never committed: no staging directory, no snapshot
+    assert not [f for f in os.listdir(job.table.path)
+                if f.startswith("_staging_")]
+    assert job.table._read_manifest() == {"snapshots": []}
 
 
 def test_history_is_prefix_exact_merge_tree(spark, tmp_path, input_table):
@@ -265,3 +275,179 @@ def test_incremental_merge_shape_follows_batch_count(spark, tmp_path,
     want = sketches_of(build_sketches(docs, SPECS, ["source"]))
     assert len(want) == 8
     assert sketches_of(cur) == want
+
+
+def _job_names(spark, group: str) -> "list[str]":
+    """Stage names (call sites) of every Spark job in ``group``."""
+    st = spark.sparkContext.statusTracker()
+    names = []
+    for j in st.getJobIdsForGroup(group):
+        stages = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+        names.append(" | ".join(s.name for s in stages if s is not None))
+    return names
+
+
+def _checkpoint_reads(names: "list[str]") -> "list[str]":
+    """Schema-inference jobs and lineage collects of checkpoint.py."""
+    return [n for n in names if "parquet at" in n
+            or ("collect at" in n and "checkpoint.py" in n)]
+
+
+def test_incremental_run_and_history_read_lineage_from_manifest(
+        spark, tmp_path, input_table):
+    """An incremental run over one new file infers no schema and collects
+    no lineage: the diff, the stray check and the integrity gate read the
+    manifest and the staged files. history() starts no job before its
+    collect."""
+    sc = spark.sparkContext
+    job = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"])
+    job.run(spark, input_table)
+    extra = str(tmp_path / "gen2")
+    write_documents_local(extra, 100)
+    input_table.append(spark.read.parquet(extra).coalesce(1))
+    try:
+        sc.setJobGroup("ckpt-append", "incremental run")
+        ran = job.run(spark, input_table)
+        names = _job_names(spark, "ckpt-append")
+        assert names, "the new file's partials were not built"
+        assert _checkpoint_reads(names) == []
+        r = sketches_of(ran)
+        sc.setJobGroup("ckpt-history", "history")
+        hist = job.history(spark)
+        assert _job_names(spark, "ckpt-history") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    props = job.table.current_snapshot()["properties"]
+    assert props["input_snapshot_id"] == 2
+    assert props["row_files"] == [os.path.abspath(input_table.files()[-1])]
+    scratch = CheckpointedSketchJob(str(tmp_path / "scr"), SPECS, ["source"])
+    assert r == sketches_of(scratch.run(spark, input_table))
+    assert sorted(hist.toPandas().as_of_snapshot.unique()) == [1, 2]
+
+
+def test_legacy_manifest_without_row_files_resumes(spark, tmp_path,
+                                                   input_table):
+    """A checkpoint written before commits recorded ``row_files`` (and
+    schemas) is read from its rows: resume is a no-op that passes the
+    gate, and history() is unchanged."""
+    job = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"])
+    r1 = sketches_of(job.run(spark, input_table))
+    h1 = sketches_of(job.history(spark).drop("as_of_snapshot"))
+    ckpt = job.table
+    manifest = ckpt._read_manifest()
+    for snap in manifest["snapshots"]:
+        snap.pop("schema")
+        for key in ("row_files", "input_snapshot_id"):
+            snap["properties"].pop(key)
+    ckpt._write_manifest(manifest)
+
+    legacy = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"])
+    assert legacy.covered_files(spark) == set(
+        os.path.abspath(f) for f in input_table.files())
+    assert sketches_of(legacy.run(spark, input_table)) == r1
+    assert ckpt._read_manifest() == manifest   # nothing appended
+    assert sketches_of(legacy.history(spark).drop("as_of_snapshot")) == h1
+
+
+def test_run_diffs_under_the_run_lock(spark, tmp_path, input_table,
+                                      monkeypatch):
+    """A run that read the manifest before another run committed must not
+    append the same files again: the diff is taken under the run lock."""
+    import fcntl
+
+    from grenier_spark.operators.sketch_build import build_sketches
+
+    path = str(tmp_path / "ckpt")
+    first = CheckpointedSketchJob(path, SPECS, ["source"])
+    other = CheckpointedSketchJob(path, SPECS, ["source"])
+    real_flock, raced = fcntl.flock, []
+
+    def flock(f, op):
+        # the first run-lock attempt lets another job run to completion
+        # over the same checkpoint before the lock is really taken
+        if op & fcntl.LOCK_NB and not raced:
+            raced.append(None)
+            raced[0] = sketches_of(other.run(spark, input_table))
+        return real_flock(f, op)
+
+    monkeypatch.setattr(fcntl, "flock", flock)
+    got = sketches_of(first.run(spark, input_table))
+    assert len(raced) == 1
+    # only the racing run committed; the first found nothing to do
+    assert len(first.table._read_manifest()["snapshots"]) == 1
+    want = sketches_of(build_sketches(input_table.read(spark), SPECS,
+                                      ["source"]))
+    assert got == raced[0] == want
+
+
+def test_run_lock_refuses_a_second_writer(spark, tmp_path, input_table):
+    import fcntl
+
+    job = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"])
+    with open(os.path.join(job.table.path, "_run.lock"), "w") as held:
+        fcntl.flock(held, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        with pytest.raises(RuntimeError, match="another run"):
+            job.run(spark, input_table)
+    assert job.table.current_snapshot() is None
+
+
+def test_integrity_gate_fires_on_a_commit_that_drops_coverage(
+        spark, tmp_path, input_table, monkeypatch):
+    """The gate checks the committed manifest: a commit whose recorded
+    lineage misses a built file fails the run instead of merging less."""
+    commit = SnapshotTable._commit
+
+    def lossy_commit(self, new_files, properties=None, schema=None):
+        if properties and properties.get("row_files"):
+            properties = dict(properties,
+                              row_files=properties["row_files"][1:])
+        return commit(self, new_files, properties, schema)
+
+    monkeypatch.setattr(SnapshotTable, "_commit", lossy_commit)
+    job = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"])
+    with pytest.raises(RuntimeError, match="lineage integrity violation"):
+        job.run(spark, input_table)
+
+
+def test_reads_use_the_recorded_schema(spark, tmp_path, input_table):
+    """Appends record their schema; reading with it gives the schema that
+    inference gives over the same files and starts no Spark job, while an
+    adopted directory (no recorded schema) is inferred."""
+    sc = spark.sparkContext
+    job = CheckpointedSketchJob(str(tmp_path / "ckpt"), SPECS, ["source"])
+    job.run(spark, input_table)
+    adopted = str(tmp_path / "adopted")
+    spark.read.parquet(*input_table.files()).coalesce(1).write.parquet(adopted)
+    plain = SnapshotTable.from_parquet_dir(adopted)
+    assert "schema" not in plain.current_snapshot()
+    for i, table in enumerate((input_table, job.table, plain)):
+        inferred = spark.read.parquet(*table.files()).schema
+        try:
+            sc.setJobGroup(f"ckpt-read-{i}", "recorded schema")
+            assert table.read(spark).schema == inferred
+            started = _job_names(spark, f"ckpt-read-{i}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert bool(started) == (table is plain), started
+
+
+def test_build_us_starts_at_first_batch():
+    """build_us times sketch work from the first non-empty batch, not from
+    the accumulator's construction (the wait for the scan's first batch)."""
+    import time
+
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from grenier_spark.operators.sketch_build import (_TAIL_FIELDS,
+                                                      _Accumulator)
+
+    schema = StructType([StructField("source", StringType())] + _TAIL_FIELDS)
+    acc = _Accumulator(SPECS, ["source"], schema)
+    time.sleep(0.2)
+    acc.feed(pa.record_batch(
+        [pa.array(["a", "a"]), pa.array([[1, 2, 3], [4]], pa.list_(pa.int32()))],
+        names=["source", "tokens"]))
+    out = acc.flush()
+    assert out.num_rows == len(SPECS)
+    assert sum(out.column("build_us").to_pylist()) < 200_000
