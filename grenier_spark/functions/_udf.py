@@ -1,6 +1,7 @@
-"""The one UDF helper behind every sketch-reading and key-hashing Column
-and SQL function: ``pyspark.sql.functions.arrow_udf`` (scalar, one
-``pa.Array`` per argument in, one ``pa.Array`` out), in four shapes:
+"""The one UDF helper behind every sketch-reading, key-hashing and
+embedding Column and SQL function: ``pyspark.sql.functions.arrow_udf``
+(scalar, one ``pa.Array`` per argument in, one ``pa.Array`` out), in five
+shapes:
 
 * :func:`row_udf` — per row: each sketch argument loads through
   ``get_kind(kind).load``, plain arguments (quantile lists, ``q``, key
@@ -17,6 +18,10 @@ and SQL function: ``pyspark.sql.functions.arrow_udf`` (scalar, one
   or hashes the blob. The dedup, decontamination and join prefilters
   probe through it.
 * :func:`key_udf` — vectorized over integer columns (hashes, buckets).
+* :func:`vector_udf` — an ``array<float|double>`` embedding column as one
+  ``(rows, dim)`` float64 matrix; the result is written back to a scalar,
+  (nested) ``array`` or struct type. Lists are read by
+  :func:`list_values` and written by :func:`list_array`, in every shape.
 
 Integer columns are read as Arrow ``int64`` with their validity mask kept,
 so a NULL never promotes a batch to float64 (which rounds keys above 2^53).
@@ -91,6 +96,80 @@ def _masked(values: np.ndarray, ok: np.ndarray, out: pa.DataType):
     return pa.array(values, mask=None if ok.all() else ~ok, type=out)
 
 
+def list_values(a: pa.Array) -> "tuple[pa.Array, np.ndarray]":
+    """A list column's elements (a NULL row holds none) and each row's
+    length (0 for a NULL row)."""
+    return a.flatten(), pc.fill_null(pc.list_value_length(a), 0).to_numpy()
+
+
+def list_array(values: pa.Array, lens: np.ndarray, mask, out: pa.DataType):
+    """The ``out``-typed list whose row i holds the next ``lens[i]`` of
+    ``values``; ``mask`` (boolean Arrow array or None) marks NULL rows."""
+    offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    return pa.ListArray.from_arrays(offsets, values, type=out, mask=mask)
+
+
+def read_vectors(a: pa.Array, name: str, dim: "int | None" = None
+                 ) -> np.ndarray:
+    """A NULL-free list column of vectors as one ``(rows, dim)`` float64
+    matrix by one flatten and one reshape (a NULL element reads as NaN).
+    Vectors of unequal lengths, or not of length ``dim`` when given, raise
+    a ValueError naming the column ``name`` and the lengths found."""
+    flat, lens = list_values(a)
+    if dim is None:
+        dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
+        raise ValueError(
+            f"vector column {name!r} holds vectors of lengths "
+            f"{np.unique(lens)[:8].tolist()}; every vector needs length "
+            f"{dim}")
+    return flat.cast(pa.float64()).to_numpy(
+        zero_copy_only=False).reshape(len(lens), dim)
+
+
+def write(res, ok: np.ndarray, out: pa.DataType) -> pa.Array:
+    """``res``, a result on the rows where ``ok`` holds, as an ``out``-typed
+    array over all rows (NULL elsewhere): a struct takes a tuple of field
+    results, a list an array of rows (2-D, or 3-D for a nested list) or a
+    ``(flat values, lengths)`` pair, any other type a 1-D array."""
+    mask = None if ok.all() else pa.array(~ok)
+    if pa.types.is_struct(out):
+        return pa.StructArray.from_arrays(
+            [write(r, ok, f.type) for r, f in zip(res, out)],
+            fields=list(out), mask=mask)
+    if not pa.types.is_list(out):
+        full = np.zeros(len(ok), dtype=out.to_pandas_dtype())
+        full[ok] = res
+        return _masked(full, ok, out)
+    values, lens = res if isinstance(res, tuple) else (
+        res.reshape(-1, *res.shape[2:]), res.shape[1])
+    full = np.zeros(len(ok), dtype=np.int64)
+    full[ok] = lens   # a NULL row holds nothing
+    return list_array(write(values, np.ones(len(values), dtype=bool),
+                            out.value_type), full, mask, out)
+
+
+def vector_udf(ddl: str, fn: Callable, name: str, dim: int) -> Udf:
+    """``fn(X, *extra)`` over the vector column ``name``: ``X`` is the
+    ``(rows, dim)`` matrix (:func:`read_vectors`) of the rows where no
+    argument is NULL, and extra argument columns arrive as numpy arrays
+    on those rows. A NULL in any argument gives NULL (:func:`write`); a
+    batch without a non-NULL row never calls ``fn``."""
+
+    def batch(out, *arrays):
+        ok = _valid(arrays)
+        if not ok.any():
+            return pa.nulls(len(ok), out)
+        if not ok.all():
+            arrays = [a.filter(pa.array(ok)) for a in arrays]
+        return write(fn(read_vectors(arrays[0], name, dim),
+                        *(a.to_numpy(zero_copy_only=False)
+                          for a in arrays[1:])), ok, out)
+
+    return Udf(ddl, batch)
+
+
 def row_udf(ddl: str, fn: Callable, *kinds: "str | None") -> Udf:
     """Per-row ``fn``: argument i is loaded as a ``kinds[i]`` sketch, or
     passed as its Python value where ``kinds[i]`` is None."""
@@ -154,15 +233,11 @@ def broadcast_probe_udf(ddl: str, kind: str, method: str, bc,
         if not pa.types.is_list(keys.type):
             return _masked(probe(_values(keys).view(np.uint64)),
                            _valid((keys,)), out)
-        flat = keys.flatten()   # a NULL cell holds no element
+        flat, lens = list_values(keys)
         res = _masked(probe(_values(flat).view(np.uint64)), _valid((flat,)),
                       out.value_type)
-        lens = pc.fill_null(pc.list_value_length(keys), 0).to_numpy()
-        offsets = np.zeros(len(keys) + 1, dtype=np.int32)
-        np.cumsum(lens, out=offsets[1:])
-        return pa.ListArray.from_arrays(
-            offsets, res, type=out,
-            mask=keys.is_null() if keys.null_count else None)
+        return list_array(res, lens,
+                          keys.is_null() if keys.null_count else None, out)
 
     return Udf(ddl, batch, deterministic)
 

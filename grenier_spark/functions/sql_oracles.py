@@ -324,8 +324,9 @@ def simhash_fps_sql(docs_sql: str, id_col: str = "id",
     ``operators.dedup.simhash64`` value-for-value: md5-low64 word ids
     (:func:`md5_low64_expr` == Spark ``md5_low64_col``), wang64 mix,
     count-weighted bit votes (Charikar 2002). Docs whose word list is
-    empty after filtering (empty/NULL text, separators only) get fp = 0
-    on both engines. Ids must be UNIQUE (they are the doc identity): on a
+    empty after filtering (empty/NULL text, separators only) have no
+    fingerprint: fp is NULL on both engines, so no pair query matches
+    them. Ids must be UNIQUE (they are the doc identity): on a
     duplicate-id input this SQL merges both rows' word counts into one
     fingerprint while Spark emits one row per input row. Fuzzed directly
     in test_differential_fuzz.py."""
@@ -347,7 +348,7 @@ votes AS (
   SELECT id, SUM(CASE WHEN vote > 0 THEN p::HUGEINT ELSE 0::HUGEINT END) AS fp
   FROM votes GROUP BY 1
 )
-SELECT d.id, COALESCE(f.fp, 0::HUGEINT)::UBIGINT AS fp
+SELECT d.id, f.fp::UBIGINT AS fp
 FROM (SELECT DISTINCT {id_col} AS id FROM ({docs_sql})) d
 LEFT JOIN fp0 f ON d.id = f.id"""
 

@@ -26,10 +26,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..core.bits import U64, splitmix64_scalar, wang64
-from ..functions._udf import broadcast_probe_udf
+from ..functions._udf import Udf, broadcast_probe_udf, list_values, write
 
 
 def _content_key(text_col: str, id_col: str):
@@ -471,37 +470,33 @@ def simhash64(df: DataFrame, text_col: str = "text",
     (Charikar 2002).
 
     Word hashing is the md5-low64 JVM column chain (``md5_low64_col`` —
-    whole-stage codegen, no Python string loop); the Arrow UDF receives the
-    pre-hashed ``array<long>`` and does only vectorized numpy: one wang64
-    mix over the flattened batch, one bit-unpack matmul, per-doc vote sums
-    via ``add.reduceat``. No per-row or per-word Python anywhere.
+    whole-stage codegen, no Python string loop); the Arrow UDF reads the
+    pre-hashed ``array<long>`` as flat values plus lengths and does only
+    vectorized numpy: one wang64 mix over the flattened batch, one
+    bit-unpack, per-doc vote sums via ``add.reduceat``. A NULL or wordless
+    text gets a NULL simhash, which no :func:`simhash_candidates` join
+    pairs.
     """
     from ..functions.hashing import md5_low64_col
 
     words = F.filter(F.split(F.col(text_col), " "), lambda w: w != "")
     src = df.select(id_col, F.transform(words, md5_low64_col).alias("wh"))
 
-    @pandas_udf("long")
-    def _simhash(whs: pd.Series) -> pd.Series:
+    def fingerprints(out, whs):
+        flat, lens = list_values(whs)   # a NULL row holds no word
+        ok = lens > 0
+        n = lens[ok]
         shifts = np.arange(64, dtype=U64)
-        lens = np.array([0 if x is None else len(x) for x in whs],
-                        dtype=np.int64)
-        nz = np.flatnonzero(lens)
-        out = np.zeros(len(whs), dtype=np.int64)
-        if len(nz):
-            flat = np.concatenate(
-                [np.asarray(whs.iloc[i], dtype=np.int64) for i in nz])
-            hs = wang64(flat.view(U64))
-            bits = ((hs[:, None] >> shifts[None, :]) & U64(1)).astype(np.int64)
-            starts = np.concatenate([[0], np.cumsum(lens[nz])[:-1]])
-            sums = np.add.reduceat(bits, starts, axis=0)
-            votes = 2 * sums - lens[nz, None]
-            fps = (((votes > 0).astype(U64)) << shifts[None, :]).sum(
-                axis=1, dtype=U64)
-            out[nz] = fps.view(np.int64)
-        return pd.Series(out)
+        hs = wang64(flat.to_numpy(zero_copy_only=False).view(U64))
+        bits = ((hs[:, None] >> shifts[None, :]) & U64(1)).astype(np.int64)
+        votes = 2 * np.add.reduceat(bits, np.cumsum(n) - n, axis=0) \
+            - n[:, None]
+        fps = (((votes > 0).astype(U64)) << shifts[None, :]).sum(
+            axis=1, dtype=U64)
+        return write(fps.view(np.int64), ok, out)
 
-    return src.select(id_col, _simhash(F.col("wh")).alias("simhash"))
+    return src.select(id_col, Udf("long", fingerprints)(F.col("wh"))
+                      .alias("simhash"))
 
 
 def _simhash_block_layout(n_blocks: int) -> "list[tuple[int, int]]":

@@ -7,8 +7,9 @@ Shape at 100 TB: ONE pass over the vectors builds the per-group FD sketch
 (``operators.sketch_build.build_sketches`` — mapInArrow partials,
 vector-scale data never shuffles); the sketch rows (KB per group) come to
 the driver, an SVD of each B yields the top-``r`` orthonormal directions,
-and the projection itself is a broadcast matmul inside a vectorized
-pandas UDF — again no vector shuffle, no iteration. Contrast with
+and the projection itself is a broadcast matmul inside an Arrow vector
+UDF (``functions._udf.vector_udf``) — again no vector shuffle, no
+iteration. Contrast with
 iterative PCA (many passes) or a gram-matrix build (dim² shuffle).
 
 Quality is NOT heuristic: Frequent Directions carries deterministic
@@ -32,11 +33,10 @@ LLM-pipeline extension axis.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from ..functions._udf import vector_udf
 from .sketch_build import SketchSpec, build_sketches, get_kind
 
 
@@ -63,7 +63,9 @@ def fd_project(vectors: DataFrame, r: int = 8, ell: int = 32,
     Returns ``id_col [, group_col], coords array<double>, norm2 double,
     resid double`` with ``norm2 = ||x||^2`` and
     ``resid = ||x||^2 - ||coords||^2 >= 0`` (V_r is orthonormal, so the
-    coordinate energy never exceeds the vector's).
+    coordinate energy never exceeds the vector's). A group with no
+    directions gets empty ``coords``; a NULL vector (or group) gets a NULL
+    ``coords``, ``norm2`` and ``resid``.
 
     Pass ``sketches`` ({group_key: fd_bytes}, group_key () when global)
     to reuse an existing build; otherwise one build pass runs here.
@@ -77,54 +79,35 @@ def fd_project(vectors: DataFrame, r: int = 8, ell: int = 32,
             (tuple(row[c] for c in gcols) if gcols else ()):
             bytes(row["sketch"]) for row in built.collect()}  # KB rows
     dirs = {k: fd_directions(b, r)[0] for k, b in sketches.items()}
+    empty = np.empty((0, dim))
 
-    if group_col is None:
-        V = dirs.get((), np.empty((0, dim)))
-
-        @pandas_udf("struct<coords: array<double>, norm2: double, "
-                    "resid: double>")
-        def _proj(vs: pd.Series) -> pd.DataFrame:
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-            if X.size == 0:
-                X = X.reshape(0, dim)
-            C = X @ V.T
-            n2 = (X * X).sum(axis=1)
-            return pd.DataFrame({"coords": list(C),
-                                 "norm2": n2,
-                                 "resid": n2 - (C * C).sum(axis=1)})
-
-        out = vectors.select(id_col, _proj(F.col(vec_col)).alias("p"))
-        return out.select(id_col, "p.coords", "p.norm2", "p.resid")
-
-    @pandas_udf("struct<coords: array<double>, norm2: double, "
-                "resid: double>")
-    def _proj_g(gs: pd.Series, vs: pd.Series) -> pd.DataFrame:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        if X.size == 0:
-            X = X.reshape(0, dim)
-        n2 = (X * X).sum(axis=1) if len(X) else np.empty(0)
-        coords = [None] * len(X)
+    def project(X, *g):
+        # the global case is the grouped one with the single key (); each
+        # group's coordinates come from one matmul and land in place in
+        # the flat coords buffer (row i's run ends at ends[i])
+        if g:
+            keys, inv = np.unique(g[0], return_inverse=True)
+            keys = [(k,) for k in keys.tolist()]
+        else:
+            keys, inv = [()], np.zeros(len(X), dtype=np.int64)
+        V = [dirs.get(k, empty) for k in keys]
+        lens = np.array([len(v) for v in V], dtype=np.int64)[inv]
+        ends = np.cumsum(lens)
+        flat = np.empty(ends[-1] if len(ends) else 0)
         cap = np.zeros(len(X))
-        garr = gs.to_numpy()
-        # vectorize per distinct group in the batch: one matmul per group
-        for g in pd.unique(garr):
-            m = garr == g
-            Vg = dirs.get((g,))
-            if Vg is None or not len(Vg):
-                for i in np.flatnonzero(m):
-                    coords[i] = np.empty(0)
-                continue
-            Cg = X[m] @ Vg.T
-            for i, row in zip(np.flatnonzero(m), Cg):
-                coords[i] = row
+        for c, Vc in enumerate(V):
+            m = inv == c
+            Cg = X[m] @ Vc.T
+            flat[(ends[m] - len(Vc))[:, None] + np.arange(len(Vc))] = Cg
             cap[m] = (Cg * Cg).sum(axis=1)
-        return pd.DataFrame({"coords": coords, "norm2": n2,
-                             "resid": n2 - cap})
+        n2 = (X * X).sum(axis=1)
+        return (flat, lens), n2, n2 - cap
 
-    out = vectors.select(id_col, group_col,
-                         _proj_g(F.col(group_col), F.col(vec_col))
-                         .alias("p"))
-    return out.select(id_col, group_col, "p.coords", "p.norm2", "p.resid")
+    proj = vector_udf("struct<coords: array<double>, norm2: double, "
+                      "resid: double>", project, vec_col, dim)
+    out = vectors.select(id_col, *gcols,
+                         proj(vec_col, *gcols).alias("p"))
+    return out.select(id_col, *gcols, "p.coords", "p.norm2", "p.resid")
 
 
 def fd_projection_quality(vectors: DataFrame, r: int = 8, ell: int = 32,
@@ -167,11 +150,9 @@ def fd_projection_quality(vectors: DataFrame, r: int = 8, ell: int = 32,
         evals = np.sort(np.linalg.eigvalsh(twin.gram()))[::-1]
         tail = float(evals[r:].sum())  # exact ||A - A_r||_F^2
         prod = get_kind("fd").load(sk[(g,)])
-        bounds.append((g, tail, prod.delta, prod.fnorm2))
-    spark = vectors.sparkSession
-    bdf = spark.createDataFrame(
-        pd.DataFrame(bounds,
-                     columns=[group_col, "tail_r", "delta", "fnorm2"]))
+        bounds.append((g, tail, float(prod.delta), float(prod.fnorm2)))
+    bdf = vectors.sparkSession.createDataFrame(
+        bounds, [group_col, "tail_r", "delta", "fnorm2"])
 
     proj = fd_project(vectors, r=r, ell=ell, dim=dim, group_col=group_col,
                       id_col=id_col, vec_col=vec_col, sketches=sk)

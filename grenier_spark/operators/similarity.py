@@ -9,15 +9,24 @@
   B independent band tables -> candidates = bucket-join (shuffle on bucket
   id only) -> exact cosine re-rank of candidates. Recall tuned by
   (n_planes, bands); asserted >= 0.9 vs brute force in tests.
+* ``lsh_topk_rademacher`` (over ``rademacher_planes``), ``ivf_topk`` (+
+  ``ivf_refine_centroids``), ``pq_codebooks`` / ``pq_encode`` / ``pq_topk``
+  and ``ivfpq_topk`` — the other ANN paths; ``cosine_neardup_pairs``,
+  ``semdedup`` and ``label_centroid_confusion`` — near-dups and eval.
+
+Every Python body reads vectors through ``functions._udf.read_vectors``
+(the UDFs are ``vector_udf``): a NULL embedding gives NULL out, so it
+joins nothing and is nobody's neighbour.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..functions._udf import read_vectors, vector_udf, write
 
 
 def _dot(a, b):
@@ -40,15 +49,16 @@ def _cos(a, b):
 
 
 def _rerank_topk(cands, k: int, qid_col: str, id_col: str,
-                 round6: bool = False):
+                 round6: bool = False, cos=None):
     """Shared exact re-rank tail: per-query top-k by cosine desc (NULLs
     excluded), ties by id. ``round6`` ranks by the round-6 cosine
-    (cross-engine contract of the rademacher/IVF paths). The ranking is
+    (cross-engine contract of the rademacher/IVF paths); ``cos`` replaces
+    :func:`_cos` of ``_v`` and ``_qv`` (IVF's zero-norm guard). The ranking is
     the salt-split bounded min-K (:func:`_bounded_topk`) on the NEGATED
     cosine — an exact sign flip, so the ordering rule is identical to the
     row_number window it replaces, but one query's candidate set (the
     whole corpus, in the brute-force baseline) never lands in one task."""
-    cos = _cos("_v", "_qv")
+    cos = _cos("_v", "_qv") if cos is None else cos
     cos = F.round(cos, 6) if round6 else cos
     scored = (cands.select(qid_col, id_col, cos.alias("cos_sim"))
               .where(F.col("cos_sim").isNotNull())
@@ -58,37 +68,88 @@ def _rerank_topk(cands, k: int, qid_col: str, id_col: str,
                       (-F.col("_nc")).alias("cos_sim"), "rank")
 
 
-def _bucket_candidates(vectors, queries, bucket_udf, id_col: str,
-                       vec_col: str, qid_col: str):
-    """Candidate (query, vector) pairs sharing any LSH bucket, WITHOUT
-    moving vector payloads: both sides bucketize to narrow (id, bucket)
-    rows — the join shuffles 16-byte pairs, not embeddings (the naive
-    explode-with-payload shape replicates every vector ``bands`` times
-    through the exchange: ~200 GB instead of ~6 GB at 1M x 768-d).
-    Vector payloads are joined back exactly once for the re-rank."""
+def _lsh_topk(vectors, queries, planes: np.ndarray, bands: int,
+              band_bits: int, round6: bool, k: int, id_col: str,
+              vec_col: str, qid_col: str):
+    """The LSH path: ALL band buckets of a vector in one Arrow pass (one
+    matmul, ``(band << 32) | packed sign bits``), then candidate pairs
+    sharing any bucket WITHOUT moving vector payloads: both sides
+    bucketize to narrow (id, bucket) rows, so the join shuffles 16-byte
+    pairs, not embeddings (~6 GB instead of ~200 GB at 1M x 768-d).
+    ``round6`` rounds the projections before the > 0 test and ranks by
+    the round-6 cosine (:func:`lsh_topk_rademacher`'s contract)."""
+    weights = np.int64(1) << np.arange(band_bits, dtype=np.int64)
+    tags = np.arange(bands, dtype=np.int64) << 32
+
+    def buckets(X):
+        acc = X @ planes.T
+        bits = (np.round(acc, 6) if round6 else acc) > 0
+        return (bits.reshape(len(X), bands, band_bits) @ weights) | tags
+
+    bucket = vector_udf("array<long>", buckets, vec_col, planes.shape[1])
     v_b = vectors.select(
-        F.col(id_col), F.explode(bucket_udf(F.col(vec_col))).alias("bucket"))
+        F.col(id_col), F.explode(bucket(F.col(vec_col))).alias("bucket"))
     q_b = queries.select(
-        F.col(qid_col), F.explode(bucket_udf(F.col(vec_col))).alias("bucket"))
+        F.col(qid_col), F.explode(bucket(F.col(vec_col))).alias("bucket"))
     pairs = (v_b.join(F.broadcast(q_b), "bucket")
              .select(qid_col, id_col)
              .dropDuplicates([qid_col, id_col]))
-    return (pairs
-            .join(vectors.select(F.col(id_col),
-                                 F.col(vec_col).alias("_v")), id_col)
-            .join(F.broadcast(queries.select(F.col(qid_col),
-                                             F.col(vec_col).alias("_qv"))),
-                  qid_col))
+    return _rerank_pairs(pairs, vectors, queries, k, id_col, vec_col,
+                         qid_col, round6)
+
+
+def _rerank_pairs(pairs, vectors, queries, k: int, id_col: str,
+                  vec_col: str, qid_col: str, round6: bool):
+    """:func:`_rerank_topk` of candidate (query, vector) id pairs, their
+    vector payloads joined back exactly once."""
+    cands = (pairs
+             .join(vectors.select(F.col(id_col),
+                                  F.col(vec_col).alias("_v")), id_col)
+             .join(F.broadcast(queries.select(F.col(qid_col),
+                                              F.col(vec_col).alias("_qv"))),
+                   qid_col))
+    return _rerank_topk(cands, k, qid_col, id_col, round6)
 
 
 def _dim_of(df: DataFrame, vec_col: str, dim: "int | None") -> int:
     """Embedding dimensionality without a driver job: honor an explicit
     ``dim=``, else read the fixed element count parquet statistics can't
-    express from one row (the probe is the documented fallback, not the
-    default path — pass ``dim`` in hot loops)."""
+    express from the first non-NULL vector (the probe is the documented
+    fallback, not the default path — pass ``dim`` in hot loops)."""
     if dim is not None:
         return dim
-    return len(df.select(vec_col).first()[0])
+    row = df.where(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    if row is None:
+        raise ValueError(f"vector column {vec_col!r} holds no non-NULL "
+                         f"vector to read the dim from; pass dim=")
+    return row[0]
+
+
+def _norms1(X: np.ndarray) -> np.ndarray:
+    """Row L2 norms, a zero norm read as 1 (the SQL twins' CASE WHEN
+    norm = 0 THEN 1): an all-zero row then has cosine 0.0, not NaN."""
+    n = np.sqrt((X * X).sum(axis=1))
+    return np.where(n == 0, 1.0, n)
+
+
+def _cos6(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Round-6 cosines of every row of ``X`` to every centroid of ``C``:
+    the one cell-assignment score of IVF, SemDeDup and the Lloyd step."""
+    return np.round((X @ C.T) / (_norms1(X)[:, None] * _norms1(C)[None, :]),
+                    6)
+
+
+def _lowest_ids(vectors: DataFrame, n: int, id_col: str,
+                vec_col: str) -> np.ndarray:
+    """The ``n`` lowest-id vectors as an ``(n', dim)`` float64 matrix, the
+    sample every quantizer here starts from (the DuckDB oracles replay
+    it). A NULL vector cannot train a centroid: it raises."""
+    col = (vectors.orderBy(id_col).limit(n).select(vec_col).toArrow()
+           .column(0).combine_chunks())
+    if col.null_count:
+        raise ValueError(f"vector column {vec_col!r} has a NULL among the "
+                         f"{n} lowest-{id_col} rows that sample a quantizer")
+    return read_vectors(col, vec_col)
 
 
 def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
@@ -102,11 +163,6 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     return _rerank_topk(j, k, qid_col, id_col)
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    rng = np.random.Generator(np.random.PCG64(seed))
-    return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
 def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
              qid_col: str = "query_id", bands: int = 8, band_bits: int = 8,
@@ -114,26 +170,10 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     """Approximate top-k: candidates from any shared (band, bucket), exact
     cosine re-rank of candidates only."""
     dim = _dim_of(vectors, vec_col, dim)
-    planes = _hyperplanes(dim, bands * band_bits, seed)
-
-    @pandas_udf("array<long>")
-    def _all_buckets(vs: pd.Series) -> pd.Series:
-        # ALL band buckets in one Arrow pass (one matmul), then explode —
-        # a per-band UDF + union would rescan and re-serialize the vector
-        # table `bands` times for identical results
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        bits = (mat @ planes.T) > 0
-        out = np.zeros((len(vs), bands), dtype=np.int64)
-        for b in range(bands):
-            packed = np.zeros(len(vs), dtype=np.int64)
-            for t in range(band_bits):
-                packed |= bits[:, b * band_bits + t].astype(np.int64) << t
-            out[:, b] = (np.int64(b) << 32) | packed
-        return pd.Series(list(out))
-
-    cands = _bucket_candidates(vectors, queries, _all_buckets,
-                               id_col, vec_col, qid_col)
-    return _rerank_topk(cands, k, qid_col, id_col)
+    planes = np.random.Generator(np.random.PCG64(seed)).standard_normal(
+        (bands * band_bits, dim))
+    return _lsh_topk(vectors, queries, planes, bands, band_bits, False, k,
+                     id_col, vec_col, qid_col)
 
 
 def cosine_neardup_pairs(vectors: DataFrame, tau: float = 0.9,
@@ -192,48 +232,25 @@ def _coarse_C(vectors: DataFrame, n_centroids: int,
     reproducible in the DuckDB oracle (``sql_oracles.ann_ivf_sql``)."""
     if centroids is not None:
         return np.asarray(centroids, dtype=np.float64)
-    cents = (vectors.orderBy(id_col).limit(n_centroids)
-             .select(F.transform(vec_col, lambda x: x.cast("double"))
-                     .alias("cv")).toPandas())
-    return np.asarray([np.asarray(v, dtype=np.float64)
-                       for v in cents["cv"]])
+    return _lowest_ids(vectors, n_centroids, id_col, vec_col)
 
 
-def _cell_udfs(C: np.ndarray, n_probe: int):
+def _cell_udfs(C: np.ndarray, n_probe: int, vec_col: str):
     """(cell_of, probe_cells) UDFs over the coarse quantizer ``C``:
-    round-6 cosine assignment (argmax ties to the lowest cell id) and the
-    per-query n_probe nearest cells (stable argsort — equal rounded
-    cosines keep ascending cell-id order), the oracle's
-    ORDER BY cos6 DESC, cid ASC twins.
-
-    Zero-norm guard: an all-zero vector or centroid would divide by zero
-    and inject NaN cosines, whose ordering differs between numpy argsort
-    and DuckDB — with norm coerced to 1 the dot product is 0, so such
-    rows get cosine exactly 0.0 on BOTH engines (mirrored in
-    sql_oracles.ann_ivf_sql via CASE WHEN norm = 0 THEN 1)."""
-    cnorm = np.sqrt((C * C).sum(axis=1))
-    cnorm = np.where(cnorm == 0, 1.0, cnorm)
-
-    def _cos_to_cents(vs: pd.Series) -> np.ndarray:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        vnorm = np.sqrt((mat * mat).sum(axis=1))
-        vnorm = np.where(vnorm == 0, 1.0, vnorm)
-        return np.round((mat @ C.T) / (vnorm[:, None] * cnorm[None, :]), 6)
-
-    @pandas_udf("int")
-    def _cell_of(vs: pd.Series) -> pd.Series:
-        # argmax on the ROUNDED cosines; np.argmax takes the first maximum,
-        # i.e. ties break to the lowest cell id
-        return pd.Series(np.argmax(_cos_to_cents(vs), axis=1)
-                         .astype(np.int32))
-
-    @pandas_udf("array<int>")
-    def _probe_cells(vs: pd.Series) -> pd.Series:
-        cos6 = _cos_to_cents(vs)
-        order = np.argsort(-cos6, axis=1, kind="stable")
-        return pd.Series(list(order[:, :n_probe].astype(np.int32)))
-
-    return _cell_of, _probe_cells
+    round-6 cosine assignment (:func:`_cos6`; np.argmax takes the first
+    maximum, so ties go to the lowest cell id) and the per-query n_probe
+    nearest cells (stable argsort — equal rounded cosines keep ascending
+    cell-id order), the oracle's ORDER BY cos6 DESC, cid ASC twins.
+    The zero-norm guard keeps NaN cosines, whose ordering differs between
+    numpy argsort and DuckDB, out of both."""
+    dim = C.shape[1]
+    cell_of = vector_udf(
+        "int", lambda X: np.argmax(_cos6(X, C), axis=1), vec_col, dim)
+    probe_cells = vector_udf(
+        "array<int>",
+        lambda X: np.argsort(-_cos6(X, C), axis=1, kind="stable")[:, :n_probe],
+        vec_col, dim)
+    return cell_of, probe_cells
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
@@ -261,11 +278,11 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     contract as :func:`lsh_topk_rademacher`.
     """
     C = _coarse_C(vectors, n_centroids, centroids, id_col, vec_col)
-    _cell_of, _probe_cells = _cell_udfs(C, n_probe)
+    _cell_of, _probe_cells = _cell_udfs(C, n_probe, vec_col)
 
-    v_cells = vectors.select(id_col, vec_col,
+    v_cells = vectors.select(id_col, F.col(vec_col).alias("_v"),
                              _cell_of(F.col(vec_col)).alias("cell"))
-    q_cells = (queries.select(qid_col, F.col(vec_col).alias("qv"),
+    q_cells = (queries.select(qid_col, F.col(vec_col).alias("_qv"),
                               F.explode(_probe_cells(F.col(vec_col)))
                               .alias("cell")))
     cands = (v_cells.join(q_cells, "cell")
@@ -275,15 +292,8 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
         n = F.sqrt(_dot(c, c))
         return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
 
-    cos = _dot(vec_col, "qv") / (_norm1(vec_col) * _norm1("qv"))
-    # per-query top-k via the salt-split bounded min-K on the negated
-    # round-6 cosine (exact sign flip — same ordering rule as the window
-    # it replaces); a hot cell x query set never lands in one task
-    scored = (cands.select(qid_col, id_col,
-                           (-F.round(cos, 6)).alias("_nc")))
-    top = _bounded_topk(scored, qid_col, id_col, "_nc", k)
-    return top.select(qid_col, id_col,
-                      (-F.col("_nc")).alias("cos_sim"), "rank")
+    cos = _dot("_v", "_qv") / (_norm1("_v") * _norm1("_qv"))
+    return _rerank_topk(cands, k, qid_col, id_col, round6=True, cos=cos)
 
 
 def ivf_refine_centroids(vectors: DataFrame, n_centroids: int = 16,
@@ -295,60 +305,44 @@ def ivf_refine_centroids(vectors: DataFrame, n_centroids: int = 16,
     (max cosine) + recompute-as-mean.
 
     Distribution shape: each iteration is ONE pass over the vectors —
-    ``mapInPandas`` emits per-batch partial (cell, count, per-dim sums)
+    ``mapInArrow`` emits per-batch partial (cell, count, per-dim sums)
     rows (n_centroids x (dim+1) doubles per batch, KB-sized), and the
     driver reduces the partials in numpy. No token/vector-scale shuffle;
     only sketch-sized partials move — the same two-level discipline as
-    ``operators.sketch_build``. Empty cells keep their previous centroid.
+    ``operators.sketch_build``. Empty cells keep their previous centroid,
+    and NULL vectors are in no cell.
 
     The result is a drop-in for ``ivf_topk(centroids=...)``: same
     assignment semantics (round-6 cosine, argmax ties to lowest cell).
     """
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   LongType, StructField, StructType)
+    C = _lowest_ids(vectors, n_centroids, id_col, vec_col)
+    schema = "cell int, cnt long, sums array<double>"
+    vecs = vectors.select(vec_col).where(F.col(vec_col).isNotNull())
 
-    init = (vectors.orderBy(id_col).limit(n_centroids)
-            .select(F.transform(vec_col, lambda x: x.cast("double"))
-                    .alias("cv")).toPandas())
-    C = np.asarray([np.asarray(v, dtype=np.float64) for v in init["cv"]])
-    out_schema = StructType([
-        StructField("cell", IntegerType()),
-        StructField("cnt", LongType()),
-        StructField("sums", ArrayType(DoubleType()))])
-    vecs = vectors.select(F.transform(vec_col, lambda x: x.cast("double"))
-                          .alias("v"))
+    def partials(batches, C):
+        for b in batches:
+            X = read_vectors(b.column(0), vec_col, C.shape[1])
+            if not len(X):
+                continue
+            cells = np.argmax(_cos6(X, C), axis=1)
+            cs = np.unique(cells)
+            sums = np.stack([X[cells == c].sum(axis=0) for c in cs])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cs, pa.int32()),
+                 pa.array(np.bincount(cells)[cs], pa.int64()),
+                 write(sums, np.ones(len(cs), dtype=bool),
+                       pa.list_(pa.float64()))], ["cell", "cnt", "sums"])
 
     for _ in range(n_iter):
-        Cb = C.copy()
-        cnorm = np.sqrt((Cb * Cb).sum(axis=1))
-        cnorm = np.where(cnorm == 0, 1.0, cnorm)
-
-        def partials(batches, _C=Cb, _cn=cnorm):
-            for pdf in batches:
-                mat = np.asarray([np.asarray(v, dtype=np.float64)
-                                  for v in pdf["v"]])
-                if len(mat) == 0:
-                    continue
-                vnorm = np.sqrt((mat * mat).sum(axis=1))
-                vnorm = np.where(vnorm == 0, 1.0, vnorm)
-                cos6 = np.round((mat @ _C.T)
-                                / (vnorm[:, None] * _cn[None, :]), 6)
-                cells = np.argmax(cos6, axis=1)
-                rows = []
-                for c in np.unique(cells):
-                    sel = mat[cells == c]
-                    rows.append({"cell": int(c), "cnt": len(sel),
-                                 "sums": sel.sum(axis=0).tolist()})
-                yield pd.DataFrame(rows)
-
-        agg = vecs.mapInPandas(partials, out_schema).toPandas()
+        agg = vecs.mapInArrow(lambda it, C=C: partials(it, C),
+                              schema).toArrow()
+        cells = agg.column("cell").to_numpy()
+        cnt = agg.column("cnt").to_numpy()
+        sums = read_vectors(agg.column("sums").combine_chunks(), "sums")
         newC = C.copy()
-        for c in range(len(C)):
-            part = agg[agg.cell == c]
-            total = int(part.cnt.sum())
-            if total > 0:
-                s = np.sum([np.asarray(x) for x in part.sums], axis=0)
-                newC[c] = s / total
+        for c in np.unique(cells):
+            m = cells == c
+            newC[c] = sums[m].sum(axis=0) / cnt[m].sum()
         C = newC
     return C
 
@@ -390,27 +384,10 @@ def lsh_topk_rademacher(vectors: DataFrame, queries: DataFrame, k: int = 10,
     dim = _dim_of(vectors, vec_col, dim)
     planes = rademacher_planes(dim, bands * band_bits, seed).astype(
         np.float64)
-
-    @pandas_udf("array<long>")
-    def _all_buckets(vs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        acc = mat @ planes.T
-        # quantize before the sign test: engines may differ in the last
-        # ulps of the sum, but not across a 1e-6 rounding boundary
-        bits = (np.round(acc, 6) > 0).astype(np.int64)
-        out = np.zeros((len(vs), bands), dtype=np.int64)
-        for b in range(bands):
-            packed = np.zeros(len(vs), dtype=np.int64)
-            for t in range(band_bits):
-                packed |= bits[:, b * band_bits + t] << t
-            out[:, b] = (b << 32) | packed
-        return pd.Series(list(out))
-
-    cands = _bucket_candidates(vectors, queries, _all_buckets,
-                               id_col, vec_col, qid_col)
-    # rank by the ROUND-6 cosine (ties then by id): cross-engine rank
-    # stability must not depend on last-ulp cosine agreement
-    return _rerank_topk(cands, k, qid_col, id_col, round6=True)
+    # quantize the sign test and the rank: engines may differ in the last
+    # ulps of a sum, but not across a 1e-6 rounding boundary
+    return _lsh_topk(vectors, queries, planes, bands, band_bits, True, k,
+                     id_col, vec_col, qid_col)
 
 
 def _l2_normalize(mat: np.ndarray) -> np.ndarray:
@@ -418,8 +395,7 @@ def _l2_normalize(mat: np.ndarray) -> np.ndarray:
     coerced to 1, the suite's standard guard), so squared L2 becomes
     2 - 2*cos and ADC ranks approximate the cosine ranking every other
     ANN path in this module uses."""
-    n = np.sqrt((mat * mat).sum(axis=1))
-    return mat / np.where(n == 0, 1.0, n)[:, None]
+    return mat / _norms1(mat)[:, None]
 
 
 def pq_codebooks(vectors: DataFrame, m: int = 4, ksub: int = 16,
@@ -439,28 +415,11 @@ def pq_codebooks(vectors: DataFrame, m: int = 4, ksub: int = 16,
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     dsub = dim // m
-    samp = (vectors.orderBy(id_col).limit(ksub)
-            .select(F.transform(vec_col, lambda x: x.cast("double"))
-                    .alias("cv")).toPandas())
-    S = _l2_normalize(np.asarray([np.asarray(v, dtype=np.float64)
-                                  for v in samp["cv"]]))
+    S = _l2_normalize(_lowest_ids(vectors, ksub, id_col, vec_col))
     if len(S) < ksub:
         raise ValueError(f"need >= {ksub} vectors to sample codebooks, "
                          f"got {len(S)}")
     return np.stack([S[:, j * dsub:(j + 1) * dsub] for j in range(m)])
-
-
-def _pq_subspace_d6(sub: np.ndarray, Cj: np.ndarray) -> np.ndarray:
-    """Round-6 squared L2 distances of ``sub`` (n x dsub) to every
-    centroid of one codebook ``Cj`` (ksub x dsub), via the
-    |x|^2 + |c|^2 - 2 x.c decomposition — the identical formula the SQL
-    twin computes with list_inner_product, so engines agree to float
-    noise and the round-6 grid absorbs it (same quantization contract as
-    :func:`lsh_topk_rademacher`, incl. the measure-zero banker's-rounding
-    caveat documented there)."""
-    xn = (sub * sub).sum(axis=1)
-    cn = (Cj * Cj).sum(axis=1)
-    return np.round(xn[:, None] + cn[None, :] - 2.0 * (sub @ Cj.T), 6)
 
 
 def pq_encode(vectors: DataFrame, codebooks: np.ndarray,
@@ -478,47 +437,35 @@ def pq_encode(vectors: DataFrame, codebooks: np.ndarray,
     so the search structure fits in RAM at corpus sizes where raw
     embeddings cannot."""
     return vectors.select(F.col(id_col),
-                          _pq_codes_udf(codebooks)(F.col(vec_col))
+                          _pq_udf(codebooks, vec_col, True)(F.col(vec_col))
                           .alias("codes"))
 
 
-def _pq_codes_udf(codebooks: np.ndarray):
-    """array<int> UDF assigning each L2-normalized subspace chunk to its
-    nearest codebook centroid (round-6 squared-L2 argmin, ties to the
-    lowest code — np.argmin first-min == ORDER BY d6 ASC, code ASC)."""
-    mm, _ksub, dsub = codebooks.shape
-    C = codebooks
+def _pq_udf(C: np.ndarray, vec_col: str, codes: bool):
+    """PQ UDF over a vector's L2-normalized subspace chunks: per chunk j,
+    the round-6 squared L2 distances to every centroid of codebook
+    ``C[j]`` via the |x|^2 + |c|^2 - 2 x.c decomposition — the identical
+    formula the SQL twin computes with list_inner_product, so engines
+    agree to float noise and the round-6 grid absorbs it (the
+    quantization contract of :func:`lsh_topk_rademacher`). The result is
+    the m x ksub ADC lookup table (array<array<double>>) or, with
+    ``codes``, each chunk's nearest code (array<int>; np.argmin first-min
+    == the oracle's ORDER BY d6 ASC, code ASC)."""
+    mm, _ksub, dsub = C.shape
 
-    @pandas_udf("array<int>")
-    def _codes(vs: pd.Series) -> pd.Series:
-        mat = _l2_normalize(np.asarray([np.asarray(v, dtype=np.float64)
-                                        for v in vs]))
-        out = np.zeros((len(vs), mm), dtype=np.int32)
+    def d6(X):
+        Xn = _l2_normalize(X)
+        tabs = []
         for j in range(mm):
-            d6 = _pq_subspace_d6(mat[:, j * dsub:(j + 1) * dsub], C[j])
-            out[:, j] = np.argmin(d6, axis=1).astype(np.int32)
-        return pd.Series(list(out))
+            sub = Xn[:, j * dsub:(j + 1) * dsub]
+            xn, cn = (sub * sub).sum(axis=1), (C[j] * C[j]).sum(axis=1)
+            tabs.append(np.round(
+                xn[:, None] + cn[None, :] - 2.0 * (sub @ C[j].T), 6))
+        tabs = np.stack(tabs, axis=1)   # (n, m, ksub)
+        return np.argmin(tabs, axis=2) if codes else tabs
 
-    return _codes
-
-
-def _pq_dist_tables_udf(codebooks: np.ndarray):
-    """array<array<double>> UDF: per query, the m x ksub table of round-6
-    subspace distances to every codebook centroid (the ADC lookup
-    tables)."""
-    mm, _ksub, dsub = codebooks.shape
-    C = codebooks
-
-    @pandas_udf("array<array<double>>")
-    def _dist_tables(vs: pd.Series) -> pd.Series:
-        mat = _l2_normalize(np.asarray([np.asarray(v, dtype=np.float64)
-                                        for v in vs]))
-        tabs = np.stack([
-            _pq_subspace_d6(mat[:, j * dsub:(j + 1) * dsub], C[j])
-            for j in range(mm)], axis=1)  # (n, m, ksub)
-        return pd.Series([t.tolist() for t in tabs])
-
-    return _dist_tables
+    return vector_udf("array<int>" if codes else "array<array<double>>",
+                      d6, vec_col, mm * dsub)
 
 
 def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
@@ -560,19 +507,27 @@ def pq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     C = (pq_codebooks(vectors, m, ksub, id_col, vec_col, dim)
          if codebooks is None else np.asarray(codebooks, dtype=np.float64))
     enc = pq_encode(vectors, C, id_col, vec_col)
-    q = queries.select(F.col(qid_col),
-                       _pq_dist_tables_udf(C)(F.col(vec_col)).alias("_qtab"))
-    scores = (enc.crossJoin(F.broadcast(q))
-              .select(qid_col, id_col, _adc_col().alias("adc_dist")))
+    q = queries.select(
+        F.col(qid_col),
+        _pq_udf(C, vec_col, False)(F.col(vec_col)).alias("_qtab"))
+    return _adc_topk(enc.crossJoin(F.broadcast(q)), vectors, queries, k,
+                     shortlist, id_col, vec_col, qid_col)
+
+
+def _adc_topk(joined: DataFrame, vectors: DataFrame, queries: DataFrame,
+              k: int, shortlist: int, id_col: str, vec_col: str,
+              qid_col: str) -> DataFrame:
+    """The ADC tail of :func:`pq_topk` and :func:`ivfpq_topk` over rows
+    carrying ``codes`` and ``_qtab``: the ADC top-``k``, or the exact
+    re-rank of the ADC top-``shortlist`` when ``shortlist > 0``. A NULL
+    embedding's distance is NULL, which would sort first: it drops."""
+    scores = (joined.select(qid_col, id_col, _adc_col().alias("adc_dist"))
+              .where(F.col("adc_dist").isNotNull()))
     if shortlist <= 0:
         return _bounded_topk(scores, qid_col, id_col, "adc_dist", k)
-    cands = (_bounded_topk(scores, qid_col, id_col, "adc_dist", shortlist)
-             .select(qid_col, id_col)
-             .join(vectors.select(F.col(id_col),
-                                  F.col(vec_col).alias("_v")), id_col)
-             .join(F.broadcast(queries.select(
-                 F.col(qid_col), F.col(vec_col).alias("_qv"))), qid_col))
-    return _rerank_topk(cands, k, qid_col, id_col, round6=True)
+    top = _bounded_topk(scores, qid_col, id_col, "adc_dist", shortlist)
+    return _rerank_pairs(top.select(qid_col, id_col), vectors, queries, k,
+                         id_col, vec_col, qid_col, True)
 
 
 def _bounded_topk(rows: DataFrame, qid_col: str, id_col: str,
@@ -650,27 +605,18 @@ def ivfpq_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     — the standard IVFADC trade (gate query ann_ivfpq_topk asserts
     recall@10 against exact brute force)."""
     Cc = _coarse_C(vectors, n_centroids, centroids, id_col, vec_col)
-    cell_of, probe_cells = _cell_udfs(Cc, n_probe)
+    cell_of, probe_cells = _cell_udfs(Cc, n_probe, vec_col)
     CB = (pq_codebooks(vectors, m, ksub, id_col, vec_col, dim)
           if codebooks is None else np.asarray(codebooks, dtype=np.float64))
-    v = vectors.select(F.col(id_col),
-                       cell_of(F.col(vec_col)).alias("cell"),
-                       _pq_codes_udf(CB)(F.col(vec_col)).alias("codes"))
+    v = vectors.select(
+        F.col(id_col), cell_of(F.col(vec_col)).alias("cell"),
+        _pq_udf(CB, vec_col, True)(F.col(vec_col)).alias("codes"))
     q = queries.select(
         F.col(qid_col),
-        _pq_dist_tables_udf(CB)(F.col(vec_col)).alias("_qtab"),
+        _pq_udf(CB, vec_col, False)(F.col(vec_col)).alias("_qtab"),
         F.explode(probe_cells(F.col(vec_col))).alias("cell"))
-    scores = (v.join(F.broadcast(q), "cell")
-              .select(qid_col, id_col, _adc_col().alias("adc_dist")))
-    if shortlist <= 0:
-        return _bounded_topk(scores, qid_col, id_col, "adc_dist", k)
-    cands = (_bounded_topk(scores, qid_col, id_col, "adc_dist", shortlist)
-             .select(qid_col, id_col)
-             .join(vectors.select(F.col(id_col),
-                                  F.col(vec_col).alias("_v")), id_col)
-             .join(F.broadcast(queries.select(
-                 F.col(qid_col), F.col(vec_col).alias("_qv"))), qid_col))
-    return _rerank_topk(cands, k, qid_col, id_col, round6=True)
+    return _adc_topk(v.join(F.broadcast(q), "cell"), vectors, queries, k,
+                     shortlist, id_col, vec_col, qid_col)
 
 
 def label_centroid_confusion(vectors: DataFrame, id_col: str = "vec_id",
@@ -770,7 +716,7 @@ def semdedup(vectors: DataFrame, tau: float = 0.9, n_centroids: int = 16,
     from .dedup import connected_components
 
     C = _coarse_C(vectors, n_centroids, centroids, id_col, vec_col)
-    _cell_of, _ = _cell_udfs(C, n_probe=1)
+    _cell_of, _ = _cell_udfs(C, 1, vec_col)
 
     # persisted: feeds both sides of the self-join, the node list and the
     # final output join — without the cache the assignment UDF re-runs 4x
